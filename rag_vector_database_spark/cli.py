@@ -36,7 +36,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .embedding import HashingEmbedder
+from .embedding import HashingEmbedder, hash_embed
 from .functions import text as text_fns
 from .operators import retrieval
 from .operators.conversation import RagConversation, history_fold
@@ -52,12 +52,10 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def embed_query(spark: SparkSession, text: str, dim: int) -> list[float]:
-    """Embed one query string with the engine's deterministic embedder
-    (the expr path — byte-identical to the ingest-side embedding)."""
-    row = (spark.range(1)
-           .select(HashingEmbedder(dim).embed_expr(F.lit(text))
-                   .alias("v")).first())
-    return list(row["v"])
+    """Embed one query string on the driver, with no Spark job: the same
+    ``hash_embed`` the ingest UDF runs on executors. ``spark`` is unused
+    and kept for the call signature."""
+    return hash_embed(text, dim)
 
 
 def _embedding_dim(embeddings: DataFrame) -> int:
@@ -254,8 +252,7 @@ def run_ingest(spark: SparkSession, sf_dir: str, store_path: str,
     docs = _load(spark, sf_dir, "documents")
     chunks = chunk_documents(docs, size=chunk_size, overlap=chunk_overlap,
                              keep_cols=("lang", "source"))
-    emb = HashingEmbedder(dim)
-    batch = chunks.withColumn("embedding", emb.embed_expr(F.col("chunk_text")))
+    batch = HashingEmbedder(dim).embed(chunks, "chunk_text")
     from .operators.ingest import idempotent_append
     added = idempotent_append(batch, store_path, "chunk_id", spark=spark)
     total = spark.read.parquet(store_path).count()

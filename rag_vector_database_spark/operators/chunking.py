@@ -93,7 +93,8 @@ def chunk_documents(docs: DataFrame,
     numbered = (docs
                 .where(F.expr(f"length(trim({t})) > 0"))
                 .selectExpr(
-                    "*", f"{_n_chunks_sql(f'length({t})', size, stride)}"
+                    k, t, *kc,
+                    f"{_n_chunks_sql(f'length({t})', size, stride)}"
                     " AS total_chunks")
                 .selectExpr(
                     k, "total_chunks", t, *kc,

@@ -1682,23 +1682,13 @@ SELECT doc_id, dim_idx,
 FROM normed
 """.format(tok=DD_TOKENS.format(c="text")))
 def q_embed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """#46: deterministic feature-hashing embedder (sparse form) — the
-    oracle-checkable twin of the pandas-UDF backend (embedding.py; unit
-    tests assert expr == UDF)."""
-    d = _t(spark, sf_dir, "documents")
-    dim = 16
-    tok = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("t"))
-    from ..functions.hashing import md5_long
-    h = tok.select("doc_id", md5_long(F.col("t"), 8).alias("hv"))
-    sign = (F.shiftright("hv", 16).bitwiseAND(F.lit(1)) * 2 - 1).cast("double")
-    buckets = (h.groupBy("doc_id", (F.col("hv") % dim).cast("int").alias("dim_idx"))
-               .agg(F.sum(sign).alias("v")))
-    nrm = F.sqrt(F.sum(F.col("v") * F.col("v")).over(
-        Window.partitionBy("doc_id")))
-    return (buckets.withColumn("nrm", nrm)
-            .select("doc_id", "dim_idx",
-                    F.round(F.when(F.col("nrm") > 0, F.col("v") / F.col("nrm"))
-                            .otherwise(F.col("v")), 6).alias("val")))
+    """#46: deterministic feature-hashing embedder in sparse form,
+    rounded to 6 places. ``_sparse_hash_embed`` is the Spark-side twin
+    of embedding.hash_embed (tests/test_embedding pins the two exactly
+    equal)."""
+    return (_sparse_hash_embed(_t(spark, sf_dir, "documents"),
+                               "doc_id", "text")
+            .withColumn("val", F.round("val", 6)))
 
 
 @register(
@@ -3318,7 +3308,8 @@ def _sparse_hash_embed(df: DataFrame, key: str, text_col: str,
                        dim: int = 16) -> DataFrame:
     """Sparse hashing embedding (key, dim_idx, val): tokens -> 32-bit
     md5 -> signed bucket sums -> L2 normalize. The unrounded sparse twin
-    of embedding.HashingEmbedder, reused by the end-to-end pipeline."""
+    of embedding.hash_embed, reused by embed_documents and the
+    end-to-end pipeline."""
     from ..functions.hashing import md5_long
     tok = df.select(key, F.explode(T.tokens(F.col(text_col))).alias("t"))
     h = tok.select(key, md5_long(F.col("t"), 8).alias("hv"))
@@ -9660,10 +9651,12 @@ def q_trajectory_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"))
     # ONE scalar action instead of two (r15): the query user is the
     # MIN user_id in tri, and sizes carries every user_id in tri, so
-    # the first row of sizes ordered by user_id is exactly
-    # (qid, qn) — same values the separate min() + where(qid) probes
-    # returned, one pass over the persisted table instead of two.
-    row0 = sizes.orderBy("user_id").limit(1).first()
+    # the first row of sizes ordered by user_id, NULLs last (min()
+    # ignores a NULL user), is exactly (qid, qn) — same values the
+    # separate min() + where(qid) probes returned, one pass over the
+    # persisted table instead of two.
+    row0 = (sizes.orderBy(F.col("user_id").asc_nulls_last())
+            .limit(1).first())
     qid, qn = row0["user_id"], row0["n"]
     qtri = tri.where(F.col("user_id") == qid).select("tg")
     inter = (tri.join(F.broadcast(qtri), "tg")

@@ -141,3 +141,19 @@ def test_soft_single_token_keeps_hard_cut(worded_docs):
     for r in soft:
         if r["chunk_number"] < r["total_chunks"]:
             assert r["chunk_len"] == SIZE  # no whitespace to break at
+
+
+def test_input_with_output_column_names(spark):
+    """An input that already carries total_chunks / chunk_number columns
+    chunks like any other: only the key, text and keep_cols are read."""
+    docs = spark.createDataFrame(
+        [(1, "a" * 150, 99, 7, "en")],
+        "doc_id long, text string, total_chunks int, chunk_number int, "
+        "lang string")
+    out = chunk_documents(docs, size=SIZE, overlap=OVERLAP,
+                          keep_cols=("lang",))
+    assert out.columns == ["chunk_id", "doc_id", "chunk_number",
+                           "total_chunks", "chunk_text", "chunk_len", "lang"]
+    assert [tuple(r) for r in out.select(
+        "chunk_id", "chunk_number", "total_chunks", "lang").collect()] == \
+        [("1_chunk_1", 1, 2, "en"), ("1_chunk_2", 2, 2, "en")]

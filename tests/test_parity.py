@@ -51,3 +51,29 @@ def test_registry_names_unique_and_wired():
     from rag_vector_database_spark.plans.registry import queries
     no_oracle = {q.name for q in REGISTRY if q.oracle is None}
     assert [n for n in list(queries())[:50] if n in no_oracle] == []
+
+
+def test_trajectory_knn_null_user_id(spark, sf_dir, tmp_path):
+    """A user_id-NULL trajectory is never the query user: the oracle's
+    min(user_id) ignores NULL, so the Spark probe sorts NULLs last."""
+    import os
+
+    import duckdb
+
+    from rag_vector_database_spark.plans.registry import (REGISTRY,
+                                                          q_trajectory_knn)
+
+    src = f"{sf_dir}/events.parquet"
+    for name in os.listdir(sf_dir):
+        if name != "events.parquet":
+            os.symlink(f"{sf_dir}/{name}", tmp_path / name)
+    duckdb.sql(f"""
+        COPY (SELECT * FROM '{src}' UNION ALL
+              SELECT 1000000 + i, TIMESTAMP '2024-01-01' + i * INTERVAL 1 MINUTE,
+                     NULL, ['view', 'click', 'purchase'][i + 1], 1.0, NULL
+              FROM range(3) t(i))
+        TO '{tmp_path}/events.parquet' (FORMAT parquet)""")
+    oracle = next(q.oracle for q in REGISTRY if q.name == "trajectory_knn")
+    ok, msg = compare(q_trajectory_knn(spark, str(tmp_path)), oracle,
+                      str(tmp_path))
+    assert ok, msg
