@@ -39,7 +39,8 @@ from pyspark.sql import functions as F
 from .embedding import HashingEmbedder, hash_embed
 from .functions import text as text_fns
 from .operators import retrieval
-from .operators.conversation import RagConversation, history_fold
+from .operators.conversation import (RagConversation, context_text,
+                                     history_fold)
 from .operators.session_log import SessionLog
 from .operators import generation
 
@@ -98,15 +99,10 @@ def run_query_loop(spark: SparkSession, sf_dir: str,
             if q.lower() in EXIT_KEYWORDS:
                 break
             if mode == "chat":
-                prompt = generation.assemble_prompt(
-                    F.lit(""), F.lit(history_fold(chat_log.history())),
-                    F.lit(q))
-                row = (spark.range(1).select(prompt.alias("prompt"))
-                       .withColumn("ai_response",
-                                   generation.answer_stub(F.col("prompt")))
-                       .first())
-                chat_log.append("chat", q, "N/A", 0, row["ai_response"])
-                print_fn(f"AI: {row['ai_response']}")
+                answer = generation.answer_text(generation.prompt_text(
+                    "", history_fold(chat_log.history()), q))
+                chat_log.append("chat", q, "N/A", 0, answer)
+                print_fn(f"AI: {answer}")
                 turns += 1
                 continue
             follow_up = False
@@ -118,11 +114,11 @@ def run_query_loop(spark: SparkSession, sf_dir: str,
                     print_fn("[Using previous context for this "
                              "follow-up question]")
             vec = None if follow_up else embed_query(spark, q, dim)
-            row = convo.ask(q, query_vec=vec, follow_up=follow_up).first()
-            if show_chunks and convo.last_retrieval is not None:
-                for r in convo.last_retrieval.collect():
+            convo.ask(q, query_vec=vec, follow_up=follow_up)
+            if show_chunks:
+                for r in convo.last_retrieval:
                     print_fn(f"  [doc {r['doc_id']}] {r['snip']}")
-            print_fn(f"AI: {row['ai_response']}")
+            print_fn(f"AI: {convo.memory[-1][1]}")
             turns += 1
     finally:
         convo.close()
@@ -215,23 +211,18 @@ def run_auto_loop(spark: SparkSession, sf_dir: str,
                    .select("doc_id", "score",
                            F.lit(0.0).alias("relevance_score"),
                            text_fns.snippet("text", 80).alias("snippet"))
-                   .orderBy(F.desc("score"), "doc_id"))
+                   .orderBy(F.desc("score"), "doc_id")
+                   .limit(k_direct))
         rows = top.collect()
         status = "Success" if rows else "No documents above threshold"
         if show_chunks:
             _print_chunks(rows, print_fn)
-        context = "\n\n".join(
-            f"Source {i+1} [doc {r['doc_id']}]: {r['snippet']}"
-            for i, r in enumerate(rows))
-        prompt = generation.assemble_prompt(
-            F.lit(context), F.lit(history_fold(log.history())), F.lit(q))
-        row = (spark.range(1).select(prompt.alias("prompt"))
-               .withColumn("ai_response",
-                           generation.answer_stub(F.col("prompt")))
-               .first())
+        context = context_text([(r["doc_id"], r["snippet"]) for r in rows])
+        answer = generation.answer_text(generation.prompt_text(
+            context, history_fold(log.history()), q))
         log.append("rerank" if rerank else "direct", q, status,
-                   len(rows), row["ai_response"])
-        print_fn(f"AI: {row['ai_response']}")
+                   len(rows), answer)
+        print_fn(f"AI: {answer}")
         turns += 1
     return turns
 

@@ -11,25 +11,35 @@ Reference semantics:
   string form is ``Human: {q}\\nAI: {a}`` lines
   (Auto_query_rag_database.py:118, fold query_rag_database.py:399).
 
-Spark shape: a turn's retrieval is a tiny top-n DataFrame. A new-query
-turn computes it through the funnel and ``.cache()``s it; a follow-up
-turn rebuilds context FROM THE CACHED PLAN — physically an
-InMemoryTableScan, no second scan of the embeddings table (the test
-asserts this). Memory stays driver-side like the reference's in-process
-buffer (SURVEY.md section 7 "conversation state"): it is ordered, tiny,
-and feeds prompts as a plan literal.
+Spark shape: a new-query turn runs the funnel as ONE collect of its
+top-n (doc_id, snip) rows and keeps those rows on the driver as
+``last_retrieval``; a follow-up turn reuses them, so it runs no Spark job
+and never rescans the embeddings table. Context, prompt and the answer
+stub are built in Python (``generation.prompt_text``/``answer_text``,
+the same template the Column forms fill). Memory stays driver-side like
+the reference's in-process buffer (SURVEY.md section 7 "conversation
+state"): it is ordered and tiny.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import (IntegerType, StringType, StructField,
+                               StructType)
 
 from . import generation, retrieval
 
 DEFAULT_SNIPPET_LEN = 60
+
+ASK_SCHEMA = StructType([
+    StructField("turn", IntegerType()),
+    StructField("mode", StringType()),
+    StructField("prompt", StringType()),
+    StructField("ai_response", StringType()),
+])
 
 
 def history_fold(memory: Sequence[tuple[str, str]]) -> str:
@@ -38,24 +48,19 @@ def history_fold(memory: Sequence[tuple[str, str]]) -> str:
     return "\n".join(f"Human: {q}\nAI: {a}" for q, a in memory)
 
 
-def context_block(top: DataFrame) -> DataFrame:
-    """#55: fold the ordered top-n retrieval rows into the one context
-    string the prompt template consumes (1-row DataFrame)."""
-    return top.agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(
-                    F.col("rn"),
-                    F.concat(F.lit("Source "), F.col("rn").cast("string"),
-                             F.lit(" [doc "), F.col("doc_id").cast("string"),
-                             F.lit("]: "), F.col("snip")).alias("s")))),
-                lambda x: x["s"]), "\n\n").alias("context"))
+def context_text(rows: Sequence[tuple[int, str | None]]) -> str:
+    """#55: ranked (doc_id, snippet) rows as ``Source <rank> [doc <id>]:
+    <snippet>`` blocks. A NULL snippet drops its block but keeps the
+    ranks, as SQL ``string_agg`` skips a NULL."""
+    return "\n\n".join(f"Source {rank} [doc {doc_id}]: {snip}"
+                        for rank, (doc_id, snip) in enumerate(rows, 1)
+                        if snip is not None)
 
 
 class RagConversation:
-    """Driver-side session: funnel retrieval with caching, memory fold,
-    prompt assembly, deterministic answer stub. One instance == one chat
-    session (the reference's RAGManager + session state)."""
+    """Driver-side session: funnel retrieval, follow-up reuse, memory
+    fold, prompt assembly, deterministic answer stub. One instance ==
+    one chat session (the reference's RAGManager + session state)."""
 
     def __init__(self, documents: DataFrame, embeddings: DataFrame,
                  k_candidates: int = retrieval.DEFAULT_K_CANDIDATES,
@@ -69,7 +74,7 @@ class RagConversation:
         self.top_n = top_n
         self.snippet_len = snippet_len
         self.memory: list[tuple[str, str]] = []
-        self.last_retrieval: DataFrame | None = None
+        self.last_retrieval: list[Row] | None = None
         self.turn = 0
         # #13/#60: every turn also lands in the engine-shaped session
         # log (nested_log()/write() give the reference's teardown JSON,
@@ -77,58 +82,45 @@ class RagConversation:
         self.log = SessionLog(documents.sparkSession,
                               session_id or "session-1")
 
-    def _retrieve(self, query_vec: Sequence[float], query_text: str) -> DataFrame:
-        """The funnel (#51) ending in ordered (rn, doc_id, snip) rows."""
+    def _retrieve(self, query_vec: Sequence[float],
+                  query_text: str) -> list[Row]:
+        """The funnel (#51): the top-n (doc_id, snip) rows in rank order,
+        collected in one action."""
         cand = retrieval.knn(self.embeddings, query_vec, self.k_candidates)
         joined = self.documents.join(
             F.broadcast(cand), self.documents.doc_id == cand.vec_id)
-        reranked = (retrieval.rerank(joined, query_text)
-                    .select("doc_id", "score", "relevance_score",
-                            F.substring("text", 1, self.snippet_len)
-                             .alias("snip")))
-        w = Window.orderBy(F.desc("relevance_score"), F.desc("score"),
-                           F.col("doc_id"))
-        return (reranked.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") <= self.top_n)
-                .select("rn", "doc_id", "snip"))
+        return (retrieval.rerank(joined, query_text)
+                .orderBy(F.desc("relevance_score"), F.desc("score"),
+                         F.col("doc_id"))
+                .limit(self.top_n)
+                .select("doc_id", F.substring("text", 1, self.snippet_len)
+                        .alias("snip"))
+                .collect())
 
     def ask(self, query_text: str,
             query_vec: Sequence[float] | None = None,
             follow_up: bool = False) -> DataFrame:
-        """One turn. ``follow_up=True`` reuses the cached previous
-        retrieval (#61) — no new embedding scan; otherwise retrieves
-        fresh and caches for the next follow-up. Returns a 1-row
-        DataFrame (turn, mode, prompt, ai_response) and appends the turn
-        to driver-side memory (#60)."""
+        """One turn. ``follow_up=True`` reuses the previous turn's rows
+        (#61) — no Spark job; otherwise retrieves fresh and keeps the
+        rows for the next follow-up. Returns a 1-row DataFrame (turn,
+        mode, prompt, ai_response) over the local values and appends the
+        turn to driver-side memory (#60)."""
         self.turn += 1
         if follow_up and self.last_retrieval is not None:
-            top = self.last_retrieval  # cached plan: InMemoryTableScan
             mode = "follow_up"
         else:
             if query_vec is None:
                 raise ValueError("query_vec required for a new-query turn")
-            top = self._retrieve(query_vec, query_text).cache()
-            if self.last_retrieval is not None:
-                self.last_retrieval.unpersist()
-            self.last_retrieval = top
+            self.last_retrieval = self._retrieve(query_vec, query_text)
             mode = "new_query"
-        prompt = generation.assemble_prompt(
-            F.col("context"), F.lit(history_fold(self.memory)),
-            F.lit(query_text))
-        out = (context_block(top)
-               .select(F.lit(self.turn).cast("int").alias("turn"),
-                       F.lit(mode).alias("mode"), prompt.alias("prompt"))
-               .withColumn("ai_response",
-                           generation.answer_stub(F.col("prompt"))))
-        # Driver-side memory append (1 deterministic row — the same
-        # locality call as the reference's in-process buffer).
-        row = out.collect()[0]
-        self.memory.append((query_text, row["ai_response"]))
-        self.log.append(mode, query_text, "Success", self.top_n,
-                        row["ai_response"])
-        return out
+        prompt = generation.prompt_text(context_text(self.last_retrieval),
+                                        history_fold(self.memory),
+                                        query_text)
+        answer = generation.answer_text(prompt)
+        self.memory.append((query_text, answer))
+        self.log.append(mode, query_text, "Success", self.top_n, answer)
+        return self.documents.sparkSession.createDataFrame(
+            [(self.turn, mode, prompt, answer)], ASK_SCHEMA)
 
     def close(self) -> None:
-        if self.last_retrieval is not None:
-            self.last_retrieval.unpersist()
-            self.last_retrieval = None
+        self.last_retrieval = None

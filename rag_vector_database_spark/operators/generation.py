@@ -12,6 +12,10 @@ contract ends at the assembled prompt row. What the engine owns:
 - **a deterministic answer stub** — hash-of-prompt, keeping the full
   pipeline testable and oracle-checkable (SURVEY.md section 5.2's
   pluggable-model discipline, same as the hashing embedder);
+- **the same two as plain Python** (``prompt_text``/``answer_text``) for
+  the interactive turn, which holds one prompt on the driver and must
+  not pay a Spark job for it. Both forms fill the one
+  ``PROMPT_TEMPLATE``; a property test pins them equal;
 - **a pluggable real backend** — any ``prompt -> text`` callable can be
   mounted as an Arrow-batched pandas UDF; per-executor batching
   replaces the reference's one-call-per-turn loop.
@@ -25,6 +29,7 @@ rate-limit boundary, mirroring the reference's jittered delays
 
 from __future__ import annotations
 
+import hashlib
 from typing import Callable, Iterator
 
 import pandas as pd
@@ -58,6 +63,20 @@ def answer_stub(prompt: Column) -> Column:
     both engines, so generation stays inside the oracle gate."""
     return F.concat(F.lit("ANSWER["),
                     F.substring(F.md5(prompt), 1, 12), F.lit("]"))
+
+
+def prompt_text(context: str | None, history: str | None,
+                question: str | None) -> str:
+    """``assemble_prompt`` for one prompt on the driver (None -> '')."""
+    return PROMPT_TEMPLATE.format(context=context or "",
+                                  history=history or "",
+                                  question=question or "")
+
+
+def answer_text(prompt: str) -> str:
+    """``answer_stub`` for one prompt on the driver: md5 of the UTF-8
+    bytes, as Spark's ``md5`` hashes them."""
+    return f"ANSWER[{hashlib.md5(prompt.encode('utf-8')).hexdigest()[:12]}]"
 
 
 def generate_with(df: DataFrame, backend: Callable[[list[str]], list[str]],

@@ -173,23 +173,33 @@ def retrieval_funnel(embeddings: DataFrame, documents: DataFrame,
                      doc_id: str = "doc_id") -> DataFrame:
     """The reference's full two-stage funnel (#51):
 
-    knn(k) |> join docs |> rerank |> filter(score >= theta)
-           |> orderBy desc |> limit n
+    knn(k) |> join docs |> rerank |> orderBy desc |> limit n
+           |> filter(score >= theta)
 
     The candidate set is tiny (k rows) after stage 1, so the doc join is
-    a broadcast of the candidates into the documents scan."""
+    a broadcast of the candidates into the documents scan.
+
+    The threshold sits AFTER the limit, and that is what keeps the
+    reranker on the k joined rows: a filter below the limit only reads
+    documents columns, so Catalyst pushes it (the whole rerank
+    expression) into the documents scan and scores every document.
+    A filter cannot move below a limit. The result is the same as
+    filter-then-limit: the threshold is on the leading sort key, and
+    a NULL score sorts last and fails it, so the rows that pass are a
+    prefix of the ordered rows, and the first n of them are the same
+    either way."""
     candidates = knn(embeddings, query_vec, k_candidates, vec_col, vec_id)
     joined = documents.join(F.broadcast(candidates),
                             documents[doc_id] == candidates[vec_id])
     reranked = rerank(joined, query_text)
     return (reranked
-            # #23: rerank-score threshold (interactive override in the
-            # reference = this parameter; Auto_query_rag_database.py:327-341)
-            .where(F.col("relevance_score") >= F.lit(rerank_threshold))
             .select(doc_id, "score", "relevance_score",
                     T.snippet("text", 80).alias("snippet"))
             .orderBy(F.desc("relevance_score"), F.desc("score"), F.col(doc_id))
-            .limit(top_n))
+            .limit(top_n)
+            # #23: rerank-score threshold (interactive override in the
+            # reference = this parameter; Auto_query_rag_database.py:327-341)
+            .where(F.col("relevance_score") >= F.lit(rerank_threshold)))
 
 
 def direct_retrieval(df: DataFrame, query_vec: Sequence[float],

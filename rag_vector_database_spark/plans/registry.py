@@ -2598,11 +2598,11 @@ FROM p2
            qtok=dd_distinct_tokens("text"),
            dtok=dd_distinct_tokens("d.text")))
 def q_rag_followup_turn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """#60-61: a TWO-turn exchange. Turn 1 runs the funnel, caches the
-    retrieval, answers with empty history. Turn 2 is a follow-up: it
-    reuses the CACHED retrieval (no new embeddings scan — the turn-2
-    plan reads InMemoryTableScan; tests/test_conversation.py asserts it)
-    and folds turn 1 into the prompt's history block
+    """#60-61: a TWO-turn exchange. Turn 1 runs the funnel, keeps the
+    retrieved rows on the driver, answers with empty history. Turn 2 is
+    a follow-up: it reuses those rows (no Spark job and no embeddings
+    scan; tests/test_conversation.py asserts both) and folds turn 1
+    into the prompt's history block
     (Auto_query_rag_database.py:542-563, query_rag_database.py:428-439,
     memory fold query_rag_database.py:399)."""
     from ..operators.conversation import RagConversation

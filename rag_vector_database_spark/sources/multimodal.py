@@ -326,6 +326,7 @@ def ahash32(df: DataFrame, id_col: str = "id",
     banded self-join downstream (dedup.blob_ahash_pairs) never touches
     the blobs again."""
     bbs = _batched_block_stats_fn()
+    above = _above_mean_fn()
 
     def kern(batches: Iterator) -> Iterator:
         import numpy as np
@@ -333,14 +334,13 @@ def ahash32(df: DataFrame, id_col: str = "id",
         for pdf in batches:
             # whole-batch vectorization (r15, guide §4.2): one
             # segment-keyed bincount for the block sums, then the
-            # threshold + bit-pack as batch-wide int64 ops — bit i of
+            # threshold + bit-pack as batch-wide ops — bit i of
             # row r is set iff sums[r,i]*L > tot[r]*cnts[r,i], the
             # same integer cross-multiplied compare the per-row loop
-            # made (products < 255*L^2, far inside int64).
+            # made, exact at any blob size (see _above_mean_fn).
             blobs = [bytes(x) for x in pdf[blob_col].values]
             lens, sums, cnts = bbs(np, blobs, n_blocks)
-            tot = sums.sum(axis=1)
-            bits = (sums * lens[:, None]) > (tot[:, None] * cnts)
+            bits = above(np, lens, sums, cnts)
             w = np.int64(1) << np.arange(n_blocks, dtype=np.int64)
             h = (bits * w).sum(axis=1)
             yield pd.DataFrame({"id": pdf[id_col].values, "ahash": h})
@@ -370,6 +370,7 @@ def ahash64(df: DataFrame, id_col: str = "id",
     n_blocks = 64
 
     bbs = _batched_block_stats_fn()
+    above = _above_mean_fn()
 
     def kern(batches: Iterator) -> Iterator:
         import numpy as np
@@ -380,8 +381,7 @@ def ahash64(df: DataFrame, id_col: str = "id",
             # separately, so every weight stays < 2^32 in int64.
             blobs = [bytes(x) for x in pdf[blob_col].values]
             lens, sums, cnts = bbs(np, blobs, n_blocks)
-            tot = sums.sum(axis=1)
-            bits = (sums * lens[:, None]) > (tot[:, None] * cnts)
+            bits = above(np, lens, sums, cnts)
             w = np.int64(1) << np.arange(32, dtype=np.int64)
             lo = (bits[:, :32] * w).sum(axis=1)
             hi = (bits[:, 32:] * w).sum(axis=1)
@@ -390,6 +390,24 @@ def ahash64(df: DataFrame, id_col: str = "id",
 
     return (_widen_narrow_scan(df.select(id_col, blob_col))
             .mapInPandas(kern, AHASH64_SCHEMA))
+
+
+def _above_mean_fn():
+    """The aHash threshold: ``bits[r, i]`` is set iff block ``i`` of
+    blob ``r`` has a mean above the blob's, compared in integer
+    cross-multiplied form ``sums[r,i] * L[r] > tot[r] * cnts[r,i]``.
+    The products grow like 255*L^2/n_blocks and pass 2^63 for blobs of
+    about a gigabyte; a batch whose products could pass it is compared
+    in exact Python ints (object arrays) instead of wrapping int64. A
+    closure for the same pickling reason as ``_batched_block_stats_fn``."""
+    def above_mean(np, lens, sums, cnts):
+        tot = sums.sum(axis=1)
+        if sums.size and max(int(sums.max()) * int(lens.max()),
+                             int(tot.max()) * int(cnts.max())) >= 2 ** 63:
+            lens, sums, tot, cnts = (a.astype(object)
+                                     for a in (lens, sums, tot, cnts))
+        return (sums * lens[:, None]) > (tot[:, None] * cnts)
+    return above_mean
 
 
 def _batched_block_stats_fn():

@@ -19,3 +19,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def job_count(spark):
+    """``job_count(group)``: the number of Spark jobs run under job
+    group ``group``. The listener bus is drained first, so a job that
+    has just finished is counted."""
+    sc = spark.sparkContext
+
+    def count(group: str) -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

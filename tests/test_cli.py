@@ -9,6 +9,8 @@ commands, session-log teardown — without a TTY.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from rag_vector_database_spark import cli
@@ -68,6 +70,84 @@ def test_query_loop_chat_mode_no_retrieval(spark, sf_dir, sink):
         print_fn=print_fn)
     assert turns == 1
     assert any(l.startswith("AI: ANSWER[") for l in out)
+
+
+def grouped(spark, lines, prefix):
+    """``scripted`` that also starts job group ``{prefix}-{i}`` when it
+    returns line ``i``, so each group holds the jobs run between two
+    prompts."""
+    feed = scripted(lines)
+    calls = iter(range(len(lines) + 1))
+
+    def input_fn(prompt: str) -> str:
+        spark.sparkContext.setJobGroup(f"{prefix}-{next(calls)}", prompt)
+        return feed(prompt)
+    return input_fn
+
+
+def test_chat_and_follow_up_turns_run_no_job(spark, sf_dir, job_count):
+    """A chat-mode turn builds prompt and answer on the driver, and a
+    follow-up turn reuses the rows the previous turn collected: neither
+    launches a Spark job."""
+    p = f"chat-{uuid.uuid4()}"
+    try:
+        cli.run_query_loop(spark, sf_dir, mode="chat",
+                           input_fn=grouped(spark, ["hello", "again"], p),
+                           print_fn=lambda s: None)
+        r = f"rag-{uuid.uuid4()}"
+        out: list[str] = []
+        cli.run_query_loop(spark, sf_dir, show_chunks=True,
+                           input_fn=grouped(spark, ["what is in the corpus?",
+                                                    "tell me more", "y"], r),
+                           print_fn=out.append)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert [job_count(f"{p}-{i}") for i in (0, 1)] == [0, 0]
+    assert job_count(f"{r}-0") >= 1   # the new-query turn retrieves
+    assert job_count(f"{r}-2") == 0   # the follow-up turn
+    assert sum(l.startswith("AI: ANSWER[") for l in out) == 2
+    # the follow-up printed the same chunks as turn 1
+    chunks = [l for l in out if l.startswith("  [doc ")]
+    assert chunks and chunks[:len(chunks) // 2] == chunks[len(chunks) // 2:]
+
+
+def test_auto_loop_answer_runs_no_job(spark, sf_dir, job_count,
+                                      monkeypatch):
+    """Every job of a rerank or a direct auto-loop turn runs inside its
+    one retrieval ``collect``: the prompt and answer step add none."""
+    sc = spark.sparkContext
+    frame = type(spark.range(1))
+    plain_collect = frame.collect
+    collect_groups = []
+
+    def collect(self):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        collect_groups.append((outer, f"collect-{uuid.uuid4()}"))
+        sc.setJobGroup(collect_groups[-1][1], "retrieval collect")
+        try:
+            return plain_collect(self)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+
+    monkeypatch.setattr(frame, "collect", collect)
+    p = f"auto-{uuid.uuid4()}"
+    out: list[str] = []
+    try:
+        turns = cli.run_auto_loop(
+            spark, sf_dir, show_stats=False, show_chunks=True,
+            base_threshold=0.0,
+            input_fn=grouped(spark, ["a query about data", "/mode",
+                                     "a direct query"], p),
+            print_fn=out.append)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # one collect per turn (the first is the embedding-dim probe)
+    turn_collects = [g for outer, g in collect_groups
+                     if outer in (f"{p}-0", f"{p}-2")]
+    assert turns == 2 and len(turn_collects) == 2
+    assert [job_count(f"{p}-{i}") for i in (0, 2)] == [0, 0]
+    assert all(job_count(g) >= 1 for g in turn_collects)
+    assert sum(l.startswith("AI: ANSWER[") for l in out) == 2
 
 
 def test_query_loop_exit_keywords_all_work(spark, sf_dir):

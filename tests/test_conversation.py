@@ -1,17 +1,18 @@
 """#60-61: conversation memory + follow-up retrieval reuse.
 
-The key physical assertion: a follow-up turn's plan reads the CACHED
-turn-1 retrieval (InMemoryTableScan) and never rescans the embeddings
-table — the Spark analog of the reference's
-``last_retrieved_docs_for_follow_up`` reuse
+The key assertion: a follow-up turn reuses the rows turn 1 collected,
+runs no Spark job and never rescans the embeddings table — the Spark
+analog of the reference's ``last_retrieved_docs_for_follow_up`` reuse
 (Auto_query_rag_database.py:542-563)."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from rag_vector_database_spark.operators.conversation import (
-    RagConversation, history_fold)
+    RagConversation, context_text, history_fold)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -25,7 +26,7 @@ def convo(spark):
     c.close()
 
 
-def test_two_turn_exchange(spark, convo):
+def test_two_turn_exchange(spark, convo, job_count):
     qv = list(spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
               .where("vec_id = 0").select("embedding").first()[0])
 
@@ -36,32 +37,39 @@ def test_two_turn_exchange(spark, convo):
     assert r1["ai_response"].startswith("ANSWER[")
     assert len(convo.memory) == 1
 
+    rows1 = convo.last_retrieval
+    group = f"followup-{uuid.uuid4()}"
+    spark.sparkContext.setJobGroup(group, "follow-up turn")
     t2 = convo.ask("tell me more", follow_up=True)
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    # #61: the follow-up runs no Spark job and keeps turn 1's rows
+    assert job_count(group) == 0
+    assert convo.last_retrieval is rows1
     r2 = t2.collect()[0]
     assert (r2["turn"], r2["mode"]) == (2, "follow_up")
     # #60: turn 1 folded into the history block, ConversationBufferMemory form
     assert "Human: what is in document zero" in r2["prompt"]
     assert f"AI: {r1['ai_response']}" in r2["prompt"]
-    # same cached context in both prompts
+    # turn 1's context, unchanged, in the follow-up prompt
     ctx1 = r1["prompt"].split("Context:\n")[1].split("\n\nChat history")[0]
     ctx2 = r2["prompt"].split("Context:\n")[1].split("\n\nChat history")[0]
     assert ctx1 == ctx2
+    assert ctx1.startswith(f"Source 1 [doc {rows1[0]['doc_id']}]: ")
+    assert ctx1.count("Source ") == len(rows1) == 3
+    # the returned frame reads neither a table nor a cache of one
+    plan = t2._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    names = {leaves.apply(i).nodeName() for i in range(leaves.length())}
+    assert not names & {"LogicalRelation", "InMemoryRelation"}
+    assert "embedding" not in plan.toString()
 
-    # #61: the follow-up physically reads the cache (InMemoryTableScan)
-    # and its only logical leaf is the SAME InMemoryRelation turn 1
-    # built — i.e. no new retrieval, no new embeddings scan.
-    plan = t2._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
-    l1 = t1._jdf.queryExecution().optimizedPlan().collectLeaves()
-    l2 = t2._jdf.queryExecution().optimizedPlan().collectLeaves()
-    assert l2.length() == 1
-    assert l2.apply(0).nodeName() == "InMemoryRelation"
-    assert l2.apply(0).sameResult(l1.apply(0))
-
-    # a fresh new-query turn builds a NEW retrieval (different cache)
-    t3 = convo.ask("new topic", qv)
-    l3 = t3._jdf.queryExecution().optimizedPlan().collectLeaves()
-    assert not l3.apply(0).sameResult(l1.apply(0))
+    # a fresh new-query turn runs a NEW retrieval
+    group = f"new-{uuid.uuid4()}"
+    spark.sparkContext.setJobGroup(group, "new-query turn")
+    convo.ask("new topic", qv)
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert job_count(group) >= 1
+    assert convo.last_retrieval is not rows1
     assert len(convo.memory) == 3
 
 
@@ -69,6 +77,13 @@ def test_history_fold_format():
     assert history_fold([]) == ""
     assert history_fold([("q1", "a1"), ("q2", "a2")]) == \
         "Human: q1\nAI: a1\nHuman: q2\nAI: a2"
+
+
+def test_context_text_format():
+    assert context_text([]) == ""
+    # a NULL snippet (NULL document text) drops its block, not its rank
+    assert context_text([(7, "a b"), (3, None), (5, "")]) == \
+        "Source 1 [doc 7]: a b\n\nSource 3 [doc 5]: "
 
 
 def test_followup_without_cache_raises(spark):

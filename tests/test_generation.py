@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import tempfile
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from rag_vector_database_spark.operators import generation, ingest
@@ -28,6 +29,33 @@ def test_prompt_assembly_and_stub_determinism(spark):
     a1 = [r["a"] for r in ans.collect()]
     a2 = [r["a"] for r in ans.collect()]
     assert a1 == a2 and all(a.startswith("ANSWER[") for a in a1)
+
+
+# prompt parts: None, '', format directives of both engines, newlines
+# and any encodable character
+_part = st.none() | st.lists(
+    st.sampled_from(["%s", "%", "%%", "%n", "{}", "{context}", "{0}",
+                     "\n", "\r\n", "é", "日本", "\U0001F600", ""])
+    | st.text(st.characters(codec="utf-8", exclude_categories=("Cs",)),
+              max_size=8),
+    max_size=6).map("".join)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.tuples(_part, _part, _part), min_size=1, max_size=20))
+def test_python_prompt_and_stub_equal_spark(spark, parts):
+    """``prompt_text``/``answer_text`` (the interactive turn's driver
+    path) equal ``assemble_prompt``/``answer_stub`` evaluated in Spark."""
+    df = spark.createDataFrame([(k, *p) for k, p in enumerate(parts)],
+                               "k long, c string, h string, q string")
+    prompt = generation.assemble_prompt(F.col("c"), F.col("h"), F.col("q"))
+    got = (df.select("k", prompt.alias("p"))
+           .select("k", "p", generation.answer_stub(F.col("p")).alias("a"))
+           .orderBy("k").collect())
+    want = [generation.prompt_text(*p) for p in parts]
+    assert [r["p"] for r in got] == want
+    assert [r["a"] for r in got] == [generation.answer_text(w)
+                                     for w in want]
 
 
 def test_generate_with_backend(spark):

@@ -171,3 +171,31 @@ def test_window_rms_partial_windows_and_exact_math(spark):
     assert out[(1, 0)] == (2, round(math.sqrt((a * a + b * b) / 2), 6))
     assert out[(1, 1)] == (1, round(math.sqrt(c * c / 1), 6))
     assert out[(2, 0)] == (0, 0.0)
+
+
+def test_ahash_threshold_exact_above_int64_range():
+    """The aHash threshold compares sums*L with tot*cnts, products that
+    pass 2^63 for gigabyte blobs. Synthetic block statistics of 2 GB
+    blobs (no real blob is built) must get the exact-integer answer."""
+    import numpy as np
+
+    n_blocks, size = 32, 2_000_000_000
+    lens = np.array([size, size], dtype=np.int64)
+    cnts = np.full((2, n_blocks), size // n_blocks, dtype=np.int64)
+    means = np.random.default_rng(7).integers(0, 256, size=(2, n_blocks))
+    # row 1: one block a unit above the blob mean, one a unit below
+    means[1] = 128
+    means[1, 3], means[1, 9] = 129, 127
+    sums = cnts * means
+    tot = sums.sum(axis=1)
+    want = [[int(s) * int(n) > int(t) * int(c)
+             for s, c in zip(srow, crow)]
+            for srow, crow, n, t in zip(sums, cnts, lens, tot)]
+    assert want[1] == [i == 3 for i in range(n_blocks)]
+    # the plain int64 compare wraps on these inputs
+    assert ((sums * lens[:, None]) > (tot[:, None] * cnts)).tolist() != want
+    assert mm._above_mean_fn()(np, lens, sums, cnts).tolist() == want
+    # 3.2 kB blobs with the same block means keep the int64 path
+    small = mm._above_mean_fn()(np, lens // 625_000, sums // 625_000,
+                                cnts // 625_000)
+    assert small.dtype == bool and small.tolist() == want

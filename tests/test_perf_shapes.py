@@ -26,6 +26,68 @@ def test_topk_dispatch_uses_estimate(spark):
     assert out.count() == 5  # small table -> exact knn path
 
 
+def _funnel_inputs(spark):
+    """Eight candidates out of ten documents for the query "alpha beta
+    gamma" along [1, 0, 0]: relevance ties (docs 2/3 and 4/5/7), a
+    NULL and a whitespace-only text among the candidates, a score tie
+    (docs 2/3), and a perfect text match (doc 9) outside the k."""
+    texts = {1: "alpha beta gamma", 2: "alpha beta", 3: "beta alpha",
+             4: None, 5: "   \t ", 6: "alpha delta", 7: "zeta",
+             8: "gamma\tbeta x", 9: "alpha beta gamma", 10: "beta"}
+    sims = {1: 0.5, 2: 0.9, 3: 0.9, 4: 0.95, 5: 0.97, 6: 0.8, 7: 0.7,
+            8: 0.6, 9: 0.1, 10: 0.2}
+    docs = spark.createDataFrame(list(texts.items()),
+                                 "doc_id long, text string")
+    emb = spark.createDataFrame(
+        [(i, [s, (1 - s * s) ** 0.5, 0.0]) for i, s in sims.items()],
+        "vec_id long, embedding array<double>")
+    return docs, emb
+
+
+def test_funnel_equals_filter_then_limit(spark):
+    """``retrieval_funnel`` thresholds after the limit; the rows equal
+    the filter-then-limit form it replaced, for thresholds below, at,
+    between and above every score and for top-n both under and over
+    the number of rows that pass."""
+    from rag_vector_database_spark.functions import text as T
+
+    docs, emb = _funnel_inputs(spark)
+    qv, qt = [1.0, 0.0, 0.0], "alpha beta gamma"
+    cand = retrieval.knn(emb, qv, 8)
+    reranked = retrieval.rerank(
+        docs.join(F.broadcast(cand), docs["doc_id"] == cand["vec_id"]), qt)
+    for theta in (-1.0, 0.0, 0.2, 0.5, 1.1):
+        for top_n in (3, 6):
+            old = (reranked
+                   .where(F.col("relevance_score") >= F.lit(theta))
+                   .select("doc_id", "score", "relevance_score",
+                           T.snippet("text", 80).alias("snippet"))
+                   .orderBy(F.desc("relevance_score"), F.desc("score"),
+                            F.col("doc_id"))
+                   .limit(top_n).collect())
+            new = retrieval.retrieval_funnel(
+                emb, docs, qv, qt, k_candidates=8, top_n=top_n,
+                rerank_threshold=theta).collect()
+            assert new == old, (theta, top_n)
+    everything = retrieval.retrieval_funnel(emb, docs, qv, qt, 8, 8, -1.0)
+    assert {r["doc_id"] for r in everything.collect()} >= {4, 5}
+
+
+def test_funnel_reranks_only_the_candidates(spark, sf_dir):
+    """The rerank threshold must not be pushed into the documents scan:
+    no Filter of the funnel's plan holds the rerank expression, so the
+    reranker scores the k joined candidates, not every document."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    qv = list(emb.where("vec_id = 0").select("embedding").first()[0])
+    top = retrieval.retrieval_funnel(emb, docs, qv, "alpha beta", 50, 5, 0.2)
+    plan = top._jdf.queryExecution().optimizedPlan().toString()
+    filters = [line for line in plan.splitlines() if "Filter " in line]
+    assert filters  # the join-key and threshold filters
+    assert not [f for f in filters if "array_union" in f or "split(" in f]
+    assert "array_union" in plan  # the reranker runs, above the join
+
+
 def test_minhash_no_repartition_when_wide(spark):
     """An input whose estimated scan width already covers the cluster
     must NOT be re-exchanged (at 100 TB that exchange would dominate).
