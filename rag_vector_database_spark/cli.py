@@ -237,18 +237,27 @@ def run_ingest(spark: SparkSession, sf_dir: str, store_path: str,
     """Batch pipeline: chunk the documents table, embed every chunk,
     upsert into a parquet vector store keyed by chunk_id. Re-running
     adds zero rows (ingest_chunks_to_chromadb.py's existing-ID check,
-    :95-114 — here an anti-join, never a full-store ID fetch)."""
+    :95-114 — here an anti-join, never a full-store ID fetch).
+
+    One write job per batch, with no count job: the result's
+    ``offered`` (chunks in the batch), ``added``, ``skipped`` (chunks
+    already stored) and ``total`` (store rows after the batch) are the
+    counts ``idempotent_append`` observed in that job."""
+    from .operators import ingest
     from .operators.chunking import chunk_documents
 
     docs = _load(spark, sf_dir, "documents")
     chunks = chunk_documents(docs, size=chunk_size, overlap=chunk_overlap,
                              keep_cols=("lang", "source"))
     batch = HashingEmbedder(dim).embed(chunks, "chunk_text")
-    from .operators.ingest import idempotent_append
-    added = idempotent_append(batch, store_path, "chunk_id", spark=spark)
-    total = spark.read.parquet(store_path).count()
-    print_fn(f"[Ingest] rows added: {added}; store total: {total}")
-    return {"added": added, "total": total}
+    added = ingest.idempotent_append(batch, store_path, "chunk_id",
+                                     spark=spark)
+    res = {"offered": added.offered, "added": int(added),
+           "skipped": added.offered - added, "total": added.total}
+    print_fn(f"[Ingest] rows added: {res['added']}; skipped: "
+             f"{res['skipped']} of {res['offered']} offered; "
+             f"store total: {res['total']}")
+    return res
 
 
 # ---------------------------------------------------------------------------

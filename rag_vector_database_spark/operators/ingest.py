@@ -12,24 +12,36 @@ the scan touches one column); when small it broadcasts, when huge AQE
 picks a shuffled hash join — no driver-side ID fetch, which was the
 reference's documented bottleneck (ingest_chunks_to_chromadb.py:95-96).
 
+``idempotent_append`` is one write job: the rows it offers, the rows
+already stored and the rows it adds are counted by ``observe`` inside
+that job, so neither a count before the write nor a recount of the
+store after it runs. A batch that adds no row leaves the store's files
+as they were.
+
 The metadata coercion matrix (ingest_chunks_to_chromadb.py:133-155):
 list -> ', '-joined string; None/empty -> 'N/A'; scalar -> str().
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
+
+from .observe import observed, with_observation
 
 NA = "N/A"  # the reference's null sentinel (chunk_cisa_kev.py:*'N/A'*)
 
 
 def incremental_filter(incoming: DataFrame, processed: DataFrame,
                        key: str, processed_key: str | None = None) -> DataFrame:
-    """Rows of ``incoming`` whose key is not yet in ``processed`` (#28/#30)."""
+    """Rows of ``incoming`` whose key is not yet in ``processed`` (#28/#30).
+    A NULL key is never in ``processed``. Duplicate keys in ``processed``
+    change nothing, so they are not removed first (a shuffle aggregate)."""
     processed_key = processed_key or key
-    log = processed.select(F.col(processed_key).alias(key)).distinct()
+    log = processed.select(F.col(processed_key).alias(key))
     return incoming.join(log, on=key, how="left_anti")
 
 
@@ -191,10 +203,62 @@ def read_store_or_none(spark, store_path: str):
         raise
 
 
+class Appended(int):
+    """The rows one ``idempotent_append`` added, with the other counts of
+    its write job: ``offered`` (incoming rows) and ``total`` (store rows
+    after the append)."""
+
+    def __new__(cls, added: int, offered: int, total: int):
+        self = super().__new__(cls, added)
+        self.offered, self.total = offered, total
+        return self
+
+
+def _rows(df: DataFrame):
+    """``df`` with an observation of its row count, and the observation."""
+    return with_observation(df, [F.count(F.lit(1)).alias("rows")])
+
+
+def _observed_rows(obs) -> int | None:
+    m = observed(obs)
+    return None if m is None else m["rows"]
+
+
+def _remove_empty_parts(path: str, before: set[str]) -> None:
+    """Delete the row-less part-files (and their checksums) that appeared
+    in ``path`` since ``before`` was listed. Spark's writer always commits
+    task 0's file, even with no rows, so that an empty result keeps its
+    schema; a batch that adds nothing must not grow the store."""
+    import pyarrow.parquet as pq
+
+    for name in set(os.listdir(path)) - before:
+        part = os.path.join(path, name)
+        if name.startswith("part-") and pq.read_metadata(part).num_rows == 0:
+            os.remove(part)
+            crc = os.path.join(path, f".{name}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+
+
 def idempotent_append(incoming: DataFrame, store_path: str, key: str,
-                      spark=None) -> int:
+                      spark=None) -> Appended:
     """Run-twice-adds-zero ingest (#30 + #12): anti-join against the
-    store's existing keys, append only the new rows. Returns rows added.
+    store's existing keys, append only the new rows, in ONE write job.
+    Returns the rows added as an ``Appended`` (an int that also carries
+    ``offered`` and ``total``).
+
+    The counts are observed in the write job itself: incoming rows, the
+    store's key scan that feeds the anti-join, and the written rows, so
+    ``total`` = stored before + added with no count job. Spark drops an
+    observed subtree it proves empty, or a join side opposite an empty
+    side; a missing count is therefore 0, except the store's when the
+    incoming side was empty: only then is the store counted.
+
+    Zero-row rule: a batch that adds nothing leaves no part-file, so a
+    store's file listing stays unchanged (the empty part-file the write
+    commits is removed; see ``_remove_empty_parts``). A first run that
+    adds nothing leaves a directory with no data file, which
+    read_store_or_none still reads as no store.
 
     First-run detection via read_store_or_none: a missing or
     never-committed store starts fresh; a corrupt store or a
@@ -203,10 +267,20 @@ def idempotent_append(incoming: DataFrame, store_path: str, key: str,
     read)."""
     spark = spark or incoming.sparkSession
     store = read_store_or_none(spark, store_path)
-    existing = None if store is None else store.select(key)
-    fresh = incoming if existing is None else incremental_filter(
-        incoming, existing, key)
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(store_path)
-    return n
+    incoming, offered_obs = _rows(incoming)
+    fresh = incoming
+    if store is not None:
+        existing, stored_obs = _rows(store.select(key))
+        fresh = incremental_filter(incoming, existing, key)
+    fresh, added_obs = _rows(fresh)
+    local = store_path.removeprefix("file:")
+    before = set(os.listdir(local)) if os.path.isdir(local) else set()
+    fresh.write.mode("append").parquet(store_path)
+    offered = _observed_rows(offered_obs) or 0
+    added = _observed_rows(added_obs) or 0
+    stored = 0 if store is None else _observed_rows(stored_obs)
+    if stored is None:  # Spark pruned the key scan: store or batch empty
+        stored = store.count() if offered == 0 else 0
+    if added == 0:
+        _remove_empty_parts(local, before)
+    return Appended(added, offered, stored + added)

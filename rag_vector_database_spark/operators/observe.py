@@ -36,9 +36,23 @@ def ingest_metrics(text_col: str = "text") -> list[Column]:
 
 
 def with_observation(df: DataFrame, metrics: list[Column],
-                     name: str = "ingest") -> tuple[DataFrame, Observation]:
+                     name: str | None = None
+                     ) -> tuple[DataFrame, Observation]:
     """Attach an Observation to ``df``: returns (df', obs) where df'
     computes identically and ``obs.get`` (after any action on df')
-    yields the metric dict, collected during df's own execution."""
+    yields the metric dict, collected during df's own execution.
+    ``name`` defaults to a fresh unique one, so several observations
+    can ride one query."""
     obs = Observation(name)
     return df.observe(obs, *metrics), obs
+
+
+def observed(obs: Observation) -> dict | None:
+    """``obs.get`` after the action, or None when the executed plan no
+    longer held the observed subtree. Spark prunes a subtree it proves
+    empty (statically, or adaptively once a stage has run) and a join
+    side that an empty other side makes unneeded, and then reports an
+    empty row, which ``obs.get`` cannot convert."""
+    if obs._jo.getRow().size() == 0:  # blocks until the action reports
+        return None
+    return obs.get

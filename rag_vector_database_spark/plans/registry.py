@@ -35,9 +35,17 @@ from ..operators import retrieval
 # and referencing it per query is the production equivalent; keying
 # on applicationId ties entries to a live context. Source tables
 # under an sf_dir are immutable; scratch/sink paths never go through
-# _t and stay uncached.
+# _t and stay uncached. A tool that rebuilds an sf_dir in place calls
+# clear_table_handles: a cached handle keeps its old file listing.
 _T_HANDLES: dict = {}
 _T_HANDLES_CAP = 64
+
+
+def clear_table_handles(sf_dir: str | None = None) -> None:
+    """Drop the cached handles of ``sf_dir``'s tables (of every sf_dir
+    when None), so the next builder call re-lists the files."""
+    for key in [k for k in _T_HANDLES if sf_dir is None or k[1] == sf_dir]:
+        del _T_HANDLES[key]
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

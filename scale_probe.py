@@ -227,6 +227,8 @@ def build(spark=None) -> str:
             if t not in DIMS else 1
         out.repartition(n_files).write.mode("overwrite") \
             .parquet(f"{DST}/{t}.parquet")
+    from rag_vector_database_spark.plans.registry import clear_table_handles
+    clear_table_handles(DST)  # the tables were rewritten in place
     with open(marker, "w") as f:
         f.write(PROBE_SCHEME)
     if own_session:

@@ -208,6 +208,39 @@ def test_ingest_idempotent(spark, sf_dir, tmp_path, sink):
     assert r2["total"] == r1["total"] == r1["added"]
     stored = spark.read.parquet(store)
     assert {"chunk_id", "chunk_text", "embedding"} <= set(stored.columns)
+    # the second run offered every chunk again and skipped them all
+    n = r1["added"]
+    assert r1["offered"] == r2["offered"] == r2["skipped"] == n
+    assert out[-1] == (f"[Ingest] rows added: 0; skipped: {n} of {n} "
+                       f"offered; store total: {n}")
+
+
+def test_ingest_batch_job_counts(spark, sf_dir, tmp_path, job_count):
+    """One write job per batch and no count job: a first batch runs the
+    documents schema read and the write (2 jobs); a later one adds the
+    store's schema read and its key broadcast (4 jobs), whether it adds
+    rows or none."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    half, full = str(tmp_path / "half"), str(tmp_path / "full")
+    docs.where("doc_id % 2 = 0").write.parquet(f"{half}/documents.parquet")
+    docs.write.parquet(f"{full}/documents.parquet")
+    store = str(tmp_path / "store")
+    sc = spark.sparkContext
+    p = f"ingest-{uuid.uuid4()}"
+    res = []
+    try:
+        for i, d in enumerate((half, full, full)):
+            sc.setJobGroup(f"{p}-{i}", "run_ingest")
+            res.append(cli.run_ingest(spark, d, store,
+                                      print_fn=lambda s: None))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res[1]["added"] > 0 and res[2]["added"] == 0
+    assert res[2]["total"] == res[1]["total"] == res[2]["offered"]
+    assert res[1]["total"] == res[0]["added"] + res[1]["added"]
+    assert job_count(f"{p}-0") <= 2
+    assert job_count(f"{p}-1") <= 4
+    assert job_count(f"{p}-2") <= 4
 
 
 def test_main_argparse_ingest(tmp_path, monkeypatch, capsys):

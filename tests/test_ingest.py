@@ -3,14 +3,17 @@ the metadata coercion matrix (ingest_chunks_to_chromadb.py:133-155)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, IntegerType, StringType,
                                StructField, StructType)
 
 from rag_vector_database_spark.operators.ingest import (
-    coerce_metadata, idempotent_append, incremental_filter)
+    coerce_metadata, idempotent_append, incremental_filter,
+    read_store_or_none)
 
 
 def test_incremental_filter(spark):
@@ -121,3 +124,137 @@ def test_read_store_or_none_corrupt_under_ignore_corrupt_files(
     empty = tmp_path / "empty_store"
     empty.mkdir()
     assert read_store_or_none(spark, str(empty)) is None
+
+
+def _files(path: str) -> dict[str, int]:
+    return {f: os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path)}
+
+
+def test_incremental_filter_duplicate_and_null_keys(spark):
+    """The anti-join needs no distinct on the processed side: a key the
+    log holds twice drops its rows and no others, a NULL log key matches
+    nothing, a NULL incoming key is never processed, and incoming
+    duplicates both stay."""
+    rows = [(i, f"t{i}") for i in range(8)] + [(5, "dup"), (None, "null")]
+    keys = (0, 0, 2, 2, 2, None, None, 4, 9)
+    incoming = spark.createDataFrame(rows, "id long, text string")
+    log = spark.createDataFrame([(k,) for k in keys], "key long")
+    out = incremental_filter(incoming, log, key="id", processed_key="key")
+    want = [r for r in rows if r[0] is None or r[0] not in keys]
+    got = sorted(map(tuple, out.collect()), key=repr)
+    assert got == sorted(want, key=repr)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in plan
+
+
+def test_zero_row_append_leaves_store_files_unchanged(spark, tmp_path):
+    """A batch whose keys are all stored adds no file and changes no
+    byte: Spark's writer would commit an empty part-file for task 0."""
+    store = str(tmp_path / "store")
+    batch = spark.createDataFrame([(i, f"t{i}") for i in range(5)],
+                                  "id long, text string")
+    assert idempotent_append(batch, store, "id") == 5
+    before = _files(store)
+    again = idempotent_append(batch, store, "id")
+    assert (again, again.offered, again.total) == (0, 5, 5)
+    assert _files(store) == before
+    # an empty incoming frame is a zero-row batch too; an empty scan
+    # lets Spark prune the store side, which is then counted apart
+    empty = spark.read.parquet(store).where("id < 0")
+    none = idempotent_append(empty, store, "id")
+    assert (none, none.offered, none.total) == (0, 0, 5)
+    assert _files(store) == before
+    # a first run that adds nothing leaves no store to read
+    other = str(tmp_path / "other")
+    assert idempotent_append(empty, other, "id") == 0
+    assert read_store_or_none(spark, other) is None
+
+
+def test_append_counts_exact_under_shuffled_antijoin(spark, tmp_path):
+    """With both broadcast thresholds off the anti-join shuffles; the
+    observed added/offered/total still equal the Python set sums."""
+    store = str(tmp_path / "store")
+    stored = set(range(0, 50, 10))
+    incoming = set(range(0, 400)) | {1000}
+    spark.createDataFrame([(i, "s") for i in sorted(stored)],
+                          "id long, text string").write.parquet(store)
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        added = idempotent_append(
+            spark.createDataFrame([(i, "t") for i in sorted(incoming)],
+                                  "id long, text string"), store, "id")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert added == len(incoming - stored)
+    assert added.offered == len(incoming)
+    assert added.total == len(incoming | stored)
+    ids = [r[0] for r in spark.read.parquet(store).select("id").collect()]
+    assert sorted(ids) == sorted(incoming | stored)
+
+
+def _n_chunks(length: int, size: int = 1000, overlap: int = 150) -> int:
+    """The chunker's chunk-count law."""
+    if length <= size:
+        return 1
+    return -(-(length - size) // (size - overlap)) + 1
+
+
+@pytest.mark.parametrize("committer", ["1", "2"])
+def test_aborted_append_then_rerun_stores_each_chunk_once(
+        spark, tmp_path, committer):
+    """A write that fails after some tasks committed, then a re-run
+    without the fault: the store holds the chunk-count law's ids exactly
+    once and the re-run's counts are exact. Committer v2 moves each
+    committed task's file into the store at task commit, so the failed
+    job leaves part of its rows behind; v1 leaves none."""
+    from rag_vector_database_spark.operators.chunking import chunk_documents
+
+    lengths = {d: 300 + 700 * (d % 4) for d in range(16)}
+    rows = [(d, "x" * n) for d, n in lengths.items()]
+    docs = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 8), "doc_id long, text string")
+    want = {f"{d}_chunk_{i}" for d, n in lengths.items()
+            for i in range(1, _n_chunks(n) + 1)}
+    store = str(tmp_path / "store")
+    first = chunk_documents(docs.where("doc_id < 4"))
+    assert idempotent_append(first, store, "chunk_id") == sum(
+        _n_chunks(n) for d, n in lengths.items() if d < 4)
+    stored_before = {r[0] for r in spark.read.parquet(store)
+                     .select("chunk_id").collect()}
+
+    marker = 15  # in the last of the 8 input partitions
+
+    @F.udf("string")
+    def fail_on_marker(chunk_id):
+        if chunk_id.startswith(f"{marker}_chunk_"):
+            raise RuntimeError("injected write fault")
+        return chunk_id
+
+    key = "mapreduce.fileoutputcommitter.algorithm.version"
+    spark.conf.set(key, committer)
+    try:
+        chunks = chunk_documents(docs)
+        faulty = chunks.withColumn("chunk_id", fail_on_marker("chunk_id"))
+        with pytest.raises(Exception, match="injected write fault"):
+            idempotent_append(faulty, store, "chunk_id")
+        after_fault = [r[0] for r in spark.read.parquet(store)
+                       .select("chunk_id").collect()]
+        assert len(after_fault) == len(set(after_fault))
+        if committer == "1":
+            assert set(after_fault) == stored_before
+        else:
+            assert set(after_fault) > stored_before
+        again = idempotent_append(chunk_documents(docs), store, "chunk_id")
+    finally:
+        spark.conf.unset(key)
+    assert again == len(want - set(after_fault))
+    assert (again.offered, again.total) == (len(want), len(want))
+    ids = [r[0] for r in spark.read.parquet(store)
+           .select("chunk_id").collect()]
+    assert len(ids) == len(set(ids)) and set(ids) == want
