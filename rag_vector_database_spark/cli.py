@@ -33,7 +33,7 @@ import argparse
 import sys
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .embedding import HashingEmbedder, hash_embed
@@ -41,6 +41,7 @@ from .functions import text as text_fns
 from .operators import retrieval
 from .operators.conversation import (RagConversation, context_text,
                                      history_fold)
+from .operators.observe import observed
 from .operators.session_log import SessionLog
 from .operators import generation
 
@@ -59,8 +60,15 @@ def embed_query(spark: SparkSession, text: str, dim: int) -> list[float]:
     return hash_embed(text, dim)
 
 
-def _embedding_dim(embeddings: DataFrame) -> int:
-    return embeddings.select(F.size("embedding")).first()[0]
+def _embedding_dim(embeddings: DataFrame, sf_dir: str) -> int:
+    """The store's vector width, from its first row; an empty store is
+    a clear error (the same probe decides both, no extra job)."""
+    row = embeddings.select(F.size("embedding")).first()
+    if row is None:
+        raise ValueError(f"{sf_dir}/embeddings.parquet holds no rows: "
+                         "there is nothing to retrieve from; ingest "
+                         "documents first")
+    return row[0]
 
 
 def _print_chunks(top_rows, print_fn: Callable[[str], None]) -> None:
@@ -86,7 +94,7 @@ def run_query_loop(spark: SparkSession, sf_dir: str,
     """
     documents = _load(spark, sf_dir, "documents")
     embeddings = _load(spark, sf_dir, "embeddings")
-    dim = _embedding_dim(embeddings)
+    dim = _embedding_dim(embeddings, sf_dir)
     convo = RagConversation(documents, embeddings,
                             k_candidates=k, top_n=top_n)
     chat_log = SessionLog(spark, "chat-1")  # chat-mode turns
@@ -143,7 +151,7 @@ def run_auto_loop(spark: SparkSession, sf_dir: str,
     """Advanced loop: score stats, threshold overrides, /commands."""
     documents = _load(spark, sf_dir, "documents")
     embeddings = _load(spark, sf_dir, "embeddings")
-    dim = _embedding_dim(embeddings)
+    dim = _embedding_dim(embeddings, sf_dir)
     log = SessionLog(spark, "auto-1")
     turns = 0
 
@@ -192,17 +200,11 @@ def run_auto_loop(spark: SparkSession, sf_dir: str,
                 print_fn(f"[Unknown command {cmd}] " + help_text())
             continue
         vec = embed_query(spark, q, dim)
+        stats = Observation() if rerank and show_stats else None
         if rerank:
-            if show_stats:
-                scored = retrieval.score_against(embeddings, vec)
-                s = retrieval.score_stats(scored).first()
-                print_fn(f"[Scores: min={s['min_score']:.4f} "
-                         f"max={s['max_score']:.4f} "
-                         f"avg={s['avg_score']:.4f} "
-                         f"n={s['n_candidates']}]")
             top = retrieval.retrieval_funnel(
                 embeddings, documents, vec, q, k_candidates=k_rerank,
-                top_n=top_n, rerank_threshold=rerank_threshold)
+                top_n=top_n, rerank_threshold=rerank_threshold, stats=stats)
         else:
             top = retrieval.direct_retrieval(
                 embeddings, vec, k=k_direct, sim_threshold=base_threshold)
@@ -214,6 +216,15 @@ def run_auto_loop(spark: SparkSession, sf_dir: str,
                    .orderBy(F.desc("score"), "doc_id")
                    .limit(k_direct))
         rows = top.collect()
+        if stats is not None:
+            # observed in the funnel's own scan; None only where Spark
+            # pruned that scan (a limit of 0 empties the whole plan)
+            s = observed(stats) or retrieval.score_stats(
+                retrieval.score_against(embeddings, vec)).first()
+            print_fn(f"[Scores: min={s['min_score']:.4f} "
+                     f"max={s['max_score']:.4f} "
+                     f"avg={s['avg_score']:.4f} "
+                     f"n={s['n_candidates']}]")
         status = "Success" if rows else "No documents above threshold"
         if show_chunks:
             _print_chunks(rows, print_fn)

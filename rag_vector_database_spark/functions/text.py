@@ -6,6 +6,8 @@ section 2 #35-45). All are regexp/substring/concat built-ins — no UDFs.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -45,23 +47,28 @@ def sql_str_lit(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
+# Characters whose meaning inside a SQL string literal depends on a
+# setting: the backslash (spark.sql.parser.escapedStringLiterals), the
+# quote (a doubled quote is one quote only when escapes are processed)
+# and the dollar sign (``${name}`` is replaced by a conf value while
+# spark.sql.variable.substitute is on, the default).
+_SETTING_DEPENDENT = re.compile(r"([\\'$])")
+
+
 def sql_regex(pattern: str) -> str:
     """A SQL expression that evaluates to ``pattern`` under EITHER
-    setting of ``spark.sql.parser.escapedStringLiterals``: backslashes
-    are produced by chr(92) and concat (constant-folded to a single
-    literal during optimization, so the split/regexp operators still
-    see a foldable pattern), and the parser never sees an escape
-    sequence whose meaning depends on the legacy conf."""
-    if "\\" not in pattern:
-        return sql_str_lit(pattern)
-    parts: list[str] = []
-    segs = pattern.split("\\")
-    if segs[0]:
-        parts.append(sql_str_lit(segs[0]))
-    for seg in segs[1:]:
-        parts.append("chr(92)")
-        if seg:
-            parts.append(sql_str_lit(seg))
+    setting of ``spark.sql.parser.escapedStringLiterals`` and whatever
+    ``${...}`` references it holds: each backslash, quote and dollar
+    sign is produced by ``chr`` and joined by ``concat`` (constant-folded
+    to a single literal during optimization, so the split/regexp
+    operators still see a foldable pattern), and the parser never sees
+    a character whose meaning depends on a setting. Safe for any string,
+    not only patterns (the reranker passes the user's query through
+    it)."""
+    parts = [f"chr({ord(p)})" if _SETTING_DEPENDENT.fullmatch(p)
+             else f"'{p}'" for p in _SETTING_DEPENDENT.split(pattern) if p]
+    if len(parts) <= 1:
+        return parts[0] if parts else "''"
     return "concat(" + ", ".join(parts) + ")"
 
 
@@ -89,14 +96,14 @@ def chunk_id(doc_key: Column, pos: Column) -> Column:
                     (pos + 1).cast("string"))
 
 
-def snippet(c: Column | str, n: int = 250) -> Column:
-    """Display truncation: newlines -> spaces, first ``n`` chars, ellipsis
-    when truncated (query_rag_database.py:193)."""
-    c = F.col(c) if isinstance(c, str) else c
-    flat = F.regexp_replace(c, r"\n", " ")
-    return F.when(F.length(flat) > n,
-                  F.concat(F.substring(flat, 1, n), F.lit("..."))) \
-            .otherwise(flat)
+def snippet(c: str, n: int = 250) -> Column:
+    """Display truncation of column ``c``: newlines -> spaces, first
+    ``n`` chars, ellipsis when truncated (query_rag_database.py:193).
+    One ``F.expr`` parse."""
+    flat = f"regexp_replace({quote_ident(c)}, {sql_regex(chr(92) + 'n')}, ' ')"
+    return F.expr(f"CASE WHEN length({flat}) > {int(n)} "
+                  f"THEN concat(substring({flat}, 1, {int(n)}), '...') "
+                  f"ELSE {flat} END")
 
 
 def sanitize_filename(c: Column | str, max_len: int = 200) -> Column:

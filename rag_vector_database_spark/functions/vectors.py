@@ -3,14 +3,28 @@
 Reference behavior: embeddings are L2-normalized at write time so cosine
 similarity reduces to a dot product at query time
 (ingest_chunks_to_chromadb.py:66, query_rag_database.py:127). We keep
-that contract: ``dot`` is the scorer and ``l2_normalize`` enforces the
-invariant at ingest.
+that contract: ``dot`` is the scorer, and the hashing embedder
+(``embedding.hash_embed``) normalizes at ingest.
 
 Everything here is built from higher-order functions (``zip_with``,
-``aggregate``, ``transform``), so the scorer runs inside whole-stage
-codegen with no Python boundary — the 100 TB path: a brute-force top-k
-is one columnar scan + TakeOrderedAndProject (no global sort, no
-shuffle of the vectors themselves).
+``aggregate``, ``transform``), so the scorer needs no Python boundary: a
+brute-force top-k is one columnar scan + TakeOrderedAndProject (no
+global sort, no shuffle of the vectors themselves). The HOFs are NOT
+compiled by whole-stage codegen: Spark evaluates ``aggregate`` and
+``zip_with`` row by row through their interpreted lambda functions. On
+a 4-core host (local[4]) a ``knn`` collect over 50 000 dim-16 rows
+took 274 ms of wall time against 119 ms for the same scan and top-k
+without the dot product. A dim-unrolled sum of products over the
+literal query vector does compile, but was rejected: Spark inlines
+double literals into the generated Java, so every new query vector
+compiles a new class, and with a fresh vector per call a ``knn`` cost
+338-688 ms of CPU against 310-345 ms for the HOF; it only wins when the
+same vector repeats.
+
+``dot`` is built as one SQL string parsed by one ``F.expr`` call: the
+Column-API build of the same tree cost dozens of py4j round trips per
+call (Python lambdas for ``zip_with``/``aggregate``, one call per
+``F.*`` node), which dominated an interactive turn's driver time.
 
 Determinism note: products are computed in float64 and summed strictly
 left-to-right (``aggregate`` semantics), matching the DuckDB oracle's
@@ -19,73 +33,72 @@ left-to-right (``aggregate`` semantics), matching the DuckDB oracle's
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Float64 dot product of two array<float> columns (or literals)."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from .text import quote_ident
 
 
-def norm(a: Column | str) -> Column:
+def sql_double(x: float) -> str:
+    """Exact Spark SQL double literal: Python repr is the shortest
+    string that round-trips the IEEE754 value, and Spark's lexer parses
+    <digits>D with the same correctly-rounded semantics, so the JVM sees
+    the double ``F.lit(float(x))`` holds. Non-finite values have no
+    <digits>D form ('infD' is a parse error); they use the
+    CAST('...' AS DOUBLE) spelling, which DuckDB accepts too."""
+    x = float(x)
+    if x != x:
+        return "CAST('NaN' AS DOUBLE)"
+    if x in (float("inf"), float("-inf")):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return repr(x) + "D"
+
+
+def sql_array(vec: Sequence[float]) -> str:
+    """A Python vector as one SQL ``array<double>`` literal (``array()``
+    when empty, the same empty array ``F.array()`` builds)."""
+    return "array(" + ",".join(sql_double(x) for x in vec) + ")"
+
+
+def _operand(v: str | Sequence[float]) -> str:
+    return quote_ident(v) if isinstance(v, str) else sql_array(v)
+
+
+def dot_sql(a: str, b: str) -> str:
+    """THE float64 dot-product fold, as SQL over two array operands
+    given as SQL fragments: products in float64, summed left to right
+    from 0.0."""
+    return (f"aggregate(zip_with({a}, {b}, "
+            f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
+            f"(acc, x) -> acc + x)")
+
+
+def dot(a: str | Sequence[float], b: str | Sequence[float]) -> Column:
+    """Float64 dot product of two array operands, each a column name or
+    a Python vector (a query vector becomes a plan literal). One
+    ``F.expr`` parse; a caller holding a computed Column names it with
+    a ``select`` first."""
+    return F.expr(dot_sql(_operand(a), _operand(b)))
+
+
+def norm(a: str) -> Column:
     """L2 norm of an array<float> column."""
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; use ``dot`` directly when vectors are normalized."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_normalize(a: Column | str) -> Column:
-    """Scale an array<float> to unit L2 norm (null-safe for zero vectors)."""
-    a = F.col(a) if isinstance(a, str) else a
-    n = norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: (x.cast("double") / n).cast("float")))
-
-
-def unit_double(a: Column | str) -> Column:
-    """Scale to unit L2 norm KEEPING float64 components (l2_normalize
-    casts back to float32, which is right for storage but wrong for a
+def unit_double(a: str) -> Column:
+    """Scale to unit L2 norm KEEPING float64 components (stored
+    embeddings are float32, which is right for storage but wrong for a
     hash-oracle-checkable scorer: the oracle would have to replicate
     the float32 rounding). With integer or float64 inputs, each
     component is one IEEE-exact division by a correctly-rounded sqrt
     of the left-fold sum of squares — bit-reproducible by DuckDB's
     list_reduce formulation. Null for zero vectors (callers filter or
     contract them away)."""
-    a = F.col(a) if isinstance(a, str) else a
     n = norm(a)
     return F.when(n > 0, F.transform(a, lambda x: x.cast("double") / n))
-
-
-def query_vec_lit(vec) -> Column:
-    """A literal query vector column (broadcast as part of the plan).
-    Built as one SQL string (one py4j round trip; Python repr
-    round-trips the exact IEEE754 double and Spark's <digits>D lexer
-    parses it correctly-rounded) instead of a per-element F.lit loop —
-    same array<double> literal, ~dim x fewer JVM calls. Non-finite
-    components (no <digits>D spelling) use CAST('...' AS DOUBLE), so a
-    vector containing inf/NaN still parses to the same doubles the old
-    F.lit loop produced (r14 advisor)."""
-    if not len(vec):
-        return F.array(*[])
-
-    def num(x: float) -> str:
-        x = float(x)
-        if x != x:
-            return "CAST('NaN' AS DOUBLE)"
-        if x in (float("inf"), float("-inf")):
-            return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
-        return repr(x) + "D"
-
-    return F.expr("array(" + ",".join(num(x) for x in vec) + ")")
 
 
 def quantize_int8(a: Column | str) -> Column:

@@ -39,24 +39,6 @@ class RawSQL(str):
     literal array for a query vector) rather than a column name."""
 
 
-def _sql_num(x: float) -> str:
-    """Exact Spark SQL double literal: Python repr is the shortest
-    string that round-trips the IEEE754 value, and Spark's lexer
-    parses <digits>D with the same correctly-rounded semantics, so the
-    JVM sees bit-identical doubles to F.lit(float(x)). Non-finite
-    values have no <digits>D form ('infD' is a parse error — r14
-    advisor); emit the CAST('...' AS DOUBLE) spelling both engines
-    accept, matching F.lit(float('inf'))'s value."""
-    x = float(x)
-    if x != x:
-        return "CAST('NaN' AS DOUBLE)"
-    if x == float("inf"):
-        return "CAST('Infinity' AS DOUBLE)"
-    if x == float("-inf"):
-        return "CAST('-Infinity' AS DOUBLE)"
-    return repr(x) + "D"
-
-
 def _vec_sql(vec_col) -> str | None:
     """SQL snippet for a vector operand: quoted identifier for a column
     name, the snippet itself for RawSQL, None for an opaque Column
@@ -75,7 +57,7 @@ def _d2_sql(vec_sql: str, cv: list, ndigits: int) -> str:
     parsed by Catalyst in ONE py4j call instead of ~6 x dim round
     trips (measured 0.644 s -> 0.004 s for k=5, dim=64; the driver-side
     construction cost was the bulk of every ML headline query)."""
-    arr = "array(" + ",".join(_sql_num(x) for x in cv) + ")"
+    arr = V.sql_array(cv)
     return (f"round(aggregate(zip_with({vec_sql}, {arr}, "
             f"(a, b) -> pow(CAST(a AS DOUBLE) - b, 2)), 0.0D, "
             f"(acc, v) -> acc + v), {ndigits})")
@@ -216,7 +198,7 @@ def probe_cells(spark, qv: list, cents: list, n_probe: int,
     expressions, so the argsort is evaluated ONCE as a 1-row job (same
     Spark arithmetic as the oracle) instead of re-sorting nlist
     structs per corpus row."""
-    qlit = RawSQL("array(" + ",".join(_sql_num(x) for x in qv) + ")")
+    qlit = RawSQL(V.sql_array(qv))
     probes_expr = F.transform(
         F.slice(F.array_sort(F.array(
             *_scored_structs(cents, qlit, ndigits))), 1, n_probe),
@@ -248,7 +230,7 @@ def ivf_kmeans_topk(emb: DataFrame, qv: list, k: int = 10,
     return (emb.withColumn("cluster", best.getField("cl"))
             .where(F.col("cluster").isin(probe_ids))
             .select(F.col(id_col),
-                    F.round(V.dot(F.col(vec_col), V.query_vec_lit(qv)),
+                    F.round(V.dot(vec_col, qv),
                             ndigits).alias("score"))
             .orderBy(F.desc("score"), F.col(id_col))
             .limit(k))
@@ -298,7 +280,7 @@ def _semdedup_prune(asn: DataFrame, threshold: float, vec_col: str,
     pairs = (a.join(b, ["cluster"])
              .where(F.col("id_a") < F.col("id_b"))
              .withColumn("cosine",
-                         F.round(V.dot(F.col("va"), F.col("vb")), ndigits))
+                         F.round(V.dot("va", "vb"), ndigits))
              .where(F.col("cosine") >= threshold))
     removed = F.when(
         (F.col("da") > F.col("db"))
@@ -479,7 +461,7 @@ def _delta_prune(resident_asn: DataFrame, delta_asn: DataFrame,
              .where((~F.col("delta_b") & (F.col("id_a") != F.col("id_b")))
                     | (F.col("delta_b") & (F.col("id_a") < F.col("id_b"))))
              .withColumn("cosine",
-                         F.round(V.dot(F.col("va"), F.col("vb")), ndigits))
+                         F.round(V.dot("va", "vb"), ndigits))
              .where(F.col("cosine") >= threshold))
     # loser = farther-from-centroid member, ties to the higher id —
     # symmetric in the pair, so the (delta-left, any-right) ordering
@@ -738,7 +720,7 @@ def semantic_dedup_two_level(emb: DataFrame, threshold: float = 0.6,
     pairs = (a.join(b, ["cl1", "cl2"])
              .where(F.col("id_a") < F.col("id_b"))
              .withColumn("cosine",
-                         F.round(V.dot(F.col("va"), F.col("vb")), ndigits))
+                         F.round(V.dot("va", "vb"), ndigits))
              .where(F.col("cosine") >= threshold))
     removed = F.when(
         (F.col("da") > F.col("db"))
@@ -1012,12 +994,12 @@ def pq_score_adc(df: DataFrame, qv: list, books: dict,
     dtab_exprs = []
     for s in range(m):
         qsub = qv[s * subdim:(s + 1) * subdim]
-        qarr = "array(" + ",".join(_sql_num(x) for x in qsub) + ")"
+        qarr = V.sql_array(qsub)
         for cl, cv in books[s]:
             # same expression the Column API built (both operands are
             # double literals, so no cast inside the lambda), as one
             # SQL string — see _d2_sql for why
-            carr = "array(" + ",".join(_sql_num(x) for x in cv) + ")"
+            carr = V.sql_array(cv)
             d2 = F.expr(
                 f"round(aggregate(zip_with({qarr}, {carr}, "
                 f"(a, b) -> pow(a - b, 2)), 0.0D, "

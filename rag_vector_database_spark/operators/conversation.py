@@ -85,17 +85,23 @@ class RagConversation:
     def _retrieve(self, query_vec: Sequence[float],
                   query_text: str) -> list[Row]:
         """The funnel (#51): the top-n (doc_id, snip) rows in rank order,
-        collected in one action."""
+        collected in one action. Rerank score and snippet come from one
+        ``select``; the sort keys are dropped on the driver rather than
+        by one more DataFrame call."""
         cand = retrieval.knn(self.embeddings, query_vec, self.k_candidates)
         joined = self.documents.join(
             F.broadcast(cand), self.documents.doc_id == cand.vec_id)
-        return (retrieval.rerank(joined, query_text)
+        rows = (joined
+                .select("doc_id",
+                        F.substring("text", 1, self.snippet_len).alias("snip"),
+                        retrieval.lexical_overlap_score(query_text, "text")
+                        .alias("relevance_score"),
+                        "score")
                 .orderBy(F.desc("relevance_score"), F.desc("score"),
                          F.col("doc_id"))
                 .limit(self.top_n)
-                .select("doc_id", F.substring("text", 1, self.snippet_len)
-                        .alias("snip"))
                 .collect())
+        return [Row(doc_id=r["doc_id"], snip=r["snip"]) for r in rows]
 
     def ask(self, query_text: str,
             query_vec: Sequence[float] | None = None,

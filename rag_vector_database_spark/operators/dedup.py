@@ -700,7 +700,7 @@ def cosine_dup_pairs(df: DataFrame, vec_col: str = "embedding",
     b = df.select(F.col(key_col).alias("id_b"), F.col(vec_col).alias("vb"))
     return (a.join(b, F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b",
-                    F.round(V.dot(F.col("va"), F.col("vb")), 6).alias("cosine"))
+                    F.round(V.dot("va", "vb"), 6).alias("cosine"))
             .where(F.col("cosine") >= F.lit(threshold)))
 
 

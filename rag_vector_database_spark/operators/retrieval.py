@@ -12,9 +12,14 @@ Reference semantics (SURVEY.md section 2 #46-55):
 
 Scale notes:
 - ``knn`` is scan + TakeOrderedAndProject: the literal query vector is
-  part of the plan (no join), scores fold into whole-stage codegen, and
-  top-k never materializes a global sort. At 100 TB this is
-  embarrassingly parallel over parquet row groups.
+  part of the plan (no join), and top-k never materializes a global
+  sort. At 100 TB this is embarrassingly parallel over parquet row
+  groups.
+- An interactive turn does little executor work, so its driver-side
+  build cost counts: each per-row expression (score, rerank, snippet)
+  is one SQL string parsed by one ``F.expr`` call, and each turn is
+  composed from the fewest DataFrame calls (each is one more analysis
+  round trip).
 - ``ivf_knn`` is the scale path: a coarse sign-bit quantizer prunes the
   scan to one bucket. With the bucket id as a parquet partition/cluster
   column, partition pruning skips ~(1 - 1/2^bits) of the data before
@@ -31,7 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
@@ -45,25 +50,41 @@ DEFAULT_SIM_THRESHOLD = 0.75    # #22, Auto_query_rag_database.py:67
 DEFAULT_RERANK_THRESHOLD = 0.0  # #23, Auto_query_rag_database.py:66
 
 
+def _score_sql(query_vec: Sequence[float], vec_col: str,
+               ndigits: int) -> str:
+    dot = V.dot_sql(T.quote_ident(vec_col), V.sql_array(query_vec))
+    return f"round({dot}, {int(ndigits)})"
+
+
 def score_against(df: DataFrame, query_vec: Sequence[float],
                   vec_col: str = "embedding",
                   score_col: str = "score",
                   ndigits: int = 6) -> DataFrame:
     """Attach a rounded dot-product similarity column."""
-    q = V.query_vec_lit(query_vec)
-    return df.withColumn(score_col, F.round(V.dot(F.col(vec_col), q), ndigits))
+    return df.withColumn(score_col,
+                         F.expr(_score_sql(query_vec, vec_col, ndigits)))
 
 
 def knn(df: DataFrame, query_vec: Sequence[float], k: int,
         vec_col: str = "embedding", id_col: str = "vec_id",
-        score_col: str = "score") -> DataFrame:
+        score_col: str = "score",
+        stats: Observation | None = None) -> DataFrame:
     """Exact brute-force top-k by dot product (deterministic tie-break on
-    id). Physical plan: scan -> project(score) -> TakeOrderedAndProject."""
-    scored = score_against(df, query_vec, vec_col, score_col)
-    return (scored
-            .select(id_col, score_col)
-            .orderBy(F.desc(score_col), F.col(id_col))
-            .limit(k))
+    id). Physical plan: scan -> project(score) -> TakeOrderedAndProject,
+    built as select -> orderBy -> limit.
+
+    ``stats``, when given, observes ``score_stat_columns`` over EVERY
+    scored row, before the limit, inside the same scan: after an action
+    on the result (or on a plan that contains it),
+    ``observe.observed(stats)`` holds what ``score_stats`` of
+    ``score_against`` would return (the average up to summation order),
+    without a second scan."""
+    scored = df.selectExpr(
+        T.quote_ident(id_col),
+        f"{_score_sql(query_vec, vec_col, 6)} AS {T.quote_ident(score_col)}")
+    if stats is not None:
+        scored = scored.observe(stats, *score_stat_columns(score_col))
+    return scored.orderBy(F.desc(score_col), F.col(id_col)).limit(k)
 
 
 def ivf_knn(df: DataFrame, query_vec: Sequence[float], k: int,
@@ -147,21 +168,25 @@ def ivf_partitioned_knn(spark, df: DataFrame, query_vec: Sequence[float],
             .orderBy(F.desc(score_col), F.col(id_col)).limit(k))
 
 
-def lexical_overlap_score(query_text: str, text_col: Column,
+def lexical_overlap_score(query_text: str, text_col: str,
                           ndigits: int = 6) -> Column:
     """Deterministic cross-encoder stand-in: Jaccard overlap of distinct
-    whitespace tokens between the query and the document."""
-    q = T.distinct_tokens(F.lit(query_text))
-    d = T.distinct_tokens(text_col)
-    inter = F.size(F.array_intersect(d, q)).cast("double")
-    union = F.size(F.array_union(d, q)).cast("double")
-    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), ndigits)
+    whitespace tokens between the query and column ``text_col``. One
+    ``F.expr`` parse over ``text.tokens_sql``; the query enters through
+    ``sql_regex``, so quotes, backslashes and ``${`` are plain text."""
+    q = f"array_distinct({T.tokens_sql(T.sql_regex(query_text))})"
+    d = f"array_distinct({T.tokens_sql(T.quote_ident(text_col))})"
+    inter = f"CAST(size(array_intersect({d}, {q})) AS DOUBLE)"
+    union = f"CAST(size(array_union({d}, {q})) AS DOUBLE)"
+    return F.expr(f"round(CASE WHEN {union} > 0 THEN {inter} / {union} "
+                  f"ELSE 0.0D END, {int(ndigits)})")
 
 
 def rerank(df: DataFrame, query_text: str, text_col: str = "text",
            score_col: str = "relevance_score") -> DataFrame:
     """Attach the rerank score column (#49)."""
-    return df.withColumn(score_col, lexical_overlap_score(query_text, F.col(text_col)))
+    return df.withColumn(score_col,
+                         lexical_overlap_score(query_text, text_col))
 
 
 def retrieval_funnel(embeddings: DataFrame, documents: DataFrame,
@@ -170,14 +195,19 @@ def retrieval_funnel(embeddings: DataFrame, documents: DataFrame,
                      top_n: int = DEFAULT_TOP_N,
                      rerank_threshold: float = DEFAULT_RERANK_THRESHOLD,
                      vec_col: str = "embedding", vec_id: str = "vec_id",
-                     doc_id: str = "doc_id") -> DataFrame:
+                     doc_id: str = "doc_id",
+                     stats: Observation | None = None) -> DataFrame:
     """The reference's full two-stage funnel (#51):
 
-    knn(k) |> join docs |> rerank |> orderBy desc |> limit n
+    knn(k) |> join docs |> rerank + snippet |> orderBy desc |> limit n
            |> filter(score >= theta)
 
     The candidate set is tiny (k rows) after stage 1, so the doc join is
-    a broadcast of the candidates into the documents scan.
+    a broadcast of the candidates into the documents scan. The rerank
+    score and the snippet are computed in one ``select``. ``stats`` is
+    passed to ``knn``: the score stats of all scored rows ride the
+    funnel's own embeddings scan (2 jobs, where a separate
+    ``score_stats`` scanned the embeddings a second time).
 
     The threshold sits AFTER the limit, and that is what keeps the
     reranker on the k joined rows: a filter below the limit only reads
@@ -188,18 +218,20 @@ def retrieval_funnel(embeddings: DataFrame, documents: DataFrame,
     a NULL score sorts last and fails it, so the rows that pass are a
     prefix of the ordered rows, and the first n of them are the same
     either way."""
-    candidates = knn(embeddings, query_vec, k_candidates, vec_col, vec_id)
+    candidates = knn(embeddings, query_vec, k_candidates, vec_col, vec_id,
+                     stats=stats)
     joined = documents.join(F.broadcast(candidates),
                             documents[doc_id] == candidates[vec_id])
-    reranked = rerank(joined, query_text)
-    return (reranked
-            .select(doc_id, "score", "relevance_score",
+    return (joined
+            .select(doc_id, "score",
+                    lexical_overlap_score(query_text, "text")
+                    .alias("relevance_score"),
                     T.snippet("text", 80).alias("snippet"))
             .orderBy(F.desc("relevance_score"), F.desc("score"), F.col(doc_id))
             .limit(top_n)
             # #23: rerank-score threshold (interactive override in the
             # reference = this parameter; Auto_query_rag_database.py:327-341)
-            .where(F.col("relevance_score") >= F.lit(rerank_threshold)))
+            .where(f"relevance_score >= {V.sql_double(rerank_threshold)}"))
 
 
 def direct_retrieval(df: DataFrame, query_vec: Sequence[float],
@@ -244,15 +276,25 @@ def topk_by_similarity(df: DataFrame, query_vec: Sequence[float], k: int,
     return ivf_knn(df, query_vec, k, vec_col, id_col)
 
 
+def score_stat_columns(score_col: str = "score",
+                       ndigits: int = 6) -> list[Column]:
+    """The four score-stat aggregates (min, max, avg rounded to
+    ``ndigits``, and the row count), shared by ``score_stats`` and the
+    observation ``knn`` attaches."""
+    s, n = T.quote_ident(score_col), int(ndigits)
+    return [F.expr(f"round(min({s}), {n}) AS min_score"),
+            F.expr(f"round(max({s}), {n}) AS max_score"),
+            F.expr(f"round(avg({s}), {n}) AS avg_score"),
+            F.expr("CAST(count(1) AS BIGINT) AS n_candidates")]
+
+
 def score_stats(scored: DataFrame, score_col: str = "score",
                 ndigits: int = 6) -> DataFrame:
     """min/max/avg score stats shown before thresholding (#52,
-    Auto_query_rag_database.py:328-331)."""
-    return scored.agg(
-        F.round(F.min(score_col), ndigits).alias("min_score"),
-        F.round(F.max(score_col), ndigits).alias("max_score"),
-        F.round(F.avg(score_col), ndigits).alias("avg_score"),
-        F.count(F.lit(1)).cast("long").alias("n_candidates"))
+    Auto_query_rag_database.py:328-331), as a separate aggregate over
+    ``scored``. The auto loop gets the same values without this extra
+    scan from the observation ``knn(stats=...)`` attaches."""
+    return scored.agg(*score_stat_columns(score_col, ndigits))
 
 
 def knn_batch_topk(corpus: DataFrame, queries: DataFrame, k: int,
@@ -291,7 +333,7 @@ def knn_batch_topk(corpus: DataFrame, queries: DataFrame, k: int,
     scored = (joined
               .select(F.col(query_id_col),
                       F.col(id_col),
-                      F.round(V.dot(F.col(vec_col), F.col(query_vec_col)),
+                      F.round(V.dot(vec_col, query_vec_col),
                               ndigits).alias("score")))
 
     def fold(df: DataFrame, keys: list) -> DataFrame:
@@ -390,8 +432,6 @@ def mmr_rerank(candidates: DataFrame, k: int = 5, lam: float = 0.7,
     on k-bounded data, no driver collect of anything larger than the
     final result. Pick 1 defines mmr = score (empty selection).
     Ties break on the id, matching the oracle's unrolled CTEs."""
-    from ..functions import vectors as V
-
     # the diversity coefficient must be the SAME double both engines
     # parse from a decimal literal — 1.0 - 0.7 in binary float is NOT
     # the double nearest 0.3, and near-duplicate candidates sit within
@@ -412,8 +452,9 @@ def mmr_rerank(candidates: DataFrame, k: int = 5, lam: float = 0.7,
             F.collect_list(id_col).alias("__ids"))
         rem = (candidates.crossJoin(F.broadcast(sel_agg))
                .where(~F.array_contains(F.col("__ids"), F.col(id_col))))
-        maxsim = F.array_max(F.transform(
-            F.col("__sel"), lambda s: V.dot(F.col(vec_col), s.getField("v"))))
+        maxsim = F.expr(
+            "array_max(transform(__sel, s -> "
+            f"{V.dot_sql(T.quote_ident(vec_col), 's.v')}))")
         pick = (rem.withColumn(
                     "mmr", F.lit(lam) * F.col(score_col) - F.lit(mu) * maxsim)
                 .orderBy(F.desc("mmr"), id_col).limit(1)

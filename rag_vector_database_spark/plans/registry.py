@@ -3717,7 +3717,7 @@ def q_cosine_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (a.join(b, ["bucket"])
             .where(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b",
-                    F.round(V.dot(F.col("va"), F.col("vb")), 6)
+                    F.round(V.dot("va", "vb"), 6)
                      .alias("cosine"))
             .where(F.col("cosine") >= 0.45))
 
@@ -6269,7 +6269,7 @@ def q_binary_quant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("hamming", "vec_id").limit(50))
     return (cand.select(
         "vec_id", "hamming",
-        F.round(V.dot("embedding", V.query_vec_lit(qv)), 6).alias("score"))
+        F.round(V.dot("embedding", qv), 6).alias("score"))
         .orderBy(F.desc("score"), "vec_id").limit(10))
 
 
@@ -7302,11 +7302,11 @@ def q_mrl_truncated_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("pn", "embedding").first())
     qp, qv = list(qrow["pn"]), list(qrow["embedding"])
     cand = (n.select("vec_id", "embedding",
-                     F.round(V.dot(F.col("pn"), V.query_vec_lit(qp)), 6)
+                     F.round(V.dot("pn", qp), 6)
                      .alias("pre_score"))
             .orderBy(F.desc("pre_score"), "vec_id").limit(50))
     return (cand.select("vec_id", "pre_score",
-                        F.round(V.dot("embedding", V.query_vec_lit(qv)), 6)
+                        F.round(V.dot("embedding", qv), 6)
                         .alias("score"))
             .orderBy(F.desc("score"), "vec_id").limit(10))
 
@@ -7526,7 +7526,7 @@ def q_knn_metadata_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import vectors as V
     return (emb.join(F.broadcast(keys), emb.vec_id == keys.doc_id)
             .select("vec_id", "lang",
-                    F.round(V.dot("embedding", V.query_vec_lit(qv)), 6)
+                    F.round(V.dot("embedding", qv), 6)
                     .alias("score"))
             .orderBy(F.desc("score"), "vec_id").limit(10))
 
@@ -10506,7 +10506,7 @@ def q_score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.where(F.col("vec_id") >= 8)
     from ..functions import vectors as V
     scored = (corpus.crossJoin(F.broadcast(queries))
-              .select(F.round(V.dot(F.col("embedding"), F.col("qv")), 6)
+              .select(F.round(V.dot("embedding", "qv"), 6)
                       .alias("score"),
                       (F.col("label") == F.col("qlabel"))
                       .cast("int").alias("rel")))
@@ -11191,7 +11191,7 @@ def q_embedding_label_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (emb.crossJoin(F.broadcast(q))
               .where(F.col("vec_id") != F.col("qid"))
               .select("qid", "qlabel", "label",
-                      F.round(V.dot(F.col("embedding"), F.col("qv")), 6)
+                      F.round(V.dot("embedding", "qv"), 6)
                       .alias("score")))
     m = (scored.groupBy("qid", "qlabel")
          .agg(F.max(F.when(F.col("label") == F.col("qlabel"),
@@ -11580,11 +11580,11 @@ def q_embedding_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         lambda x, i: x.cast("double")
         * (F.lit(1.0) + ((F.col("vec_id") + i) % 5 - 2) * F.lit(0.01)))
-    cos = (emb.select(
-        "label",
-        F.round(V.dot(F.col("embedding"), e2)
-                / (V.norm(F.col("embedding")) * F.sqrt(V.dot(e2, e2))),
-                6).alias("cos")))
+    cos = (emb.select("label", "embedding", e2.alias("e2"))
+           .select("label",
+                   F.round(V.dot("embedding", "e2")
+                           / (V.norm("embedding") * V.norm("e2")),
+                           6).alias("cos")))
     return (cos.groupBy("label")
             .agg(F.count(F.lit(1)).cast("long").alias("n_vecs"),
                  F.round(F.sum(F.round(F.col("cos") * 1e6).cast("long"))
@@ -12972,8 +12972,7 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str,
         ev = [[float(x) for x in r["embedding"]]
               for r in eval_df.select("embedding").orderBy("vec_id")
               .collect()]
-        dots = [F.round(V.dot(F.col("embedding"),
-                              V.query_vec_lit(v)), 6)
+        dots = [F.round(V.dot("embedding", v), 6)
                 for v in ev]
         max_cos = F.greatest(*dots) if len(dots) > 1 else dots[0]
         per_vec = corpus.select("label", max_cos.alias("max_cos"))
@@ -12981,8 +12980,7 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str,
         q = F.broadcast(eval_df.select(F.col("embedding").alias("qv")))
         per_vec = (corpus.crossJoin(q)
                    .select("vec_id", "label",
-                           F.round(V.dot(F.col("embedding"),
-                                         F.col("qv")), 6).alias("cos"))
+                           F.round(V.dot("embedding", "qv"), 6).alias("cos"))
                    .groupBy("vec_id", "label")
                    .agg(F.max("cos").alias("max_cos"))
                    .select("label", "max_cos"))
@@ -14950,7 +14948,7 @@ def q_cosine_neardup_blocked_auto(spark: SparkSession,
     return (a.join(b, ["bucket"])
             .where(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b",
-                    F.round(V.dot(F.col("va"), F.col("vb")), 6)
+                    F.round(V.dot("va", "vb"), 6)
                      .alias("cosine"))
             .where(F.col("cosine") >= 0.45))
 
@@ -15461,7 +15459,7 @@ def q_semdedup_block_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(F.col("vec_id").alias("id_b"),
                    F.col("embedding").alias("vb"))
     tp = (a.join(b, F.col("id_a") < F.col("id_b"))
-          .where(F.round(V.dot(F.col("va"), F.col("vb")), 6) >= 0.30)
+          .where(F.round(V.dot("va", "vb"), 6) >= 0.30)
           .select("id_a", "id_b"))
     lab = (tp
            .join(single.select(F.col("vec_id").alias("id_a"),
@@ -15587,7 +15585,7 @@ def q_semdedup_block_recall_sampled(spark: SparkSession,
     b = semb.select(F.col("vec_id").alias("id_b"),
                     F.col("embedding").alias("vb"))
     tp = (a.join(b, F.col("id_a") < F.col("id_b"))
-          .where(F.round(V.dot(F.col("va"), F.col("vb")), 6) >= 0.30)
+          .where(F.round(V.dot("va", "vb"), 6) >= 0.30)
           .select("id_a", "id_b"))
     lab = (tp
            .join(single.select(F.col("vec_id").alias("id_a"),
@@ -15713,7 +15711,7 @@ def q_margin_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("embedding").alias("vb"))
     s = (A.crossJoin(B)
          .select("ia", "ib",
-                 F.round(V.dot(F.col("va"), F.col("vb")), 6).alias("c"))
+                 F.round(V.dot("va", "vb"), 6).alias("c"))
          .localCheckpoint())
     wa = Window.partitionBy("ia").orderBy(F.desc("c"), F.col("ib"))
     wb = Window.partitionBy("ib").orderBy(F.desc("c"), F.col("ia"))

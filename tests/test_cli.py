@@ -85,6 +85,35 @@ def grouped(spark, lines, prefix):
     return input_fn
 
 
+def record_collects(spark, monkeypatch):
+    """Runs every ``DataFrame.collect`` under a job group of its own and
+    returns the list it appends ``(job group around the call, the
+    collect's own group, embeddings scans in its plan)`` to."""
+    sc = spark.sparkContext
+    frame = type(spark.range(1))
+    plain_collect = frame.collect
+    collects = []
+
+    def collect(self):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        group = f"collect-{uuid.uuid4()}"
+        sc.setJobGroup(group, "retrieval collect")
+        try:
+            return plain_collect(self)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+            leaves = self._jdf.queryExecution().optimizedPlan() \
+                .collectLeaves()
+            scans = sum(1 for i in range(leaves.size())
+                        if leaves.apply(i).getClass().getSimpleName()
+                        == "LogicalRelation"
+                        and "embedding#" in leaves.apply(i).toString())
+            collects.append((outer, group, scans))
+
+    monkeypatch.setattr(frame, "collect", collect)
+    return collects
+
+
 def test_chat_and_follow_up_turns_run_no_job(spark, sf_dir, job_count):
     """A chat-mode turn builds prompt and answer on the driver, and a
     follow-up turn reuses the rows the previous turn collected: neither
@@ -116,20 +145,7 @@ def test_auto_loop_answer_runs_no_job(spark, sf_dir, job_count,
     """Every job of a rerank or a direct auto-loop turn runs inside its
     one retrieval ``collect``: the prompt and answer step add none."""
     sc = spark.sparkContext
-    frame = type(spark.range(1))
-    plain_collect = frame.collect
-    collect_groups = []
-
-    def collect(self):
-        outer = sc.getLocalProperty("spark.jobGroup.id")
-        collect_groups.append((outer, f"collect-{uuid.uuid4()}"))
-        sc.setJobGroup(collect_groups[-1][1], "retrieval collect")
-        try:
-            return plain_collect(self)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", outer)
-
-    monkeypatch.setattr(frame, "collect", collect)
+    collect_groups = record_collects(spark, monkeypatch)
     p = f"auto-{uuid.uuid4()}"
     out: list[str] = []
     try:
@@ -142,12 +158,84 @@ def test_auto_loop_answer_runs_no_job(spark, sf_dir, job_count,
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # one collect per turn (the first is the embedding-dim probe)
-    turn_collects = [g for outer, g in collect_groups
+    turn_collects = [g for outer, g, _ in collect_groups
                      if outer in (f"{p}-0", f"{p}-2")]
     assert turns == 2 and len(turn_collects) == 2
     assert [job_count(f"{p}-{i}") for i in (0, 2)] == [0, 0]
     assert all(job_count(g) >= 1 for g in turn_collects)
     assert sum(l.startswith("AI: ANSWER[") for l in out) == 2
+
+
+def test_rerank_turn_one_scan_two_jobs(spark, sf_dir, job_count,
+                                       monkeypatch):
+    """A rerank turn with score stats runs at most 2 jobs, all inside
+    its one retrieval ``collect``, and scans the embeddings table once:
+    the stats are observed in the funnel's own scan. Its printed stats
+    equal a separate ``score_stats`` over the same scores."""
+    sc = spark.sparkContext
+    collects = record_collects(spark, monkeypatch)
+    q = "a query about data"
+    p = f"rerank-{uuid.uuid4()}"
+    out: list[str] = []
+    try:
+        turns = cli.run_auto_loop(
+            spark, sf_dir, show_stats=True,
+            input_fn=grouped(spark, [q], p), print_fn=out.append)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert turns == 1
+    turn = [(g, n) for outer, g, n in collects if outer == f"{p}-0"]
+    assert len(turn) == 1 and job_count(f"{p}-0") == 0
+    assert 1 <= job_count(turn[0][0]) <= 2
+    assert turn[0][1] == 1
+
+    stats = [line for line in out if line.startswith("[Scores:")]
+    assert stats == [_separate_stats_line(spark, sf_dir, q)]
+    assert out.index(stats[0]) < out.index(
+        next(line for line in out if line.startswith("AI: ")))
+
+
+def _separate_stats_line(spark, sf_dir, q):
+    """The ``[Scores: …]`` line of a separate ``score_stats`` pass."""
+    from pyspark.sql import functions as F
+
+    from rag_vector_database_spark.operators import retrieval
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    dim = emb.select(F.size("embedding")).first()[0]
+    s = retrieval.score_stats(retrieval.score_against(
+        emb, cli.embed_query(spark, q, dim))).first()
+    return (f"[Scores: min={s['min_score']:.4f} max={s['max_score']:.4f} "
+            f"avg={s['avg_score']:.4f} n={s['n_candidates']}]")
+
+
+@pytest.mark.parametrize("limits", [{"top_n": 0}, {"k_rerank": 0}])
+def test_rerank_stats_when_a_zero_limit_prunes_the_scan(spark, sf_dir,
+                                                        limits):
+    """A limit of 0 lets Spark drop the funnel's scan, and its
+    observation with it; the stats line still covers every row."""
+    q = "a query about data"
+    out: list[str] = []
+    cli.run_auto_loop(spark, sf_dir, input_fn=scripted([q]),
+                      print_fn=out.append, **limits)
+    assert [line for line in out if line.startswith("[Scores:")] == \
+        [_separate_stats_line(spark, sf_dir, q)]
+
+
+@pytest.mark.parametrize("loop", ["query", "auto"])
+def test_loops_on_empty_store_raise_value_error(spark, sf_dir, tmp_path,
+                                                loop):
+    """A store whose embeddings table has no rows is a clear error
+    naming that table, not a TypeError from the dimension probe."""
+    store = str(tmp_path / "store")
+    spark.read.parquet(f"{sf_dir}/documents.parquet") \
+        .write.parquet(f"{store}/documents.parquet")
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(0) \
+        .write.parquet(f"{store}/embeddings.parquet")
+    run = cli.run_query_loop if loop == "query" else cli.run_auto_loop
+    with pytest.raises(ValueError, match="embeddings.parquet"):
+        run(spark, store, input_fn=scripted(["a question"]),
+            print_fn=lambda s: None)
 
 
 def test_query_loop_exit_keywords_all_work(spark, sf_dir):

@@ -88,6 +88,35 @@ def test_funnel_reranks_only_the_candidates(spark, sf_dir):
     assert "array_union" in plan  # the reranker runs, above the join
 
 
+def test_knn_observes_score_stats_of_every_scored_row(spark, sf_dir):
+    """``knn(stats=obs)`` observes, in its own scan and before the
+    limit, what ``score_stats`` of ``score_against`` returns: min, max
+    and the count exactly, the average up to summation order. Through
+    the funnel too, where knn is the broadcast side of the join."""
+    from pyspark.sql import Observation
+
+    from rag_vector_database_spark.operators.observe import observed
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    qv = list(emb.where("vec_id = 3").select("embedding").first()[0])
+    want = retrieval.score_stats(retrieval.score_against(emb, qv)) \
+        .first().asDict()
+    collected = []
+    for run in (lambda obs: retrieval.knn(emb, qv, 7, stats=obs),
+                lambda obs: retrieval.retrieval_funnel(
+                    emb, docs, qv, "alpha beta", 7, 3, 0.0, stats=obs)):
+        obs = Observation()
+        collected.append(run(obs).collect())
+        got = observed(obs)
+        assert collected[-1] and got is not None
+        assert {k: got[k] for k in ("min_score", "max_score",
+                                    "n_candidates")} == \
+            {k: want[k] for k in ("min_score", "max_score", "n_candidates")}
+        assert abs(got["avg_score"] - want["avg_score"]) <= 1e-6
+    assert collected[0] == retrieval.knn(emb, qv, 7).collect()
+
+
 def test_minhash_no_repartition_when_wide(spark):
     """An input whose estimated scan width already covers the cluster
     must NOT be re-exchanged (at 100 TB that exchange would dominate).

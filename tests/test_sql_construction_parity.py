@@ -369,25 +369,28 @@ def test_chunk_documents_matches_legacy_build(spark):
 
 
 def test_vector_literals_accept_nonfinite(spark):
-    """query_vec_lit and clustering._sql_num must render inf/NaN as
-    parseable literals with the same values F.lit produced (r14
-    advisor: 'infD' was a parse error)."""
+    """A Python query vector in ``vectors.dot`` and the
+    ``vectors.sql_double`` spelling must render inf/NaN as parseable
+    literals with the same values F.lit produced ('infD' was a parse
+    error). Each component x is read back as dot([1.0], [x]) =
+    0.0 + 1.0 * x."""
     import math
-    from rag_vector_database_spark.functions.vectors import query_vec_lit
-    from rag_vector_database_spark.operators.clustering import _sql_num
+    from rag_vector_database_spark.functions.vectors import dot, sql_double
 
     vec = [1.5, float("inf"), float("-inf"), float("nan")]
-    got = spark.range(1).select(query_vec_lit(vec).alias("v")).first()["v"]
+    one = spark.range(1).select(F.array(F.lit(1.0)).alias("one"))
+    got = one.select(*[dot("one", [x]).alias(f"c{i}")
+                       for i, x in enumerate(vec)]).first()
     ref = spark.range(1).select(
         F.array(*[F.lit(float(x)) for x in vec]).alias("v")).first()["v"]
-    assert got[0] == ref[0] == 1.5
-    assert got[1] == ref[1] == float("inf")
-    assert got[2] == ref[2] == float("-inf")
-    assert math.isnan(got[3]) and math.isnan(ref[3])
+    assert got["c0"] == ref[0] == 1.5
+    assert got["c1"] == ref[1] == float("inf")
+    assert got["c2"] == ref[2] == float("-inf")
+    assert math.isnan(got["c3"]) and math.isnan(ref[3])
 
     row = spark.range(1).selectExpr(
-        f"{_sql_num(float('inf'))} AS a", f"{_sql_num(float('nan'))} AS b",
-        f"{_sql_num(-0.25)} AS c").first()
+        f"{sql_double(float('inf'))} AS a", f"{sql_double(float('nan'))} AS b",
+        f"{sql_double(-0.25)} AS c").first()
     assert row["a"] == float("inf") and math.isnan(row["b"])
     assert row["c"] == -0.25
 
@@ -412,3 +415,169 @@ def test_minhash_front_half_matches_legacy_build(spark, docs):
                         .alias("band", "bk")))
     assert _rows(bands) == _rows(legacy_bands)
     dedup.release_caches()
+
+
+# ---------------------------------------------------------------------------
+# The interactive turn's per-row expressions (vectors.dot,
+# retrieval.lexical_overlap_score, text.snippet) are one-parse SQL
+# strings. The Column-API forms they replaced live on only here, and
+# Hypothesis pins the two row-identical under both parser settings.
+
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+from rag_vector_database_spark.functions import vectors as V  # noqa: E402
+from rag_vector_database_spark.operators import retrieval  # noqa: E402
+
+_PARSER_CONFS = ("false", "true")
+_ESCAPED = "spark.sql.parser.escapedStringLiterals"
+
+
+def _legacy_dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x)
+
+
+def _legacy_vec_lit(vec):
+    return F.array(*[F.lit(float(x)) for x in vec])
+
+
+def _legacy_overlap(query_text, text_col, ndigits=6):
+    q = T.distinct_tokens(F.lit(query_text))
+    d = T.distinct_tokens(text_col)
+    inter = F.size(F.array_intersect(d, q)).cast("double")
+    union = F.size(F.array_union(d, q)).cast("double")
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)),
+                   ndigits)
+
+
+def _legacy_snippet(c, n):
+    flat = F.regexp_replace(c, r"\n", " ")
+    return F.when(F.length(flat) > n,
+                  F.concat(F.substring(flat, 1, n), F.lit("..."))) \
+        .otherwise(flat)
+
+
+def _exact(rows):
+    """Rows as comparable tuples: repr tells NaN, -0.0 and 0.0 apart."""
+    return [tuple(repr(v) if isinstance(v, float)
+                  else [repr(x) for x in v] if isinstance(v, list) else v
+                  for v in r) for r in rows]
+
+
+def _same_under_each_conf(spark, df, legacy, build):
+    """Collects ``legacy`` columns and the columns ``build()`` returns,
+    built once under each parser setting, in one job, and asserts that
+    every row's new values equal its legacy values. ``F.expr`` parses
+    when called, so the setting in force then is the one that counts."""
+    new = []
+    for conf in _PARSER_CONFS:
+        spark.conf.set(_ESCAPED, conf)
+        try:
+            new.append(build())
+        finally:
+            spark.conf.unset(_ESCAPED)
+    n = len(legacy)
+    rows = df.select(*legacy, *[c for cols in new for c in cols]).collect()
+    for row in _exact(rows):
+        for i, conf in enumerate(_PARSER_CONFS):
+            assert row[n * (i + 1):n * (i + 2)] == row[:n], (conf, row)
+
+
+_F32 = st.one_of(st.floats(width=32, allow_nan=True, allow_infinity=True),
+                st.floats(-2.0, 2.0, width=32), st.none())
+_F64 = st.one_of(st.floats(allow_nan=True, allow_infinity=True),
+                 st.floats(-2.0, 2.0), st.sampled_from([0.0, -0.0]))
+
+
+@st.composite
+def _vector_rows(draw):
+    """(rows of (a, b), query vector): most arrays have the query's
+    length, so products are compared, not only the NULL a length
+    mismatch gives; the rest are NULL or of any length."""
+    n = draw(st.integers(0, 5))
+    same = st.lists(_F32, min_size=n, max_size=n)
+    vec = st.one_of(same, same, st.none(), st.lists(_F32, max_size=6))
+    rows = draw(st.lists(st.tuples(vec, vec), min_size=1, max_size=6))
+    return rows, draw(st.lists(_F64, min_size=n, max_size=n))
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(case=_vector_rows())
+@example(case=([(None, [1.0]), ([None, 2.0], [3.0, None]), ([], []),
+                ([1.0, 2.0], [1.0]), ([1.0], [1.0, 2.0, 3.0]),
+                ([float("nan"), -0.0], [float("inf"), float("-inf")])],
+               []))
+@example(case=([([0.1, 0.7, -1.3], [0.3, 0.2, 0.9]), ([0.0, 1.0, 2.0],
+                                                       [float("nan")] * 3)],
+               [float("nan"), float("inf"), -0.0]))
+@example(case=([([0.1, -0.7, 1.3], None)], [0.3, 1e-300, -0.45]))
+def test_dot_matches_column_form(spark, case):
+    """vectors.dot over column names and over a Python query vector
+    equals the Column-API fold over F.lit literals: NULL arrays, NULL
+    elements, shorter/longer/empty arrays, an empty query, NaN, +-inf
+    and -0.0 components."""
+    rows, qv = case
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(rows)],
+        "id long, a array<float>, b array<float>")
+    _same_under_each_conf(
+        spark, df,
+        [_legacy_dot(F.col("a"), F.col("b")),
+         _legacy_dot(F.col("a"), _legacy_vec_lit(qv)),
+         _legacy_dot(_legacy_vec_lit(qv), F.col("b"))],
+        lambda: [V.dot("a", "b"), V.dot("a", qv), V.dot(qv, "b")])
+
+
+_PIECES = ["a", "b", "ab", "Alpha", " ", "  ", "\t", "\n", "\r\n", "\x1c",
+           "\xa0", "　", "\U0001d4b3", "'", "\\", "\\n", "%", "$1",
+           "${spark.app.name}", ".", "*", "+?", "(", ")", "[", "]", "^",
+           "$", "|", "{", "}"]
+_TEXT = st.lists(st.sampled_from(_PIECES), max_size=12).map("".join)
+_SNIP_N = 6
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(texts=st.lists(st.one_of(st.none(), _TEXT), max_size=6),
+       query=_TEXT)
+@example(texts=[], query="it's a \\ $1 % ${spark.app.name} ^[.*]$")
+@example(texts=[], query="")
+@example(texts=[], query="   ")
+def test_overlap_and_snippet_match_column_form(spark, texts, query):
+    """retrieval.lexical_overlap_score and text.snippet equal the
+    Column-API forms: NULL, empty, whitespace-only and non-ASCII
+    whitespace text, \\n and \\r\\n, astral characters, lengths n and
+    n+1 around the snippet cut, and queries carrying quotes,
+    backslashes, %, $1, ${...} and regex metacharacters."""
+    fixed = [None, "", "   ", "\x1c\xa0　", "a\nb\r\nc",
+             "x" * _SNIP_N, "x" * (_SNIP_N + 1),
+             "\U0001d4b3" * _SNIP_N, "\U0001d4b3" * (_SNIP_N + 1),
+             "\n" * (_SNIP_N + 1), query]
+    df = spark.createDataFrame(list(enumerate(fixed + texts)),
+                               "id long, text string")
+    _same_under_each_conf(
+        spark, df,
+        [_legacy_overlap(query, F.col("text")),
+         _legacy_snippet(F.col("text"), _SNIP_N),
+         _legacy_snippet(F.col("text"), 80)],
+        lambda: [retrieval.lexical_overlap_score(query, "text"),
+                 T.snippet("text", _SNIP_N), T.snippet("text", 80)])
+
+
+def test_sql_regex_is_plain_text_under_both_confs(spark):
+    """sql_regex renders quotes, backslashes and ``${...}`` so that the
+    parsed value is the input under both escapedStringLiterals
+    settings and with variable substitution on."""
+    s = "it's \\ ${spark.app.name} $1 '' \\\\"
+    for conf in _PARSER_CONFS:
+        spark.conf.set(_ESCAPED, conf)
+        try:
+            got = spark.range(1).selectExpr(
+                f"{T.sql_regex(s)} AS v").first()["v"]
+        finally:
+            spark.conf.unset(_ESCAPED)
+        assert got == s, conf
