@@ -1,23 +1,24 @@
 """Alternating A/B runs of the benchmark of record between two checkouts.
 
 For each seed, runs ``python3 perfbench/run.py --workload W --seed S
---seconds N --trace 0`` once in the parent checkout and once in the
+--seconds 10 --trace 0`` once in the parent checkout and once in the
 change checkout, alternating which side goes first (even-numbered pairs
 parent first, odd-numbered change first), so drift on the host lands on
 both sides alike. Each run is a separate process started in its own
 checkout; this script reads only the two JSON lines a run prints and
 imports nothing from ``perfbench/``.
 
-It prints one line per seed (``op_cpu_ms``, ``setup_s`` and
-``correct`` for both sides), then each side's median and quartiles, the
-parent's interquartile range, the change's win count (pairs where its
-``op_cpu_ms`` is lower) and whether a gain claim holds: the change wins
-at least 9 of every 10 pairs, and its median is below the parent's by
-more than the parent's IQR.
+It prints one line per seed (``op_cpu_ms``, ``setup_s``, ``correct``
+and ``failed_ops_ratio`` for both sides), then each side's median and
+quartiles, each side's mean failed-op ratio, the parent's interquartile
+range, the change's win count (pairs where its ``op_cpu_ms`` is lower)
+and whether a gain claim holds: every run is correct, the change's mean
+failed-op ratio is not above the parent's, the change wins at least 9
+of every 10 pairs, and its median is below the parent's by more than
+the parent's IQR.
 
     python3 tools/perfbench_ab.py --parent ../parent --change . \\
-        --workload rag_turns --seeds 41-44,51-56 [--seconds 10] \\
-        [--json ab.json]
+        --workload rag_turns --seeds 41-44,51-56
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ import subprocess
 import sys
 
 SIDES = ("parent", "change")
+SECONDS = 10  # the run length BENCHMARK.json fixes for both sides
 
 
 def parse_seeds(spec: str) -> list[int]:
@@ -41,11 +43,10 @@ def parse_seeds(spec: str) -> list[int]:
     return seeds
 
 
-def run_once(checkout: str, workload: str, seed: int,
-             seconds: float) -> dict:
+def run_once(checkout: str, workload: str, seed: int) -> dict:
     """One untraced run in ``checkout``; its gated metrics and checks."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
     if proc.returncode != 0 or len(lines) < 2:
@@ -57,8 +58,7 @@ def run_once(checkout: str, workload: str, seed: int,
     return {"op_cpu_ms": m["op_cpu_ms"]["value"],
             "setup_s": m["setup_s"]["value"],
             "correct": result["correct"],
-            "failed_ops_ratio": info["detail"]["failed_ops_ratio"],
-            "detail": info["detail"]}
+            "failed_ops_ratio": info["detail"]["failed_ops_ratio"]}
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -81,11 +81,17 @@ def summarize(runs: list[dict]) -> dict:
                for r in runs)
     iqr = p["q3"] - p["q1"]
     gap = p["median"] - c["median"]
+    failed = {side: statistics.fmean(r[side]["failed_ops_ratio"]
+                                     for r in runs) for side in SIDES}
+    all_correct = all(r[s]["correct"] for r in runs for s in SIDES)
     out.update(pairs=len(runs), change_wins=wins, parent_iqr=iqr,
                median_gap=gap,
                median_change_pct=100.0 * -gap / p["median"],
-               all_correct=all(r[s]["correct"] for r in runs for s in SIDES),
-               claim_holds=wins * 10 >= 9 * len(runs) and gap > iqr)
+               failed_ops_ratio=failed, all_correct=all_correct,
+               claim_holds=(all_correct
+                            and failed["change"] <= failed["parent"]
+                            and wins * 10 >= 9 * len(runs)
+                            and gap > iqr))
     return out
 
 
@@ -95,8 +101,6 @@ def main(argv=None) -> int:
     ap.add_argument("--change", required=True, help="change checkout")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 41-44,51-56")
-    ap.add_argument("--seconds", type=float, default=10)
-    ap.add_argument("--json", help="also write every run and the summary")
     args = ap.parse_args(argv)
     dirs = {"parent": os.path.abspath(args.parent),
             "change": os.path.abspath(args.change)}
@@ -104,15 +108,16 @@ def main(argv=None) -> int:
     runs = []
     for i, seed in enumerate(parse_seeds(args.seeds)):
         order = SIDES if i % 2 == 0 else SIDES[::-1]
-        res = {side: run_once(dirs[side], args.workload, seed, args.seconds)
+        res = {side: run_once(dirs[side], args.workload, seed)
                for side in order}
-        res.update(seed=seed, first=order[0])
         runs.append(res)
         p, c = res["parent"], res["change"]
         print(f"seed {seed} ({order[0]} first): op_cpu_ms parent "
               f"{p['op_cpu_ms']:.1f} change {c['op_cpu_ms']:.1f} | setup_s "
               f"parent {p['setup_s']:.3f} change {c['setup_s']:.3f} | "
-              f"correct {p['correct']}/{c['correct']}", flush=True)
+              f"correct {p['correct']}/{c['correct']} | failed_ops_ratio "
+              f"{p['failed_ops_ratio']:g}/{c['failed_ops_ratio']:g}",
+              flush=True)
 
     s = summarize(runs)
     for side in SIDES:
@@ -120,14 +125,13 @@ def main(argv=None) -> int:
             q = s[f"{side}.{metric}"]
             print(f"{side:6} {metric:9} median {q['median']:.3f} "
                   f"quartiles {q['q1']:.3f}/{q['q3']:.3f}")
+    f = s["failed_ops_ratio"]
+    print(f"failed_ops_ratio mean parent {f['parent']:g} "
+          f"change {f['change']:g}")
     print(f"parent op_cpu_ms IQR {s['parent_iqr']:.1f}; median gap "
           f"{s['median_gap']:.1f} ({s['median_change_pct']:+.1f} %); change "
           f"wins {s['change_wins']}/{s['pairs']}; all correct "
           f"{s['all_correct']}; claim holds {s['claim_holds']}")
-    if args.json:
-        with open(args.json, "w") as fh:
-            json.dump({"workload": args.workload, "seconds": args.seconds,
-                       "runs": runs, "summary": s}, fh, indent=1)
     return 0
 
 
