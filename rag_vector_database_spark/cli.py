@@ -54,9 +54,10 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def embed_query(spark: SparkSession, text: str, dim: int) -> list[float]:
-    """Embed one query string on the driver, with no Spark job: the same
-    ``hash_embed`` the ingest UDF runs on executors. ``spark`` is unused
-    and kept for the call signature."""
+    """Embed one query string on the driver, with no Spark job:
+    ``hash_embed``, bit-identical to the expression ingest embeds
+    batches with. ``spark`` is unused and kept for the call
+    signature."""
     return hash_embed(text, dim)
 
 
@@ -257,10 +258,11 @@ def run_ingest(spark: SparkSession, sf_dir: str, store_path: str,
     from .operators import ingest
     from .operators.chunking import chunk_documents
 
+    embedder = HashingEmbedder(dim)  # a bad dim fails before any job
     docs = _load(spark, sf_dir, "documents")
     chunks = chunk_documents(docs, size=chunk_size, overlap=chunk_overlap,
                              keep_cols=("lang", "source"))
-    batch = HashingEmbedder(dim).embed(chunks, "chunk_text")
+    batch = embedder.embed(chunks, "chunk_text")
     added = ingest.idempotent_append(batch, store_path, "chunk_id",
                                      spark=spark)
     res = {"offered": added.offered, "added": int(added),

@@ -37,16 +37,6 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def sql_str_lit(s: str) -> str:
-    """A SQL string literal for ``s``, safe against embedded quotes.
-    Backslash-free inputs only (see sql_regex for patterns): this
-    helper does not escape backslashes, so a backslash would be
-    parser-conf-dependent."""
-    if "\\" in s:
-        raise ValueError("use sql_regex for backslash-carrying strings")
-    return "'" + s.replace("'", "''") + "'"
-
-
 # Characters whose meaning inside a SQL string literal depends on a
 # setting: the backslash (spark.sql.parser.escapedStringLiterals), the
 # quote (a doubled quote is one quote only when escapes are processed)

@@ -383,8 +383,7 @@ def gopher_quality_flags(docs: DataFrame, min_words: int = 50,
     expression-construction notes). Verified row- and
     schema-identical against the Column-API build, including
     empty/whitespace-only/symbol-edge documents."""
-    from ..functions.text import quote_ident, sql_regex, sql_str_lit, \
-        tokens_sql
+    from ..functions.text import quote_ident, sql_regex, tokens_sql
 
     docs = widen_narrow_scan(docs)
     T = quote_ident(text_col)
@@ -409,7 +408,7 @@ def gopher_quality_flags(docs: DataFrame, min_words: int = 50,
     n_alpha = f"size(filter({TOKS}, t -> t rlike '[A-Za-z]'))"
     alpha_frac = (f"CASE WHEN {n_words} > 0 THEN CAST({n_alpha} AS "
                   f"DOUBLE) / {n_words} ELSE 0.0D END")
-    stops = ",".join(sql_str_lit(w) for w in STOPWORDS["en"])
+    stops = ",".join(sql_regex(w) for w in STOPWORDS["en"])
     n_stop = (f"size(array_intersect(array_distinct({LTOKS}), "
               f"array({stops})))")
     f_words = (f"CAST({n_words} >= {int(min_words)} AND "

@@ -1,20 +1,23 @@
-"""The hashing embedder has one definition, ``hash_embed``: pinned
-exactly to the Spark-side sparse embedding the DuckDB parity suite
-checks, with defined results on edge inputs, and run unchanged by the
-ingest UDF."""
+"""The hashing embedder's two forms, ``hash_embed`` (Python, one query
+on the driver) and ``hash_embed_sql`` (the JVM expression ingest embeds
+batches with), are pinned bit-identical to each other and to the
+Spark-side sparse embedding the DuckDB parity suite checks, with
+defined results on edge inputs."""
 
 from __future__ import annotations
 
 import hashlib
 import math
+import random
 
 import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from rag_vector_database_spark import cli
 from rag_vector_database_spark.embedding import (HashingEmbedder,
                                                  SentenceTransformerEmbedder,
-                                                 hash_embed)
+                                                 hash_embed, hash_embed_sql)
 from rag_vector_database_spark.plans.registry import _sparse_hash_embed
 
 
@@ -78,24 +81,92 @@ def test_empty_text(spark):
                    4: None, 5: hash_embed("\t", 8)}
 
 
-def test_embed_ships_hash_embed_by_value(spark, tmp_path):
-    """Executors need not import this package: embed() registers the
-    module for pickle-by-value, so hash_embed travels with the UDF to a
-    worker whose sys.path lacks the package."""
-    import os
-    import subprocess
-    import sys
+# Characters that tokenizing or SQL quoting could get wrong: Spark's
+# separators, Unicode whitespace that is part of a token, astral
+# characters, quotes, backslashes and ``$``.
+_HARD = " \t\n\x0b\x0c\r\x1c\x1f\x85\xa0\u3000\U0001d11e\U0001f600'\\$`{}ab"
+_rnd = random.Random(8)
+_EDGE_TEXTS = [None, "", "   ", "\t", " a\t", "\na b", "a b\r\n",
+               "\x0b\x0c", "a\xa0b", "a\u3000b", "\x1c\x1f\x85",
+               "\U0001d11e \U0001f600x", "it's", "'", "\\", "a\\b",
+               "$1", "${x}", "${spark.app.name}", "x" * 1000,
+               "".join(_rnd.choice(_HARD) for _ in range(1000)),
+               " ".join(_rnd.choice(["a", "b", "ab"]) for _ in range(500))]
+_DIMS = (1, 8, 16, 33)
+_ESCAPED = "spark.sql.parser.escapedStringLiterals"
 
-    from pyspark import cloudpickle
 
-    HashingEmbedder(8).embed(spark.createDataFrame([("a",)], "text string"))
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    out = subprocess.run(
-        [sys.executable, "-c", "import pickle, sys; "
-         "print(pickle.loads(sys.stdin.buffer.read())('a b', 8))"],
-        input=cloudpickle.dumps(hash_embed), cwd=tmp_path, env=env,
-        capture_output=True, check=True, timeout=60)
-    assert out.stdout.decode().strip() == str(hash_embed("a b", 8))
+@settings(max_examples=10, deadline=None)
+@given(st.lists(st.one_of(st.none(), _texts), max_size=8))
+def test_embed_equals_hash_embed(spark, texts):
+    """``HashingEmbedder(dim).embed`` equals ``hash_embed`` by ``repr``
+    at dims 1, 8, 16 and 33, with the expression parsed under both
+    ``escapedStringLiterals`` settings, for a text column whose name
+    holds a backtick; it replaces an existing ``embedding`` column in
+    place and appends new ones, as ``withColumn`` does. Both settings'
+    columns are collected in one job."""
+    rows = [(i, t, "old", i) for i, t in enumerate(_EDGE_TEXTS + texts)]
+    out = spark.createDataFrame(
+        rows, "k long, `te``xt` string, embedding string, z long")
+    cols = []
+    for conf in ("false", "true"):
+        spark.conf.set(_ESCAPED, conf)
+        try:
+            for dim in _DIMS:
+                col = "embedding" if not cols else f"e{conf}{dim}"
+                out = HashingEmbedder(dim).embed(out, "te`xt", col)
+                cols.append((col, dim))
+        finally:
+            spark.conf.unset(_ESCAPED)
+    assert out.columns == ["k", "te`xt", "embedding", "z"] + \
+        [c for c, _ in cols[1:]]
+    assert {t for c, t in out.dtypes if c != "te`xt"} == \
+        {"bigint", "array<double>"}
+    for r in out.collect():
+        for col, dim in cols:
+            assert repr(r[col]) == repr(hash_embed(r["te`xt"], dim)), \
+                (col, r["te`xt"])
+
+
+def test_embed_runs_in_the_jvm(spark, sf_dir):
+    """The embedding is a JVM expression: no Python evaluation node in
+    the executed plan, and each token is hashed once (the optimizer
+    does not copy the token hashing into the per-bucket lambda)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    qe = HashingEmbedder(16).embed(docs)._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert qe.optimizedPlan().toString().count("md5(") == 1
+
+
+def test_embed_columns_match_with_column(spark):
+    """``embed`` names and places its column as ``withColumn`` does,
+    under either ``spark.sql.caseSensitive`` setting (no job runs)."""
+    df = spark.createDataFrame([], "k long, text string, Embedding string")
+    for conf in ("false", "true"):
+        spark.conf.set("spark.sql.caseSensitive", conf)
+        try:
+            for out in ("embedding", "Embedding", "text", "v"):
+                assert HashingEmbedder(8).embed(df, "text", out).columns \
+                    == df.withColumn(out, F.lit(None)).columns, (conf, out)
+        finally:
+            spark.conf.unset("spark.sql.caseSensitive")
+
+
+def test_dim_below_one_is_value_error(spark, sf_dir, tmp_path):
+    for dim in (0, -3):
+        for call in (lambda: hash_embed("", dim),
+                     lambda: hash_embed("a", dim),
+                     lambda: hash_embed(None, dim),
+                     lambda: hash_embed_sql("`text`", dim),
+                     lambda: HashingEmbedder(dim)):
+            with pytest.raises(ValueError, match="dim"):
+                call()
+    store = tmp_path / "store"
+    with pytest.raises(ValueError, match="dim"):
+        cli.run_ingest(spark, sf_dir, str(store), dim=0,
+                       print_fn=lambda s: None)
+    assert not store.exists()
 
 
 def test_normalized(spark, sf_dir):

@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rag_vector_database_spark.functions import text as T
-from rag_vector_database_spark.operators import dedup
+from rag_vector_database_spark.operators import dedup, textstats
 
 # Adversarial rows: empty, whitespace-only, NULL, unicode spaces (in
 # Python's \s class but not Java's ASCII \s), literal backslash-s,
@@ -81,12 +81,26 @@ def test_sql_regex_conf_independent(spark):
         assert row["c"] == "plain" and row["d"] == "\\"
 
 
-def test_sql_str_lit_escapes_quotes(spark):
-    assert T.sql_str_lit("it's") == "'it''s'"
-    assert spark.range(1).selectExpr(
-        f"{T.sql_str_lit(chr(39) + 'x')} AS v").first()["v"] == "'x"
-    with pytest.raises(ValueError):
-        T.sql_str_lit("a\\b")
+def test_stopword_literals_plain_text_under_both_confs(spark, monkeypatch):
+    """gopher_quality_flags renders its stopwords with sql_regex: the
+    plan text of the quote-free shipped words is the plain literal, and
+    a quote, backslash or ``$`` in a stopword is that character under
+    both escapedStringLiterals settings."""
+    words = textstats.STOPWORDS["en"]
+    assert [T.sql_regex(w) for w in words] == [f"'{w}'" for w in words]
+    monkeypatch.setitem(textstats.STOPWORDS, "en",
+                        ["it's", "a\\b", "$1", "${x}", "the"])
+    df = spark.createDataFrame(
+        [(1, "it's a\\b $1 ${x} the x"), (2, "its it''s a\\\\b the")],
+        "doc_id long, text string")
+    for conf in ("false", "true"):
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", conf)
+        try:
+            flags = textstats.gopher_quality_flags(df)
+        finally:
+            spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+        got = {r["doc_id"]: r["n_stop"] for r in flags.collect()}
+        assert got == {1: 5, 2: 1}, conf
 
 
 def test_quote_ident_escapes_backticks(spark):
@@ -200,7 +214,6 @@ def test_gopher_flags_identical_under_legacy_parser_conf(spark, docs):
     """The generated gopher SQL must not change meaning under the
     legacy escapedStringLiterals conf (regex literals are built via
     sql_regex, never via escape sequences)."""
-    from rag_vector_database_spark.operators import textstats
     base = _rows(textstats.gopher_quality_flags(docs.fillna("", ["text"])))
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
