@@ -43,6 +43,7 @@ from .operators.conversation import (RagConversation, context_text,
                                      history_fold)
 from .operators.observe import observed
 from .operators.session_log import SessionLog
+from .operators.storage import read_parquet
 from .operators import generation
 
 # query_rag_database.py:109 / Auto_query_rag_database.py:92
@@ -50,7 +51,7 @@ EXIT_KEYWORDS = {"end", "stop", "quit", "bye", "exit"}
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def embed_query(spark: SparkSession, text: str, dim: int) -> list[float]:

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
 from .observe import observed, with_observation
+from .storage import read_parquet
 
 NA = "N/A"  # the reference's null sentinel (chunk_cisa_kev.py:*'N/A'*)
 
@@ -163,14 +164,25 @@ def read_store_or_none(spark, store_path: str):
     store as "first run" would silently discard or duplicate its
     contents on the next healthy pass.
 
+    The store is opened with ``storage.read_parquet``: its schema is
+    read on the driver from the footer of the store's first data file,
+    so no schema-inference job runs. That footer read is also what
+    keeps a damaged store loud: a corrupt first footer raises there
+    even under ``spark.sql.files.ignoreCorruptFiles=true``, where
+    Spark's own inference would skip the file. With no data file,
+    ``read_parquet`` hands the path to ``spark.read.parquet``, whose
+    two errors above are classified here.
+
     UNABLE_TO_INFER_SCHEMA alone is NOT proof of emptiness: under
-    ``spark.sql.files.ignoreCorruptFiles=true`` a store whose every
-    file is corrupt raises the same error. So the empty-dir claim is
-    verified against the directory listing — if any data-looking file
-    exists, the error propagates. (Listing via os: this engine's
-    stores are file:// paths; an object-store port would swap in the
-    Hadoop FS API here.) Shared by every merge/append sink in the
-    engine so the failure policy can't drift per-call-site."""
+    ``spark.sql.files.ignoreCorruptFiles=true`` (with
+    ``spark.sql.parquet.mergeSchema``, which ``read_parquet`` leaves to
+    Spark's inference) a store whose every file is corrupt raises the
+    same error. So the empty-dir claim is verified against the
+    directory listing — if any data-looking file exists, the error
+    propagates. (Listing via os: this engine's stores are file://
+    paths; an object-store port would swap in the Hadoop FS API here.)
+    Shared by every merge/append sink in the engine so the failure
+    policy can't drift per-call-site."""
     import os
 
     from pyspark.errors import AnalysisException
@@ -192,7 +204,7 @@ def read_store_or_none(spark, store_path: str):
         return False
 
     try:
-        return spark.read.parquet(store_path)
+        return read_parquet(spark, store_path)
     except AnalysisException as e:
         s = str(e)
         if "PATH_NOT_FOUND" in s:

@@ -12,14 +12,95 @@ scale the corpus lives as:
 - **salted** keys where one value dominates (the empty-text
   fingerprint, a boilerplate dup cluster) -> two-phase aggregation
   that spreads the hot key over ``n_salts`` reducers.
+
+``read_parquet`` is the engine's table open: ``spark.read.parquet``
+without the one-task schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+_GLOB_CHARS = frozenset("{}[]*?\\")  # SparkHadoopUtil.isGlobPath
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+
+
+def _java(spark, name: str):
+    """JVM class ``name``, bound without py4j's one lookup per package
+    level (about 1 ms each)."""
+    from py4j.java_gateway import JavaClass
+    return JavaClass(name, spark.sparkContext._gateway._gateway_client)
+
+
+def read_parquet(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with its schema read on the driver,
+    so opening the table runs no Spark job.
+
+    Spark's inference (``mergeSchema`` off) runs a one-task job that
+    reads the footer of the table's first data file, the least by path
+    string, and converts it. This reads that same footer through py4j:
+    the file comes from ``HadoopFSUtils.parallelListLeafFiles``, the
+    listing Spark's file index uses (``_``/``.`` names skipped,
+    partition directories entered; like the index, it lists in a job
+    only past ``parallelPartitionDiscovery.threshold`` directories),
+    and the footer is converted by
+    ``ParquetFileFormat.readSchemaFromFooter`` with the session's
+    ``ParquetToSparkSchemaConverter``, so ``binaryAsString``,
+    ``int96AsTimestamp``, ``inferTimestampNTZ`` and ``nanosAsLong``
+    apply as they do there. The result is
+    ``spark.read.schema(that).parquet(path)``.
+
+    A corrupt first footer raises from the footer read, whatever
+    ``spark.sql.files.ignoreCorruptFiles`` says. Where no single footer
+    is Spark's answer, ``spark.read.parquet(path)`` runs unchanged: a
+    glob, ``spark.sql.parquet.mergeSchema``, a summary file, or no data
+    file at all (a missing path or an empty directory, for which Spark
+    raises ``PATH_NOT_FOUND`` or ``UNABLE_TO_INFER_SCHEMA`` without a
+    job)."""
+    jss = spark._jsparkSession
+    sql_conf = jss.sessionState().conf()
+    if sql_conf.isParquetSchemaMergingEnabled() or _GLOB_CHARS & set(path):
+        return spark.read.parquet(path)
+    hadoop_conf = jss.sessionState().newHadoopConf()
+    roots = _java(spark, "scala.jdk.javaapi.CollectionConverters").asScala(
+        _java(spark, "java.util.Collections").singletonList(
+            _java(spark, "org.apache.hadoop.fs.Path")(path))).toSeq()
+    leaves = _java(spark, "org.apache.spark.util.HadoopFSUtils") \
+        .parallelListLeafFiles(
+            jss.sparkContext(), roots, hadoop_conf, None, False, True,
+            sql_conf.parallelPartitionDiscoveryThreshold(),
+            sql_conf.parallelPartitionDiscoveryParallelism()) \
+        .head()._2()
+    files = leaves.toArray(_java(spark, "scala.reflect.ClassTag").apply(
+        _java(spark, "java.lang.Class").forName(
+            "org.apache.hadoop.fs.FileStatus")))
+    # Spark orders by Path.toString: fetch every one in one call (NUL
+    # is in no path; FileStatus.toString would stat each local file)
+    listed = _java(spark, "scala.collection.immutable.ArraySeq") \
+        .unsafeWrapArray(_java(spark, "org.apache.hadoop.fs.FileUtil")
+                         .stat2Paths(files)).mkString("\0")
+    paths = listed.split("\0") if listed else []
+    if not paths or any(p.rsplit("/", 1)[-1] in _SUMMARY_FILES
+                        for p in paths):
+        return spark.read.parquet(path)
+    first = files[paths.index(min(paths))]
+    footer = _java(spark, _PARQUET + "ParquetFooterReader").readFooter(
+        _java(spark, "org.apache.parquet.hadoop.util.HadoopInputFile")
+        .fromStatus(first, hadoop_conf),
+        _java(spark, "org.apache.parquet.format.converter."
+                     "ParquetMetadataConverter").SKIP_ROW_GROUPS)
+    schema = _java(spark, _PARQUET + "ParquetFileFormat").readSchemaFromFooter(
+        _java(spark, "org.apache.parquet.hadoop.Footer")(first.getPath(),
+                                                         footer),
+        _java(spark, _PARQUET + "ParquetToSparkSchemaConverter")(sql_conf))
+    return spark.read.schema(StructType.fromJson(json.loads(schema.json()))) \
+        .parquet(path)
 
 
 def write_partitioned(df: DataFrame, path: str, *partition_cols: str,

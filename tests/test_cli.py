@@ -114,6 +114,37 @@ def record_collects(spark, monkeypatch):
     return collects
 
 
+@pytest.mark.parametrize("loop", ["query", "auto"])
+def test_loop_start_runs_one_job(spark, sf_dir, job_count, monkeypatch,
+                                 loop):
+    """Opening ``documents`` and ``embeddings`` runs no job, so the only
+    job before the first prompt is the dimension probe."""
+    sc = spark.sparkContext
+    p = f"start-{uuid.uuid4()}"
+    probe = cli._embedding_dim
+
+    def probe_in_own_group(embeddings, sf_dir):
+        sc.setJobGroup(f"{p}-probe", "dimension probe")
+        try:
+            return probe(embeddings, sf_dir)
+        finally:
+            sc.setJobGroup(f"{p}-open", "loop start")
+
+    def first_prompt(prompt):
+        sc.setJobGroup(f"{p}-turns", prompt)
+        return "exit"
+
+    monkeypatch.setattr(cli, "_embedding_dim", probe_in_own_group)
+    run = cli.run_query_loop if loop == "query" else cli.run_auto_loop
+    sc.setJobGroup(f"{p}-open", "loop start")
+    try:
+        run(spark, sf_dir, input_fn=first_prompt, print_fn=lambda s: None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert job_count(f"{p}-open") == 0
+    assert job_count(f"{p}-probe") == 1
+
+
 def test_chat_and_follow_up_turns_run_no_job(spark, sf_dir, job_count):
     """A chat-mode turn builds prompt and answer on the driver, and a
     follow-up turn reuses the rows the previous turn collected: neither
@@ -304,10 +335,11 @@ def test_ingest_idempotent(spark, sf_dir, tmp_path, sink):
 
 
 def test_ingest_batch_job_counts(spark, sf_dir, tmp_path, job_count):
-    """One write job per batch and no count job: a first batch runs the
-    documents schema read and the write (2 jobs); a later one adds the
-    store's schema read and its key broadcast (4 jobs), whether it adds
-    rows or none."""
+    """One write job per batch, no count job and no schema-inference
+    job (``read_parquet`` reads the documents' and the store's schemas
+    from a footer on the driver): a first batch runs the write (1 job);
+    a later one adds the store's key broadcast (2 jobs), whether it
+    adds rows or none."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     half, full = str(tmp_path / "half"), str(tmp_path / "full")
     docs.where("doc_id % 2 = 0").write.parquet(f"{half}/documents.parquet")
@@ -326,9 +358,9 @@ def test_ingest_batch_job_counts(spark, sf_dir, tmp_path, job_count):
     assert res[1]["added"] > 0 and res[2]["added"] == 0
     assert res[2]["total"] == res[1]["total"] == res[2]["offered"]
     assert res[1]["total"] == res[0]["added"] + res[1]["added"]
-    assert job_count(f"{p}-0") <= 2
-    assert job_count(f"{p}-1") <= 4
-    assert job_count(f"{p}-2") <= 4
+    assert job_count(f"{p}-0") <= 1
+    assert job_count(f"{p}-1") <= 2
+    assert job_count(f"{p}-2") <= 2
 
 
 def test_main_argparse_ingest(tmp_path, monkeypatch, capsys):

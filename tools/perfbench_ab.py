@@ -10,12 +10,13 @@ imports nothing from ``perfbench/``.
 
 It prints one line per seed (``op_cpu_ms``, ``setup_s``, ``correct``
 and ``failed_ops_ratio`` for both sides), then each side's median and
-quartiles, each side's mean failed-op ratio, the parent's interquartile
-range, the change's win count (pairs where its ``op_cpu_ms`` is lower)
-and whether a gain claim holds: every run is correct, the change's mean
-failed-op ratio is not above the parent's, the change wins at least 9
-of every 10 pairs, and its median is below the parent's by more than
-the parent's IQR.
+quartiles and each side's mean failed-op ratio. For each gated metric
+(``op_cpu_ms`` and ``setup_s``, both lower-is-better) it prints the
+parent's interquartile range, the change's win count (pairs where the
+change's value is lower) and whether a gain claim on that metric holds:
+every run is correct, the change's mean failed-op ratio is not above
+the parent's, the change wins at least 9 of every 10 pairs, and its
+median is below the parent's by more than the parent's IQR.
 
     python3 tools/perfbench_ab.py --parent ../parent --change . \\
         --workload rag_turns --seeds 41-44,51-56
@@ -31,6 +32,7 @@ import subprocess
 import sys
 
 SIDES = ("parent", "change")
+METRICS = ("op_cpu_ms", "setup_s")  # BENCHMARK.json's gated metrics
 SECONDS = 10  # the run length BENCHMARK.json fixes for both sides
 
 
@@ -70,28 +72,28 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 
 def summarize(runs: list[dict]) -> dict:
-    out = {}
-    for side in SIDES:
-        for metric in ("op_cpu_ms", "setup_s"):
-            q1, med, q3 = quartiles([r[side][metric] for r in runs])
-            out[f"{side}.{metric}"] = {"median": med, "q1": q1, "q3": q3}
-    p = out["parent.op_cpu_ms"]
-    c = out["change.op_cpu_ms"]
-    wins = sum(r["change"]["op_cpu_ms"] < r["parent"]["op_cpu_ms"]
-               for r in runs)
-    iqr = p["q3"] - p["q1"]
-    gap = p["median"] - c["median"]
+    """Per side and metric, ``{side}.{metric}`` quartiles; per metric,
+    ``metric`` -> wins, IQR, median gap and whether its claim holds."""
     failed = {side: statistics.fmean(r[side]["failed_ops_ratio"]
                                      for r in runs) for side in SIDES}
     all_correct = all(r[s]["correct"] for r in runs for s in SIDES)
-    out.update(pairs=len(runs), change_wins=wins, parent_iqr=iqr,
-               median_gap=gap,
-               median_change_pct=100.0 * -gap / p["median"],
-               failed_ops_ratio=failed, all_correct=all_correct,
-               claim_holds=(all_correct
-                            and failed["change"] <= failed["parent"]
-                            and wins * 10 >= 9 * len(runs)
-                            and gap > iqr))
+    clean = all_correct and failed["change"] <= failed["parent"]
+    out = {"pairs": len(runs), "failed_ops_ratio": failed,
+           "all_correct": all_correct}
+    for metric in METRICS:
+        for side in SIDES:
+            q1, med, q3 = quartiles([r[side][metric] for r in runs])
+            out[f"{side}.{metric}"] = {"median": med, "q1": q1, "q3": q3}
+        p = out[f"parent.{metric}"]
+        c = out[f"change.{metric}"]
+        wins = sum(r["change"][metric] < r["parent"][metric] for r in runs)
+        iqr = p["q3"] - p["q1"]
+        gap = p["median"] - c["median"]
+        out[metric] = {"change_wins": wins, "parent_iqr": iqr,
+                       "median_gap": gap,
+                       "median_change_pct": 100.0 * -gap / p["median"],
+                       "claim_holds": (clean and wins * 10 >= 9 * len(runs)
+                                       and gap > iqr)}
     return out
 
 
@@ -121,17 +123,19 @@ def main(argv=None) -> int:
 
     s = summarize(runs)
     for side in SIDES:
-        for metric in ("op_cpu_ms", "setup_s"):
+        for metric in METRICS:
             q = s[f"{side}.{metric}"]
             print(f"{side:6} {metric:9} median {q['median']:.3f} "
                   f"quartiles {q['q1']:.3f}/{q['q3']:.3f}")
     f = s["failed_ops_ratio"]
     print(f"failed_ops_ratio mean parent {f['parent']:g} "
-          f"change {f['change']:g}")
-    print(f"parent op_cpu_ms IQR {s['parent_iqr']:.1f}; median gap "
-          f"{s['median_gap']:.1f} ({s['median_change_pct']:+.1f} %); change "
-          f"wins {s['change_wins']}/{s['pairs']}; all correct "
-          f"{s['all_correct']}; claim holds {s['claim_holds']}")
+          f"change {f['change']:g}; all correct {s['all_correct']}")
+    for metric in METRICS:
+        m = s[metric]
+        print(f"{metric}: parent IQR {m['parent_iqr']:.3f}; median gap "
+              f"{m['median_gap']:.3f} ({m['median_change_pct']:+.1f} %); "
+              f"change wins {m['change_wins']}/{s['pairs']}; claim holds "
+              f"{m['claim_holds']}")
     return 0
 
 
