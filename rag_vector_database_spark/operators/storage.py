@@ -261,10 +261,10 @@ def _isolated_session(spark):
     """A private session that still SEES the caller's runtime SQL
     confs: ``newSession()`` inherits only builder-time configs, so a
     caller who e.g. set ``spark.sql.legacy.parquet.nanosAsLong`` at
-    runtime (session.read_events does) would lose it — the private
-    session's reads would fail where the caller's succeed. Copy every
-    explicitly-set conf (``SET`` lists exactly those) before applying
-    this module's own overrides on top.
+    runtime (streaming.events.read_events_stream does) would lose it —
+    the private session's reads would fail where the caller's succeed.
+    Copy every explicitly-set conf (``SET`` lists exactly those) before
+    applying this module's own overrides on top.
 
     The session is CACHED per (SparkContext, thread) — applicationId
     keying ties the entry to a live context, the thread component makes

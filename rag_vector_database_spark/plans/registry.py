@@ -6,9 +6,13 @@ with the equivalent ANSI SQL that DuckDB runs on the same parquet files
 lineitem events documents embeddings). The driver compares row count +
 schema + order-insensitive value hash, sorting columns by name — so
 every computed column is aliased identically on both sides and every
-float is rounded to 6dp on both sides.
+float is rounded to 6dp on both sides. ``queries()`` and
+``oracle_sql()`` list the entries in registration order.
 
 Builders live in operators/*; this module only wires them to data.
+Every source table is opened the way the engine opens one,
+``storage.read_parquet`` (``events`` through ``session.read_events``),
+so a builder call runs no schema-inference job.
 """
 
 from __future__ import annotations
@@ -22,56 +26,15 @@ from pyspark.sql import functions as F
 from ..functions import hashing
 from ..functions import text as text_fns
 from ..operators import retrieval
+from ..operators import storage as storage_ops
+from ..session import read_events
 
 # ---------------------------------------------------------------------------
 # helpers
 
-# LAZY DataFrame handles for the immutable source tables, keyed by
-# (applicationId, sf_dir, name). This caches a PLAN, not data: no
-# block is materialized, every action still recomputes from parquet —
-# it only stops ``spark.read.parquet`` re-running its footer/schema
-# job on every builder call (~0.13 s/call warm; the suite made ~100
-# such calls per bench run). Registering a table once in a catalog
-# and referencing it per query is the production equivalent; keying
-# on applicationId ties entries to a live context. Source tables
-# under an sf_dir are immutable; scratch/sink paths never go through
-# _t and stay uncached. A tool that rebuilds an sf_dir in place calls
-# clear_table_handles: a cached handle keeps its old file listing.
-_T_HANDLES: dict = {}
-_T_HANDLES_CAP = 64
-
-
-def clear_table_handles(sf_dir: str | None = None) -> None:
-    """Drop the cached handles of ``sf_dir``'s tables (of every sf_dir
-    when None), so the next builder call re-lists the files."""
-    for key in [k for k in _T_HANDLES if sf_dir is None or k[1] == sf_dir]:
-        del _T_HANDLES[key]
-
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _T_HANDLES.get(key)
-    if df is None:
-        while len(_T_HANDLES) >= _T_HANDLES_CAP:
-            _T_HANDLES.pop(next(iter(_T_HANDLES)))
-        _T_HANDLES[key] = df = spark.read.parquet(
-            f"{sf_dir}/{name}.parquet")
-    return df
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet with ts normalized to a microsecond timestamp
-    (handles both the nanos and micros physical encodings). Same lazy
-    plan-handle reuse as _t (the normalization is deterministic per
-    file, and the handle holds no data)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__events_norm")
-    df = _T_HANDLES.get(key)
-    if df is None:
-        from ..session import read_events
-        while len(_T_HANDLES) >= _T_HANDLES_CAP:
-            _T_HANDLES.pop(next(iter(_T_HANDLES)))
-        _T_HANDLES[key] = df = read_events(spark, sf_dir)
-    return df
+    return storage_ops.read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 _QVEC_CACHE: dict[str, list[float]] = {}
@@ -164,365 +127,24 @@ class QueryDef:
     name: str
     builder: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None -> driver does rows-only check
-    headline: bool = False  # included in bench.py
 
 
 REGISTRY: list[QueryDef] = []
 
 
-def register(name: str, oracle: str | None, headline: bool = False):
+def register(name: str, oracle: str | None):
     def deco(fn):
-        REGISTRY.append(QueryDef(name, fn, oracle, headline))
+        REGISTRY.append(QueryDef(name, fn, oracle))
         return fn
     return deco
 
 
-# Explicit verification order for ``queries()``/``oracle_sql()``.
-# External graders sample a prefix of the inventory, so the prefix is
-# rotated each round (per the round-2 grader's explicit instruction:
-# rotate until every entry has had an externally-graded pass): a
-# handful of stable canaries (previously-verified anchors that catch
-# regressions) followed by the entries that have not yet had an
-# external verification pass. Rotation does NOT reduce continuous
-# verification — EVERY registry entry, rotated in or out, runs under
-# the same DuckDB-oracle comparison in tests/test_parity.py on every
-# pytest run, and the full-inventory driver simulation
-# (.claude/skills/verify/drive.py) replicates the external gate
-# locally across all entries. Names listed here come first, in this
-# order; everything else follows in registration order. Registration
-# order (REGISTRY) is untouched — tests and bench use it.
-WINDOW_PRIORITY: list[str] = [
-    # -- canaries (driver-green every round; regression sentinels) ---
-    "knn_bruteforce",
-    "retrieval_funnel",
-    "chunk_documents",
-    "exact_dedup",
-    "minhash_neardup",
-    "pricing_summary",
-    # -- r14 window: (a) the 4 round-13 additions (round-13 verdict
-    #    task 1: the sub-N^1.5 SemDeDup pair + the two invariant
-    #    contracts, graded first); (b) the 15 r07-cohort staleness
-    #    remainder (last graded round 7, pre-audited at 10x under
-    #    probe v3 in round 12); (c) the first 25 of the 44 r08-cohort
-    #    names (last graded round 8, pre-audited in round 13: 10x
-    #    total ratio 1.48, max 2.83), alphabetical. The 19 remaining
-    #    r08 names carry to the r15 window for the 50-slot budget. ---
-    "semantic_dedup_two_level",
-    "semantic_dedup_delta",
-    "approx_sketches_invariants",
-    "brp_ann_recall_invariant",
-    "multimodal_blob_meta",
-    "multimodal_frame_stats",
-    "ngram_jaccard_pairs",
-    "pivot_status_by_month",
-    "pq_adc_knn",
-    "quality_score",
-    "retrieval_funnel_ivf",
-    "retrieval_lifecycle_pipeline",
-    "semantic_dedup",
-    "shipping_priority",
-    "simhash_neardup",
-    "stats_moments",
-    "token_stats",
-    "validation_filter",
-    "zscore_by_type",
-    "asof_last_purchase",
-    "chunk_documents_soft",
-    "chunk_stats",
-    "chunking_mode_ledger",
-    "context_assembly",
-    "context_coverage",
-    "dedup_cluster_size_histogram",
-    "doc_catalog",
-    "embed_documents",
-    "embedding_label_margin",
-    "events_coercion",
-    "events_sessionize",
-    "events_sliding",
-    "events_tumbling",
-    "incremental_antijoin",
-    "ivf_cell_stats",
-    "leakage_safe_split",
-    "market_share_join",
-    "multi_source_union",
-    "orders_per_month",
-    "orders_shipped_30d",
-    "retry_pass",
-    "salted_count_skewed",
-    "score_calibration_bins",
-    "semi_join_customers",
-    # ----- end of the graded 50-prefix (6 canaries + 4 r13
-    #       additions + 15 r07 + 25 r08 staleness re-grades) ---------
-    # -- r08-cohort staleness remainder (carries to the r15 window) --
-    "sq8_calibration",
-    "streaming_dedup",
-    "streaming_enrich",
-    "streaming_ivf_append",
-    "streaming_lifecycle_pipeline",
-    "streaming_sessionize",
-    "streaming_sliding",
-    "streaming_stateful_counts",
-    "streaming_stream_join",
-    "streaming_tumbling",
-    "token_budget_mixture",
-    "top_customers_per_nation",
-    "transcript_assembly",
-    "upsert_conflict_audit",
-    "upsert_latest",
-    "url_extract",
-    "value_percentiles",
-    "window_functions",
-    "word_freq",
-    # -- previously graded (r01-r13 green rows); listed so the
-    #    no-oracle entries below can never float into the prefix. ----
-    "semantic_dedup_auto",
-    "cosine_neardup_blocked_auto",
-    "minhash_recall_eval_sampled",
-    "csv_sink_roundtrip",
-    "customer_distribution",
-    "dominant_part_suppliers",
-    "knn_batch",
-    "orc_sink_roundtrip",
-    "part_value_concentration",
-    "resample_fill_forward",
-    "retention_cohorts",
-    "revenue_moving_avg",
-    "scd2_intervals",
-    "sql_api_shipping_priority",
-    "stats_correlation",
-    "arrow_grouped_centroid_norm",
-    "arrow_vector_norms",
-    "binary_quant_knn",
-    "boilerplate_tile_dedup",
-    "cosine_neardup",
-    "cosine_neardup_blocked",
-    "dedup_keep_best",
-    "direct_retrieval",
-    "doc_fingerprint",
-    "edit_distance_neardup",
-    "ingest_lifecycle_pipeline",
-    "ivf_knn",
-    "ivf_knn_multiprobe",
-    "ivf_partitioned_knn",
-    "ivf_recall_eval",
-    "ivfpq_knn",
-    "kev_text_assembly",
-    "kmeans_lloyd",
-    "kmeans_silhouette",
-    "knn_metadata_filtered",
-    "knn_quantized",
-    "knn_score_stats",
-    "lang_id",
-    "langid_confusion",
-    "minhash_dedup_clusters",
-    "minhash_delta_pairs",
-    "minhash_recall_eval",
-    "mrl_truncated_knn",
-    "multimodal_audio_energy",
-    "training_export_keep_best",
-    "quality_gate_calibration_matrix",
-    "stratified_shard_content_mix",
-    "epoch_sample_manifest",
-    "decontamination_delta_screen",
-    "effective_token_budget",
-    "eval_contamination_attribution",
-    "large_orders",
-    "small_order_revenue",
-    "volume_shipping",
-    "returned_items",
-    "promo_revenue_share",
-    "alpha_mixture_weights",
-    "bigram_lm_quality",
-    "bloom_prefilter_antijoin",
-    "bpe_merges",
-    "bpe_token_counts",
-    "c4_quality_flags",
-    "cms_heavy_hitters",
-    "cross_modal_retrieval",
-    "daily_drop_pipeline",
-    "domain_cap_sample",
-    "domain_mixture_weights",
-    "dsir_importance",
-    "embedding_dim_stats",
-    "embedding_outlier_topk",
-    "gopher_quality_flags",
-    "hard_negatives",
-    "incremental_agg_merge",
-    "ivf_kmeans_knn",
-    "label_centroid_spread",
-    "manifest_sink_roundtrip",
-    "minhash_keep_best",
-    "multimodal_resize_stats",
-    "pagerank_nations",
-    "phash_blob_neardup",
-    "quality_blend_rank",
-    "retrieval_ndcg_eval",
-    "schema_evolution_read",
-    "token_collocations",
-    "token_entropy",
-    "unigram_quality",
-    "video_frame_dedup",
-    "weighted_domain_sample",
-    "mixture_epoch_schedule",
-    "decontamination_threshold_sensitivity",
-    "dedup_survivorship_audit",
-    "shard_content_mix",
-    "time_weighted_avg",
-    "ttl_dedup_events",
-    "benchmark_decontaminate",
-    "bucketed_join_colocated",
-    "cheapest_line_per_part",
-    "compact_small_files",
-    "conversion_funnel",
-    "dataset_split",
-    "discounted_revenue",
-    "doc_length_histogram",
-    "dormant_rich_customers",
-    "events_props_json",
-    "events_session_window_batch",
-    "events_value_band_join",
-    "ivf_delta_assign",
-    "key_skew_profile",
-    "knn_adaptive_dispatch",
-    "late_shipment_priority",
-    "local_supplier_volume",
-    "pack_sequences",
-    "pandas_on_spark_summary",
-    "pipeline_chunk_embed_knn",
-    "product_type_profit",
-    "quantile_buckets",
-    "redact_pii",
-    "repetition_stats",
-    "revenue_forecast",
-    "rolling_fingerprint",
-    "set_except_all",
-    "set_intersect_all",
-    "ship_speed_priority",
-    "stratified_sample",
-    "streaming_minhash_pairs",
-    "supplier_cnt_by_part",
-    "suppliers_kept_waiting",
-    "tfidf_top_terms",
-    "top_supplier_revenue",
-    "unpivot_order_metrics",
-    "variant_props_shred",
-    "xml_sink_roundtrip",
-    "semantic_decontaminate",
-    "export_shard_manifest",
-    "streaming_late_data_audit",
-    "ivf_rebalance_planner",
-    "training_export_pipeline",
-    "adaptive_quality_threshold",
-    "attribution_first_touch",
-    "cdc_apply_changelog",
-    "centroid_similarity_matrix",
-    "cuped_adjusted_metric",
-    "curriculum_interleave",
-    "data_quality_checks",
-    "dedup_tokens_keep_first",
-    "event_transition_matrix",
-    "footer_agg_stats",
-    "forecast_backtest_eval",
-    "freshness_by_type",
-    "funnel_step_latency",
-    "hash_reservoir_sample",
-    "k_anonymity_audit",
-    "lang_jsd_matrix",
-    "largest_remainder_alloc",
-    "manifest_time_travel",
-    "map_literal_enrich",
-    "maxsim_doc_knn",
-    "minhash_delta_clusters",
-    "mmr_rerank",
-    "ngram_novelty",
-    "normalized_text_dedup",
-    "observed_ingest",
-    "postings_delta_merge",
-    "psi_value_drift",
-    "quarantine_split",
-    "range_sorted_scan",
-    "rolling_anomaly_days",
-    "salted_join_skewed",
-    "seasonal_decompose_daily",
-    "snapshot_diff",
-    "streaming_idle_timeouts",
-    "streaming_upsert_partitioned",
-    "time_decayed_sum",
-    "triangle_count",
-    "vocab_prune_coverage",
-    "zorder_topk",
-    "cross_source_overlap",
-    "unique_token_yield",
-    "minhash_band_yield",
-    "embedding_version_drift",
-    "dedup_threshold_sensitivity",
-    "neardup_transitivity_audit",
-    "kmv_distinct_tokens",
-    "containment_vs_jaccard_matrix",
-    "tokenizer_fertility_by_lang",
-    "hashed_sample_quantiles",
-    "pq_code_utilization",
-    "simhash_threshold_sensitivity",
-    "pair_degree_histogram",
-    "streaming_kmv_merge",
-    "pq_rank_fidelity",
-    "quality_gate_source_matrix",
-    "dedup_drop_provenance",
-    "chunk_store_dedup_stats",
-    "lsh_banding_planner",
-    "quantizer_staleness_audit",
-    "ann_recall_ladder",
-    "takedown_provenance_cascade",
-    "cube_lineitem",
-    "rollup_orders",
-    "grouping_sets_orders",
-    "set_except",
-    "set_intersect",
-    "api_listing_scan",
-    "api_listing_stream",
-    "bm25_topk",
-    "chunk_spans_udtf",
-    "curation_pipeline",
-    "duplicated_ngram_spans",
-    "hybrid_rrf_fusion",
-    "jsonl_sink_roundtrip",
-    "rag_answer_turn",
-    "rag_answer_turn_udf",
-    "rag_followup_turn",
-    "transcript_projection",
-    "url_canonicalize",
-    "weighted_mean_udaf",
-    "gdpr_delete_partitioned",
-    "merkle_reconcile",
-    "trajectory_knn",
-    # -- round-14 additions (r15 grading queue; registered post-window
-    #    per the addition cap) ---------------------------------------
-    "semantic_dedup_delta_two_level",
-    "semdedup_block_recall",
-    "semdedup_block_recall_sampled",
-    "semantic_dedup_delta_partitioned",
-    "margin_bitext_mining",
-    # -- no-oracle entries: NEVER inside the graded prefix (the
-    #    driver can only record err:no_oracle for them; recall /
-    #    behavior gates live in tests/test_mllib_index.py) -----------
-    "brp_ann_topk",
-    "approx_sketches",
-]
-
-
-def _ordered() -> list[QueryDef]:
-    by_name = {q.name: q for q in REGISTRY}
-    head = [by_name[n] for n in WINDOW_PRIORITY if n in by_name]
-    head_names = set(WINDOW_PRIORITY)
-    return head + [q for q in REGISTRY if q.name not in head_names]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {q.name: q.builder for q in _ordered()}
+    return {q.name: q.builder for q in REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {q.name: q.oracle for q in _ordered() if q.oracle is not None}
+    return {q.name: q.oracle for q in REGISTRY if q.oracle is not None}
 
 
 # ---------------------------------------------------------------------------
@@ -536,8 +158,7 @@ SELECT e.vec_id, round({dot}, 6) AS score
 FROM embeddings e, q
 ORDER BY score DESC, e.vec_id
 LIMIT 10
-""".format(dot=dd_dot("e.embedding", "q.qv")),
-    headline=True)
+""".format(dot=dd_dot("e.embedding", "q.qv")))
 def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#47: exact top-k cosine (normalized => dot) — scan + top-k, no shuffle."""
     qv = query_vector(spark, sf_dir)
@@ -590,8 +211,7 @@ ORDER BY relevance_score DESC, score DESC, doc_id
 LIMIT 5
 """.format(dot=dd_dot("e.embedding", "q.qv"),
            qtok=dd_distinct_tokens("text"),
-           dtok=dd_distinct_tokens("d.text")),
-    headline=True)
+           dtok=dd_distinct_tokens("d.text")))
 def q_retrieval_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#51: the reference's two-stage funnel — knn(50) -> lexical rerank
     -> threshold -> top-5, with snippet projection (#44)."""
@@ -706,45 +326,6 @@ def q_ivf_partitioned_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Relational core
-
-@register(
-    "pricing_summary",
-    oracle="""
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 6) AS sum_qty,
-       round(sum(l_extendedprice), 6) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 6) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 6) AS sum_charge,
-       round(avg(l_quantity), 6) AS avg_qty,
-       round(avg(l_extendedprice), 6) AS avg_price,
-       round(avg(l_discount), 6) AS avg_disc,
-       CAST(count(*) AS BIGINT) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-""",
-    headline=True)
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary: partial-agg (map-side combine)
-    then a tiny shuffle on the 2-key group — the canonical scale-safe agg."""
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-                 F.round(F.sum("l_extendedprice"), 6).alias("sum_base_price"),
-                 F.round(F.sum(disc_price), 6).alias("sum_disc_price"),
-                 F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 6).alias("sum_charge"),
-                 F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-                 F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
-                 F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-                 F.count(F.lit(1)).cast("long").alias("count_order"))
-            .orderBy("l_returnflag", "l_linestatus"))
-
-
-# ---------------------------------------------------------------------------
 # Chunking + corpus construction (SURVEY §2 #33-37, #20, #24-26, #56)
 
 from ..operators import chunking  # noqa: E402
@@ -758,8 +339,7 @@ _CHUNK_SIZE, _CHUNK_OVERLAP = 120, 20  # scaled-down reference params
 @register(
     "chunk_documents",
     oracle="WITH chunks AS ({cte}) SELECT * FROM chunks".format(
-        cte=chunking.dd_chunk_cte(_CHUNK_SIZE, _CHUNK_OVERLAP)),
-    headline=True)
+        cte=chunking.dd_chunk_cte(_CHUNK_SIZE, _CHUNK_OVERLAP)))
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#33-35: fixed-stride chunk explode with ids/ordinals — pure
     sequence/substring built-ins, no UDF, no shuffle."""
@@ -846,7 +426,7 @@ FROM events
 def q_events_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#27,42: metadata scalar coercion + JSON extraction + date
     normalization over the events table."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     return e.select(
         "event_id",
         F.coalesce(F.get_json_object("props", "$.k").cast("int"), F.lit(-1)).alias("k_val"),
@@ -915,8 +495,7 @@ g AS (
 )
 SELECT f.doc_id, f.fingerprint, g.canonical_id, g.group_size
 FROM fp f JOIN g USING (fingerprint)
-""".format(norm=DD_NORM.format(c="text")),
-    headline=True)
+""".format(norm=DD_NORM.format(c="text")))
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: normalized-content fingerprint -> canonical id per
     group. One shuffle on a 32-byte key; the 100 TB workhorse."""
@@ -976,8 +555,7 @@ WHERE CASE WHEN len(list_distinct(list_concat(x.sh, y.sh))) > 0
 
 @register(
     "minhash_neardup",
-    oracle="WITH " + _DD_MH_CTES + "\n" + _DD_MH_PAIRS_SELECT + "\n",
-    headline=True)
+    oracle="WITH " + _DD_MH_CTES + "\n" + _DD_MH_PAIRS_SELECT + "\n")
 def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs, exact-Jaccard verified (the scalable
     sub-quadratic dedup: only band-key collisions are compared)."""
@@ -1355,189 +933,10 @@ def q_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Relational breadth (SURVEY §2 "deliberately absent" extensions:
-# multi-way joins, rollup/cube, set ops, ranking windows, range joins)
+# Event-time windows (batch semantics; streaming module mirrors these)
 
 from pyspark.sql import Window  # noqa: E402
 
-
-@register(
-    "market_share_join",
-    oracle="""
-SELECT r_name, round(sum(o_totalprice), 6) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_orders
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name ORDER BY r_name
-""",
-    headline=True)
-def q_market_share_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-way star join: fact orders with broadcast dims (customer/
-    nation/region) — zero shuffle joins, one tiny agg shuffle."""
-    o = _t(spark, sf_dir, "orders")
-    c = F.broadcast(_t(spark, sf_dir, "customer"))
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    r = F.broadcast(_t(spark, sf_dir, "region"))
-    return (o.join(c, o.o_custkey == c.c_custkey)
-            .join(n, c.c_nationkey == n.n_nationkey)
-            .join(r, n.n_regionkey == r.r_regionkey)
-            .groupBy("r_name")
-            .agg(F.round(F.sum("o_totalprice"), 6).alias("revenue"),
-                 F.count(F.lit(1)).cast("long").alias("n_orders"))
-            .orderBy("r_name"))
-
-
-@register(
-    "top_customers_per_nation",
-    oracle="""
-WITH rev AS (
-  SELECT o_custkey, sum(o_totalprice) AS r FROM orders GROUP BY o_custkey
-),
-ranked AS (
-  SELECT n_name, c_name, round(rev.r, 6) AS revenue,
-         CAST(row_number() OVER (PARTITION BY n_name
-              ORDER BY rev.r DESC, c_custkey) AS INT) AS rn
-  FROM rev JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-)
-SELECT n_name, c_name, revenue, rn FROM ranked WHERE rn <= 3
-""")
-def q_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking window: top-3 customers by revenue within each nation."""
-    o = _t(spark, sf_dir, "orders")
-    c = F.broadcast(_t(spark, sf_dir, "customer"))
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    rev = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("r"))
-    w = Window.partitionBy("n_name").orderBy(F.desc("r"), F.col("c_custkey"))
-    return (rev.join(c, rev.o_custkey == c.c_custkey)
-            .join(n, c.c_nationkey == n.n_nationkey)
-            .withColumn("rn", F.row_number().over(w).cast("int"))
-            .where(F.col("rn") <= 3)
-            .select("n_name", "c_name", F.round("r", 6).alias("revenue"), "rn"))
-
-
-@register(
-    "rollup_orders",
-    oracle="""
-SELECT o_orderstatus, o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n,
-       round(sum(o_totalprice), 6) AS total
-FROM orders
-GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-""")
-def q_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals (status -> status+priority -> grand)."""
-    return (_t(spark, sf_dir, "orders")
-            .rollup("o_orderstatus", "o_orderpriority")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.round(F.sum("o_totalprice"), 6).alias("total")))
-
-
-@register(
-    "cube_lineitem",
-    oracle="""
-SELECT l_returnflag, l_linestatus,
-       CAST(count(*) AS BIGINT) AS n,
-       round(sum(l_quantity), 6) AS qty
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-""")
-def q_cube_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over flag/status: all 2^2 grouping sets in one pass."""
-    return (_t(spark, sf_dir, "lineitem")
-            .cube("l_returnflag", "l_linestatus")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.round(F.sum("l_quantity"), 6).alias("qty")))
-
-
-@register(
-    "set_intersect",
-    oracle="""
-SELECT o_custkey AS custkey FROM orders
-INTERSECT
-SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 500
-""")
-def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT: customers that both ordered and hold balance > 500."""
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("custkey"))
-    c = (_t(spark, sf_dir, "customer").where(F.col("c_acctbal") > 500)
-         .select(F.col("c_custkey").alias("custkey")))
-    return o.intersect(c)
-
-
-@register(
-    "set_except",
-    oracle="""
-SELECT c_custkey AS custkey FROM customer
-EXCEPT
-SELECT o_custkey AS custkey FROM orders
-""")
-def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT: customers that never ordered."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("custkey"))
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("custkey"))
-    return c.subtract(o)
-
-
-@register(
-    "semi_join_customers",
-    oracle="""
-SELECT c_custkey, c_name FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-""")
-def q_semi_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join (EXISTS): customers with at least one order."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-            .select("c_custkey", "c_name"))
-
-
-@register(
-    "orders_per_month",
-    oracle="""
-SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       round(sum(o_totalprice), 6) AS total
-FROM orders GROUP BY month ORDER BY month
-""")
-def q_orders_per_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-month aggregation over the order date."""
-    return (_t(spark, sf_dir, "orders")
-            .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_orders"),
-                 F.round(F.sum("o_totalprice"), 6).alias("total"))
-            .orderBy("month"))
-
-
-@register(
-    "orders_shipped_30d",
-    oracle="""
-SELECT o.o_orderkey, CAST(count(l.l_orderkey) AS BIGINT) AS n_shipped_30d
-FROM orders o LEFT JOIN lineitem l
-  ON l.l_orderkey = o.o_orderkey
- AND l.l_shipdate >= o.o_orderdate
- AND l.l_shipdate < o.o_orderdate + INTERVAL 30 DAY
-GROUP BY o.o_orderkey
-""")
-def q_orders_shipped_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join: per order, line items shipped within 30 days of the
-    order date (equi-key + range predicate — stays a hash join on the
-    key with the range as a post-filter, not a cartesian)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    cond = ((li.l_orderkey == o.o_orderkey)
-            & (li.l_shipdate >= o.o_orderdate)
-            & (li.l_shipdate < o.o_orderdate + F.expr("interval 30 days")))
-    return (o.join(li, cond, "left")
-            .groupBy("o_orderkey")
-            .agg(F.count("l_orderkey").cast("long").alias("n_shipped_30d")))
-
-
-# ---------------------------------------------------------------------------
-# Event-time windows (batch semantics; streaming module mirrors these)
 
 @register(
     "events_tumbling",
@@ -1546,11 +945,10 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS ws,
        event_type, CAST(count(*) AS BIGINT) AS n,
        round(sum(value), 6) AS sum_value
 FROM events GROUP BY 1, 2
-""",
-    headline=True)
+""")
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows per event type."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     return (e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).cast("long").alias("n"),
                  F.round(F.sum("value"), 6).alias("sum_value"))
@@ -1578,7 +976,7 @@ FROM slotted GROUP BY 1
 def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1h length, 30m slide): each event lands in two
     overlapping windows."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     return (e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
             .agg(F.count(F.lit(1)).cast("long").alias("n"),
                  F.round(F.avg("value"), 6).alias("avg_value"))
@@ -1609,12 +1007,11 @@ SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
        CAST(min(tus) AS BIGINT) AS session_start_us,
        CAST(max(tus) AS BIGINT) AS session_end_us
 FROM sessions GROUP BY user_id, session_id
-""",
-    headline=True)
+""")
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity gap) per user via
     lag + running sum — the batch mirror of streaming session_window."""
-    e = _events(spark, sf_dir).withColumn("tus", F.unix_micros("ts"))
+    e = read_events(spark, sf_dir).withColumn("tus", F.unix_micros("ts"))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = (Window.partitionBy("user_id").orderBy("tus", "event_id")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1646,7 +1043,7 @@ FROM marked WHERE event_type = 'click'
 def q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for every click, the user's most recent strictly-prior
     purchase timestamp (ordered window, no self-join blowup)."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     return (e.withColumn(
@@ -1661,7 +1058,6 @@ def q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Embedding generation, multimodal plumbing, structured streaming
 
-from ..operators import storage as storage_ops  # noqa: E402
 from ..sources import multimodal  # noqa: E402
 from ..streaming import events as streaming_events  # noqa: E402
 
@@ -2236,54 +1632,6 @@ def q_transcript_assembly(spark: SparkSession, sf_dir: str,
 
 
 @register(
-    "window_functions",
-    oracle="""
-SELECT o_orderkey, o_custkey,
-       CAST(row_number() OVER w AS INT) AS rn,
-       round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-             ORDER BY o_orderdate, o_orderkey
-             ROWS UNBOUNDED PRECEDING), 6) AS running_total,
-       round(lag(o_totalprice) OVER w, 6) AS prev_price,
-       round(lead(o_totalprice) OVER w, 6) AS next_price,
-       CAST(ntile(4) OVER w AS INT) AS quartile
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-""")
-def q_window_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking/offset/frame window breadth over per-customer order
-    history (row_number, running sum, lag/lead, ntile)."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return o.select(
-        "o_orderkey", "o_custkey",
-        F.row_number().over(w).cast("int").alias("rn"),
-        F.round(F.sum("o_totalprice").over(wrun), 6).alias("running_total"),
-        F.round(F.lag("o_totalprice").over(w), 6).alias("prev_price"),
-        F.round(F.lead("o_totalprice").over(w), 6).alias("next_price"),
-        F.ntile(4).over(w).cast("int").alias("quartile"))
-
-
-@register(
-    "grouping_sets_orders",
-    oracle="""
-SELECT o_orderstatus, o_orderpriority, CAST(count(*) AS BIGINT) AS n
-FROM orders
-GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-""")
-def q_grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (disjoint rollups in one pass)."""
-    o = _t(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_gs")
-    return spark.sql("""
-        SELECT o_orderstatus, o_orderpriority,
-               CAST(count(*) AS LONG) AS n
-        FROM orders_gs
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """)
-
-
-@register(
     "value_percentiles",
     oracle="""
 SELECT event_type,
@@ -2296,87 +1644,12 @@ def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per group (the exact twin of
     approx_percentile; at 100 TB swap in approx_percentile with a
     documented error bound)."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     return (e.groupBy("event_type")
             .agg(F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
                  F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
                  F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"))
             .orderBy("event_type"))
-
-
-@register(
-    "pivot_status_by_month",
-    oracle="""
-SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-       CAST(count(*) FILTER (WHERE o_orderstatus = 'O') AS BIGINT) AS n_open,
-       CAST(count(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT) AS n_filled,
-       CAST(count(*) FILTER (WHERE o_orderstatus = 'P') AS BIGINT) AS n_partial
-FROM orders GROUP BY month ORDER BY month
-""")
-def q_pivot_status_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (wide conditional aggregation): order-status counts per
-    month."""
-    o = _t(spark, sf_dir, "orders")
-    month = F.date_format("o_orderdate", "yyyy-MM").alias("month")
-    return (o.groupBy(month)
-            .agg(F.count(F.when(F.col("o_orderstatus") == "O", 1)).cast("long").alias("n_open"),
-                 F.count(F.when(F.col("o_orderstatus") == "F", 1)).cast("long").alias("n_filled"),
-                 F.count(F.when(F.col("o_orderstatus") == "P", 1)).cast("long").alias("n_partial"))
-            .orderBy("month"))
-
-
-@register(
-    "stats_moments",
-    oracle="""
-SELECT l_returnflag,
-       round(stddev_samp(l_quantity), 6) AS sd_qty,
-       round(var_samp(l_discount), 6) AS var_disc,
-       round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-       round(covar_samp(l_quantity, l_extendedprice), 6) AS cov_qty_price
-FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-""")
-def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second-moment statistics per group (stddev/var/corr/covar)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.groupBy("l_returnflag")
-            .agg(F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
-                 F.round(F.var_samp("l_discount"), 6).alias("var_disc"),
-                 F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-                 F.round(F.covar_samp("l_quantity", "l_extendedprice"), 6).alias("cov_qty_price"))
-            .orderBy("l_returnflag"))
-
-
-@register(
-    "shipping_priority",
-    oracle="""
-SELECT l.l_orderkey,
-       round(sum(l.l_extendedprice * (1 - l.l_discount)), 6) AS revenue,
-       strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate, o.o_orderpriority
-FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE o.o_orderdate < TIMESTAMP '1995-03-15'
-  AND l.l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-ORDER BY revenue DESC, l.l_orderkey
-LIMIT 10
-""",
-    headline=True)
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style shipping priority: selective join + agg + top-10
-    (filters push to both scans; top-k avoids a global sort)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    cut = F.lit("1995-03-15").cast("timestamp")
-    return (o.where(F.col("o_orderdate") < cut)
-            .join(li.where(F.col("l_shipdate") > cut),
-                  li.l_orderkey == o.o_orderkey)
-            .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-            .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6)
-                 .alias("revenue"))
-            .select("l_orderkey", "revenue",
-                    F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-                    "o_orderpriority")
-            .orderBy(F.desc("revenue"), "l_orderkey")
-            .limit(10))
 
 
 # ---------------------------------------------------------------------------
@@ -2655,8 +1928,8 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     the error CONTRACT is not: ``approx_sketches_invariants`` grades
     these same sketches against exact DuckDB-replayable bounds
     (HLL 3-sigma band, quantile rank bracketing) — and
-    value_percentiles / stats_moments carry the exact twins."""
-    e = _events(spark, sf_dir)
+    value_percentiles carries the exact percentile twin."""
+    e = read_events(spark, sf_dir)
     return e.agg(
         F.approx_count_distinct("user_id").alias("approx_users"),
         F.approx_count_distinct("event_type").alias("approx_types"),
@@ -2664,96 +1937,8 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile_approx("value", 0.95).alias("p95_value"))
 
 
-@register(
-    "top_supplier_revenue",
-    oracle="""
-WITH rev AS (
-  SELECT l_suppkey, round(sum(l_extendedprice * (1 - l_discount)), 4) AS total_rev
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-    AND l_shipdate <  TIMESTAMP '1995-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name, r.total_rev
-FROM supplier s JOIN rev r ON s.s_suppkey = r.l_suppkey
-WHERE r.total_rev = (SELECT max(total_rev) FROM rev)
-""")
-def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: quarterly revenue per supplier, return the
-    max-revenue supplier(s) (scalar-subquery max, tie-preserving)."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    rev = (li.where((F.col("l_shipdate") >= "1995-01-01")
-                    & (F.col("l_shipdate") < "1995-04-01"))
-           .groupBy("l_suppkey")
-           .agg(F.round(F.sum(F.col("l_extendedprice")
-                              * (1 - F.col("l_discount"))), 4)
-                .alias("total_rev")))
-    mx = rev.agg(F.max("total_rev").alias("mx"))
-    return (s.join(rev, s.s_suppkey == rev.l_suppkey)
-            .join(mx, rev.total_rev == mx.mx)
-            .select("s_suppkey", "s_name", "total_rev"))
-
-
-@register(
-    "large_orders",
-    oracle="""
-SELECT c.c_name, o.o_orderkey,
-       strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
-       round(sum(l.l_quantity), 6) AS total_qty
-FROM orders o
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-GROUP BY c.c_name, o.o_orderkey, o.o_orderdate
-HAVING sum(l.l_quantity) > 150
-""")
-def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: orders whose total quantity exceeds a threshold,
-    with the buying customer (join -> agg -> HAVING)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    c = _t(spark, sf_dir, "customer")
-    return (o.join(li, li.l_orderkey == o.o_orderkey)
-            .join(c, c.c_custkey == o.o_custkey)
-            .groupBy("c_name", "o_orderkey",
-                     F.date_format("o_orderdate", "yyyy-MM-dd")
-                      .alias("orderdate"))
-            .agg(F.round(F.sum("l_quantity"), 6).alias("total_qty"))
-            .where(F.col("total_qty") > 150))
-
-
-@register(
-    "cheapest_line_per_part",
-    oracle="""
-WITH priced AS (
-  SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber,
-         round(l_extendedprice / l_quantity, 6) AS unit_price,
-         min(round(l_extendedprice / l_quantity, 6))
-           OVER (PARTITION BY l_partkey) AS min_price
-  FROM lineitem WHERE l_quantity > 0
-)
-SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber, unit_price
-FROM priced WHERE unit_price = min_price
-""")
-def q_cheapest_line_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape (correlated min subquery): per part, the line(s)
-    achieving the minimum unit price — window min, one shuffle on the
-    part key instead of a per-row correlated rescan."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 0)
-    w = Window.partitionBy("l_partkey")
-    priced = li.select(
-        "l_partkey", "l_suppkey", "l_orderkey", "l_linenumber",
-        F.round(F.col("l_extendedprice") / F.col("l_quantity"), 6)
-         .alias("unit_price"))
-    return (priced
-            .withColumn("min_price", F.min("unit_price").over(w))
-            .where(F.col("unit_price") == F.col("min_price"))
-            .drop("min_price"))
-
-
 # ---------------------------------------------------------------------------
-# Round 2 breadth: #25 dedicated projection, UDF-mounted generation,
-# and three more TPC-H decision-support shapes
+# Round 2 breadth: #25 dedicated projection, UDF-mounted generation
 
 @register(
     "transcript_projection",
@@ -2823,220 +2008,6 @@ REGISTRY[-1].oracle = next(q.oracle for q in REGISTRY
 
 
 @register(
-    "late_shipment_priority",
-    oracle="""
-SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '1995-01-01'
-  AND o.o_orderdate <  TIMESTAMP '1995-07-01'
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-GROUP BY o.o_orderpriority
-""")
-def q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: orders (per priority) having at least one line
-    shipped >60 days after the order date — EXISTS as a left-semi join,
-    one shuffle on the order key, never a row explosion."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    late = li.join(o.select("o_orderkey", "o_orderdate"),
-                   li.l_orderkey == F.col("o_orderkey")) \
-             .where(F.col("l_shipdate") >
-                    F.date_add(F.col("o_orderdate").cast("date"), 60)) \
-             .select("l_orderkey")
-    return (o.where((F.col("o_orderdate") >= "1995-01-01")
-                    & (F.col("o_orderdate") < "1995-07-01"))
-            .join(late, o.o_orderkey == late.l_orderkey, "left_semi")
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_orders")))
-
-
-@register(
-    "supplier_cnt_by_part",
-    oracle="""
-SELECT p.p_brand, p.p_size, CAST(count(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-FROM part p JOIN lineitem l ON l.l_partkey = p.p_partkey
-WHERE p.p_size IN (5, 10, 15, 20)
-  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p.p_brand, p.p_size
-""")
-def q_supplier_cnt_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: distinct supplier counts per (brand, size),
-    excluding an anti-set of suppliers (NOT IN -> broadcast left-anti
-    join; the exclusion list is tiny and never shuffles the fact)."""
-    p = _t(spark, sf_dir, "part").where(F.col("p_size").isin(5, 10, 15, 20))
-    li = _t(spark, sf_dir, "lineitem")
-    bad = _t(spark, sf_dir, "supplier").where(F.col("s_acctbal") < 0) \
-        .select("s_suppkey")
-    return (li.join(bad, li.l_suppkey == bad.s_suppkey, "left_anti")
-            .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-            .groupBy("p_brand", "p_size")
-            .agg(F.countDistinct("l_suppkey").cast("long")
-                 .alias("supplier_cnt")))
-
-
-@register(
-    "dormant_rich_customers",
-    oracle="""
-WITH avg_bal AS (SELECT avg(c_acctbal) AS a FROM customer WHERE c_acctbal > 0),
-active AS (SELECT o_custkey FROM orders GROUP BY o_custkey HAVING count(*) > 5)
-SELECT n.n_name,
-       CAST(count(*) AS BIGINT) AS n_customers,
-       round(sum(c.c_acctbal), 4) AS total_bal
-FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey, avg_bal
-WHERE c.c_acctbal > avg_bal.a
-  AND c.c_custkey NOT IN (SELECT o_custkey FROM active)
-GROUP BY 1
-""")
-def q_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: customers with above-average balance but low
-    order activity (<= 5 orders) — scalar subquery (1-row broadcast
-    cross join), NOT IN as a left-anti join against the pre-aggregated
-    active set, grouped by nation (broadcast dim join)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
-    avg_bal = c.where(F.col("c_acctbal") > 0) \
-        .agg(F.avg("c_acctbal").alias("a"))
-    active = (o.groupBy("o_custkey")
-              .agg(F.count(F.lit(1)).alias("n"))
-              .where(F.col("n") > 5).select("o_custkey"))
-    return (c.join(F.broadcast(avg_bal))
-            .where(F.col("c_acctbal") > F.col("a"))
-            .join(active, c.c_custkey == active.o_custkey, "left_anti")
-            .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-            .groupBy("n_name")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_customers"),
-                 F.round(F.sum("c_acctbal"), 4).alias("total_bal")))
-
-
-@register(
-    "ship_speed_priority",
-    oracle="""
-SELECT CASE WHEN l.l_shipdate < o.o_orderdate + INTERVAL 30 DAY
-            THEN 'FAST' ELSE 'SLOW' END AS ship_speed,
-       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l.l_shipdate <  TIMESTAMP '1997-01-01'
-GROUP BY 1
-""")
-def q_ship_speed_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (conditional two-way counts per shipping class):
-    the test tables carry no l_shipmode/commitdate, so the class is
-    derived — FAST if shipped within 30 days of the order. The
-    priority split is a pair of conditional sums in ONE aggregation
-    pass; the only shuffle is the orderkey join (AQE-planned), and the
-    shipdate window is pushed to the lineitem scan."""
-    li = _t(spark, sf_dir, "lineitem") \
-        .where((F.col("l_shipdate") >= "1996-01-01")
-               & (F.col("l_shipdate") < "1997-01-01"))
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    speed = F.when(
-        F.col("l_shipdate") <
-        F.date_add(F.col("o_orderdate").cast("date"), 30),
-        "FAST").otherwise("SLOW")
-    return (li.join(_t(spark, sf_dir, "orders")
-                    .select("o_orderkey", "o_orderdate", "o_orderpriority"),
-                    li.l_orderkey == F.col("o_orderkey"))
-            .groupBy(speed.alias("ship_speed"))
-            .agg(F.sum(F.when(high, 1).otherwise(0)).cast("long")
-                  .alias("high_line_count"),
-                 F.sum(F.when(high, 0).otherwise(1)).cast("long")
-                  .alias("low_line_count")))
-
-
-@register(
-    "small_order_revenue",
-    oracle="""
-SELECT round(sum(l.l_extendedprice) / 7.0, 6) AS avg_yearly
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-JOIN (SELECT l_partkey, 0.5 * avg(l_quantity) AS half_avg_qty
-      FROM lineitem GROUP BY l_partkey) t ON t.l_partkey = l.l_partkey
-WHERE p.p_brand = 'Brand#23' AND l.l_quantity < t.half_avg_qty
-""")
-def q_small_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape (correlated per-part average): revenue from
-    lines below half their part's average quantity. The correlated
-    rescan becomes ONE partial-agg pass over lineitem (map-side
-    combine shrinks it to a row per part) re-joined on the same
-    partkey — AQE plans both sides of that join from the one shuffle
-    key — and the brand filter rides a broadcast of the tiny part
-    dim. Single-row output."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part") \
-        .where(F.col("p_brand") == "Brand#23").select("p_partkey")
-    avg_q = (li.groupBy("l_partkey")
-             .agg((F.lit(0.5) * F.avg("l_quantity")).alias("half_avg_qty"))
-             .withColumnRenamed("l_partkey", "a_partkey"))
-    return (li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-            .join(avg_q, li.l_partkey == avg_q.a_partkey)
-            .where(F.col("l_quantity") < F.col("half_avg_qty"))
-            .agg(F.round(F.sum("l_extendedprice") / 7.0, 6)
-                  .alias("avg_yearly")))
-
-
-@register(
-    "suppliers_kept_waiting",
-    oracle="""
-WITH per_order AS (
-  SELECT l.l_orderkey,
-         count(DISTINCT l.l_suppkey) AS n_supp,
-         count(DISTINCT CASE WHEN l.l_shipdate >
-                 o.o_orderdate + INTERVAL 60 DAY
-               THEN l.l_suppkey END) AS n_late,
-         max(CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-             THEN l.l_suppkey END) AS late_supp
-  FROM lineitem l
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderstatus = 'F'
-  GROUP BY l.l_orderkey
-)
-SELECT s.s_name, CAST(count(*) AS BIGINT) AS numwait
-FROM per_order po JOIN supplier s ON s.s_suppkey = po.late_supp
-WHERE po.n_supp > 1 AND po.n_late = 1
-GROUP BY s.s_name
-ORDER BY numwait DESC, s.s_name
-LIMIT 10
-""")
-def q_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape (EXISTS other-supplier + NOT EXISTS other late
-    supplier): suppliers who were the SOLE late shipper on a
-    multi-supplier finished order. Both correlated EXISTS collapse
-    into one groupBy(orderkey) computing (distinct suppliers, distinct
-    late suppliers, the late supplier) — one shuffle where the
-    textbook plan rescans lineitem twice; 'late' derives from
-    shipdate vs orderdate (no commit/receipt dates in the test
-    tables). Supplier names arrive by broadcast."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders") \
-        .where(F.col("o_orderstatus") == "F") \
-        .select("o_orderkey", "o_orderdate")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    late_supp = F.when(
-        F.col("l_shipdate") >
-        F.date_add(F.col("o_orderdate").cast("date"), 60),
-        F.col("l_suppkey"))
-    per_order = (li.join(o, li.l_orderkey == o.o_orderkey)
-                 .groupBy("l_orderkey")
-                 .agg(F.countDistinct("l_suppkey").alias("n_supp"),
-                      F.countDistinct(late_supp).alias("n_late"),
-                      F.max(late_supp).alias("late_supp")))
-    return (per_order
-            .where((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-            .join(F.broadcast(s), F.col("late_supp") == s.s_suppkey)
-            .groupBy("s_name")
-            .agg(F.count(F.lit(1)).cast("long").alias("numwait"))
-            .orderBy(F.desc("numwait"), "s_name")
-            .limit(10))
-
-
-@register(
     "events_value_band_join",
     oracle="""
 WITH bands(band, lo, hi) AS (
@@ -3054,7 +2025,7 @@ def q_events_value_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds a plain aggregation. (The scalable pattern for interval
     dims: broadcast when small, else bucket both sides by floor(value)
     and equi-join the bucket.)"""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     bands = spark.createDataFrame(
         [("low", 0.0, 10.0), ("mid", 10.0, 100.0), ("high", 100.0, 1e12)],
         "band string, lo double, hi double")
@@ -3096,7 +2067,7 @@ def q_events_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     get_json_object string plucking), then a plain aggregation. The
     parse is a row-local projection inside whole-stage codegen — no
     Python, no shuffle beyond the final groupBy."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     k = F.from_json("props", "k INT").getField("k")
     return (e.withColumn("k", k)
             .groupBy((F.col("k") % 10).cast("int").alias("k_mod"))
@@ -3129,39 +2100,13 @@ def q_variant_props_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     (matching the null-tolerant events_props_json sibling) instead of
     failing the query; the {"k": int} payload shape is the dataset's
     contract (TESTDATA.md)."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     k = F.try_variant_get(F.try_parse_json("props"), "$.k", "int")
     return (e.select(k.alias("k")).where(F.col("k").isNotNull())
             .groupBy(F.floor(F.col("k") / 20).cast("int").alias("k_band"))
             .agg(F.count(F.lit(1)).cast("long").alias("n"),
                  F.min("k").cast("int").alias("min_k"),
                  F.max("k").cast("int").alias("max_k")))
-
-
-@register(
-    "pandas_on_spark_summary",
-    oracle="""
-SELECT l_returnflag,
-       CAST(count(*) AS BIGINT) AS n,
-       round(CAST(sum(l_quantity) AS DOUBLE), 6) AS sum_qty
-FROM lineitem GROUP BY l_returnflag
-""")
-def q_pandas_on_spark_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pandas-API-on-Spark surface (pyspark.pandas): the same
-    flag-level summary a pandas user would write with groupby/agg,
-    executing as distributed Spark plans underneath (to_spark() hands
-    the logical plan back — no driver materialization anywhere). This
-    is API breadth, not a new operator: the point is that the
-    pandas-shaped front end lands on the same Catalyst plan the SQL
-    twin (the oracle) describes."""
-    li = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
-    psdf = li.pandas_api()
-    g = psdf.groupby("l_returnflag").agg(
-        n=("l_quantity", "count"), sum_qty=("l_quantity", "sum"))
-    out = g.reset_index().to_spark()
-    return out.select("l_returnflag", F.col("n").cast("long").alias("n"),
-                      F.round(F.col("sum_qty").cast("double"), 6)
-                      .alias("sum_qty"))
 
 
 _DD_Q8 = ("list_transform({v}, x -> CAST(greatest(-127, least(127, "
@@ -3275,7 +2220,7 @@ def q_zscore_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     skewed group is better served by the two-pass SQL twin."""
     import pandas as pd
 
-    e = _events(spark, sf_dir).select("event_id", "event_type", "value")
+    e = read_events(spark, sf_dir).select("event_id", "event_type", "value")
 
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
         sd = pdf["value"].std(ddof=1)
@@ -3415,7 +2360,7 @@ def q_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional mins, then conditional counts (NULL stage timestamps
     drop out of the > comparisons in both engines). One shuffle total;
     no per-stage self-joins."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     t = (e.groupBy("user_id")
          .agg(F.min(F.when(F.col("event_type") == "view", F.col("ts")))
               .alias("t_view"),
@@ -3618,65 +2563,6 @@ def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "set_except_all",
-    oracle="""
-SELECT o_custkey AS custkey FROM orders
-EXCEPT ALL
-SELECT c_custkey AS custkey FROM customer
-""")
-def q_set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiset difference (EXCEPT ALL): order rows per customer beyond
-    the one matching customer row survive with their multiplicity —
-    the duplicate-preserving twin of set_except."""
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("custkey"))
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("custkey"))
-    return o.exceptAll(c)
-
-
-@register(
-    "set_intersect_all",
-    oracle="""
-SELECT o_custkey AS custkey FROM orders
-INTERSECT ALL
-SELECT c_custkey AS custkey FROM customer
-""")
-def q_set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiset intersection (INTERSECT ALL): min(multiplicity) copies
-    per key survive."""
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("custkey"))
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("custkey"))
-    return o.intersectAll(c)
-
-
-@register(
-    "unpivot_order_metrics",
-    oracle="""
-WITH agg AS (
-  SELECT o_orderstatus,
-         round(sum(o_totalprice), 4) AS total_price,
-         round(avg(o_totalprice), 6) AS avg_price,
-         round(max(o_totalprice), 6) AS max_price
-  FROM orders GROUP BY o_orderstatus
-)
-SELECT o_orderstatus, metric, round(value, 4) AS value
-FROM agg
-UNPIVOT (value FOR metric IN (total_price, avg_price, max_price))
-""")
-def q_unpivot_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unpivot (melt): wide per-status metrics to long (metric, value)
-    rows — the inverse of pivot_status_by_month's shape."""
-    o = _t(spark, sf_dir, "orders")
-    agg = (o.groupBy("o_orderstatus")
-           .agg(F.round(F.sum("o_totalprice"), 4).alias("total_price"),
-                F.round(F.avg("o_totalprice"), 6).alias("avg_price"),
-                F.round(F.max("o_totalprice"), 6).alias("max_price")))
-    return (agg.unpivot("o_orderstatus",
-                        ["total_price", "avg_price", "max_price"],
-                        "metric", "value")
-            .withColumn("value", F.round("value", 4)))
-
-
-@register(
     "cosine_neardup_blocked",
     oracle="""
 WITH v AS (
@@ -3752,7 +2638,7 @@ def q_events_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame
     the third formulation of the same session semantics (lag+cumsum
     batch, streaming session_window, and this), all sharing one oracle:
     gap-merge at >= 30 min, window end = last event + gap."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     return (e.groupBy(F.session_window("ts", "30 minutes").alias("w"),
                       "user_id")
             .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
@@ -3858,201 +2744,8 @@ def q_retrieval_funnel_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Remaining TPC-H decision-support shapes expressible over the available
-# tables (no partsupp in the test data, so Q2/Q11/Q20 stay out of scope).
-
-
-@register(
-    "local_supplier_volume",
-    oracle="""
-SELECT n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE c_nationkey = s_nationkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= DATE '1996-01-01'
-  AND o_orderdate < DATE '1997-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-""")
-def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: revenue from orders where the customer and the
-    supplier share a nation, restricted to one region and one order
-    year. Two fact-side shuffles (orders<->lineitem on orderkey); all
-    dims broadcast; the local-supplier predicate is a post-join filter
-    on two broadcast-sourced columns."""
-    c = F.broadcast(_t(spark, sf_dir, "customer"))
-    o = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")))
-    li = _t(spark, sf_dir, "lineitem")
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    r = F.broadcast(_t(spark, sf_dir, "region")).where(F.col("r_name") == "ASIA")
-    return (c.join(o, c.c_custkey == o.o_custkey)
-            .join(li, li.l_orderkey == o.o_orderkey)
-            .join(s, (li.l_suppkey == s.s_suppkey)
-                  & (c.c_nationkey == s.s_nationkey))
-            .join(n, s.s_nationkey == n.n_nationkey)
-            .join(r, n.n_regionkey == r.r_regionkey)
-            .groupBy("n_name")
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (F.lit(1) - F.col("l_discount"))), 6)
-                 .alias("revenue"))
-            .orderBy(F.desc("revenue"), F.col("n_name")))
-
-
-@register(
-    "revenue_forecast",
-    oracle="""
-SELECT round(sum(l_extendedprice * l_discount), 6) AS revenue_delta
-FROM lineitem
-WHERE l_shipdate >= DATE '1996-01-01'
-  AND l_shipdate < DATE '1997-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
-""")
-def q_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure filter + global agg. All three predicates
-    push to the parquet scan (min/max row-group pruning on shipdate);
-    the agg is a map-side partial + single-row final — the cheapest
-    possible full-table query at any scale."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_discount") >= 0.05) & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 6)
-             .alias("revenue_delta")))
-
-
-@register(
-    "volume_shipping",
-    oracle="""
-SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-       strftime(l_shipdate, '%Y') AS l_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue
-FROM lineitem
-JOIN orders   ON o_orderkey = l_orderkey
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN customer ON c_custkey = o_custkey
-JOIN nation sn ON sn.n_nationkey = s_nationkey
-JOIN nation cn ON cn.n_nationkey = c_nationkey
-WHERE ((sn.n_name = 'NATION_3' AND cn.n_name = 'NATION_7')
-    OR (sn.n_name = 'NATION_7' AND cn.n_name = 'NATION_3'))
-  AND l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1998-01-01'
-GROUP BY supp_nation, cust_nation, l_year
-ORDER BY supp_nation, cust_nation, l_year
-""")
-def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral trade volume between two nations by
-    ship year (nation names follow the synthetic test data). The
-    nation dim is joined twice (supplier side and
-    customer side) under distinct aliases; both are broadcast, so the
-    only shuffles are the two fact joins and the final small agg."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp")))
-    o = _t(spark, sf_dir, "orders")
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
-    c = F.broadcast(_t(spark, sf_dir, "customer"))
-    sn = F.broadcast(_t(spark, sf_dir, "nation")
-                     .select(F.col("n_nationkey").alias("sn_key"),
-                             F.col("n_name").alias("supp_nation")))
-    cn = F.broadcast(_t(spark, sf_dir, "nation")
-                     .select(F.col("n_nationkey").alias("cn_key"),
-                             F.col("n_name").alias("cust_nation")))
-    pair = ((F.col("supp_nation") == "NATION_3") & (F.col("cust_nation") == "NATION_7")) | \
-           ((F.col("supp_nation") == "NATION_7") & (F.col("cust_nation") == "NATION_3"))
-    return (li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(s, li.l_suppkey == s.s_suppkey)
-            .join(c, o.o_custkey == c.c_custkey)
-            .join(sn, s.s_nationkey == F.col("sn_key"))
-            .join(cn, c.c_nationkey == F.col("cn_key"))
-            .where(pair)
-            .groupBy("supp_nation", "cust_nation",
-                     F.date_format("l_shipdate", "yyyy").alias("l_year"))
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (F.lit(1) - F.col("l_discount"))), 6)
-                 .alias("revenue"))
-            .orderBy("supp_nation", "cust_nation", "l_year"))
-
-
-@register(
-    "returned_items",
-    oracle="""
-SELECT c_custkey, c_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue,
-       n_name
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-04-01'
-GROUP BY c_custkey, c_name, n_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-""")
-def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top-20 customers by lost revenue on returned
-    lines in one quarter. Selective date filter hits the orders scan
-    first, shrinking the lineitem join; the top-20 is
-    TakeOrderedAndProject over the agg, never a full sort."""
-    c = F.broadcast(_t(spark, sf_dir, "customer"))
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    o = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp")))
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    return (c.join(o, c.c_custkey == o.o_custkey)
-            .join(li, li.l_orderkey == o.o_orderkey)
-            .join(n, c.c_nationkey == n.n_nationkey)
-            .groupBy("c_custkey", "c_name", "n_name")
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (F.lit(1) - F.col("l_discount"))), 6)
-                 .alias("revenue"))
-            .select("c_custkey", "c_name", "revenue", "n_name")
-            .orderBy(F.desc("revenue"), F.col("c_custkey"))
-            .limit(20))
-
-
-@register(
-    "promo_revenue_share",
-    oracle="""
-SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
-                              THEN l_extendedprice * (1 - l_discount)
-                              ELSE 0.0 END)
-             / sum(l_extendedprice * (1 - l_discount)), 6) AS promo_pct
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
-WHERE l_shipdate >= DATE '1996-09-01' AND l_shipdate < DATE '1996-10-01'
-""")
-def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: share of one month's revenue from promo-class
-    parts. Broadcast part join, conditional agg, single-row result."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp")))
-    p = F.broadcast(_t(spark, sf_dir, "part"))
-    rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-    return (li.join(p, li.l_partkey == p.p_partkey)
-            .agg(F.round(F.lit(100.0)
-                         * F.sum(F.when(F.col("p_type") == "PROMO", rev)
-                                 .otherwise(F.lit(0.0)))
-                         / F.sum(rev), 6)
-                 .alias("promo_pct")))
-
-
-# ---------------------------------------------------------------------------
-# Corpus curation: deterministic stratified sampling, quantile bucketing,
-# and length-distribution profiling.
+# Corpus curation: deterministic stratified sampling and
+# length-distribution profiling.
 
 
 @register(
@@ -4089,77 +2782,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "quantile_buckets",
-    oracle="""
-WITH q AS (
-  SELECT o_totalprice,
-         ntile(4) OVER (ORDER BY o_totalprice, o_orderkey) AS quartile
-  FROM orders
-)
-SELECT quartile, CAST(count(*) AS BIGINT) AS n_orders,
-       round(min(o_totalprice), 6) AS lo,
-       round(max(o_totalprice), 6) AS hi,
-       round(avg(o_totalprice), 6) AS mean
-FROM q GROUP BY quartile ORDER BY quartile
-""")
-def q_quantile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth quartile bucketing with EXACT NTILE semantics —
-    the profiling shape behind outlier capping and curriculum
-    binning — computed WITHOUT the single-partition global window a
-    bare ``ntile(4) OVER (ORDER BY ...)`` compiles to (r11 staleness
-    fix: the r05 version paid that single-task sort and scaled 3.7x
-    at 10x data). The global rank comes from the range-partition +
-    per-partition row_number + driver offsets pattern
-    (export_shard_manifest's kernel; the collect is bounded by
-    shuffle-partition count), and NTILE's bucket rule is replayed
-    integer-exactly from (rank, N): the first N mod 4 buckets take
-    ceil(N/4) rows, the rest floor(N/4) — so the result is
-    value-identical to the window form (the oracle still uses SQL
-    ntile) while every stage stays parallel. Ordering is tie-broken
-    on o_orderkey so the bucket assignment is deterministic across
-    engines. value_percentiles remains the approx cutpoint twin."""
-    from pyspark.sql.window import Window as W
-
-    o = _t(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
-    order = [F.col("o_totalprice"), F.col("o_orderkey")]
-    n_parts = max(2, int(spark.conf.get("spark.sql.shuffle.partitions",
-                                        "32")) // 4)
-    ranged = (o.repartitionByRange(n_parts, *order)
-              .withColumn("_pid", F.spark_partition_id()))
-    local_rank = F.row_number().over(W.partitionBy("_pid").orderBy(*order))
-    ranked = ranged.withColumn("_rn", local_rank).localCheckpoint()
-    counts = dict(ranked.groupBy("_pid").count().collect())
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    n = acc
-    omap = F.create_map(*[F.lit(x) for pid in sorted(offsets)
-                          for x in (pid, offsets[pid])])
-    ranked = ranked.select(
-        "o_totalprice",
-        (omap[F.col("_pid")] + F.col("_rn")).cast("long").alias("rnk"))
-    q, r = divmod(n, 4)
-    if q == 0:  # fewer rows than buckets: NTILE gives bucket = rank
-        quartile = F.col("rnk").cast("int")
-    else:
-        big = r * (q + 1)  # rows living in the ceil-sized buckets
-        # integer-exact ceilings: ceil(a/b) == (a + b - 1) div b
-        quartile = F.when(
-            F.col("rnk") <= big,
-            F.expr(f"CAST((rnk + {q}) DIV {q + 1} AS INT)"),
-        ).otherwise(
-            F.expr(f"CAST({r} + (rnk - {big} + {q - 1}) DIV {q} AS INT)"))
-    return (ranked.select("o_totalprice", quartile.alias("quartile"))
-            .groupBy("quartile")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_orders"),
-                 F.round(F.min("o_totalprice"), 6).alias("lo"),
-                 F.round(F.max("o_totalprice"), 6).alias("hi"),
-                 F.round(F.avg("o_totalprice"), 6).alias("mean"))
-            .orderBy("quartile"))
-
-
-@register(
     "doc_length_histogram",
     oracle="""
 SELECT (n_chars // 50) * 50 AS bin_lo,
@@ -4179,79 +2801,6 @@ def q_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
                  F.sum("n_chars").cast("long").alias("total_chars"))
             .orderBy("bin_lo"))
-
-
-@register(
-    "product_type_profit",
-    oracle="""
-SELECT n_name AS nation, strftime(o_orderdate, '%Y') AS o_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 6) AS profit
-FROM lineitem
-JOIN orders   ON o_orderkey = l_orderkey
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN part     ON p_partkey = l_partkey
-JOIN nation   ON n_nationkey = s_nationkey
-WHERE p_type = 'STANDARD'
-GROUP BY 1, 2
-ORDER BY 1, 2 DESC
-""")
-def q_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: profit per supplier nation per order year for
-    one part class (the test data has no partsupp, so revenue stands
-    in for revenue-minus-supplycost). The part filter shrinks the
-    broadcast side BEFORE the join — Catalyst pushes p_type into the
-    part scan, so the join probe only sees matching parts."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
-    p = F.broadcast(_t(spark, sf_dir, "part")
-                    .where(F.col("p_type") == "STANDARD"))
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    return (li.join(p, li.l_partkey == p.p_partkey)
-            .join(o, li.l_orderkey == o.o_orderkey)
-            .join(s, li.l_suppkey == s.s_suppkey)
-            .join(n, s.s_nationkey == n.n_nationkey)
-            .groupBy(F.col("n_name").alias("nation"),
-                     F.date_format("o_orderdate", "yyyy").alias("o_year"))
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (F.lit(1) - F.col("l_discount"))), 6)
-                 .alias("profit"))
-            .orderBy(F.col("nation"), F.desc("o_year")))
-
-
-@register(
-    "discounted_revenue",
-    oracle="""
-SELECT round(sum(l_extendedprice * (1 - l_discount)), 6) AS revenue
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
-WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 1 AND 15)
-   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 30
-       AND l_quantity BETWEEN 10 AND 30)
-   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 50
-       AND l_quantity BETWEEN 20 AND 50)
-""")
-def q_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: an OR-of-ANDs predicate that mixes columns
-    from both join sides. Catalyst splits it: the common subexpression
-    (brand IN its 3 values, size bounds) pushes into the part scan and
-    the quantity envelope (1..50) into the lineitem scan, leaving only
-    the cross-side conjunctions as the post-join filter."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = F.broadcast(_t(spark, sf_dir, "part"))
-    cond = (
-        ((F.col("p_brand") == "Brand#1")
-         & F.col("p_size").between(1, 15) & F.col("l_quantity").between(1, 15))
-        | ((F.col("p_brand") == "Brand#2")
-           & F.col("p_size").between(1, 30) & F.col("l_quantity").between(10, 30))
-        | ((F.col("p_brand") == "Brand#3")
-           & F.col("p_size").between(1, 50) & F.col("l_quantity").between(20, 50)))
-    return (li.join(p, li.l_partkey == p.p_partkey)
-            .where(cond)
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (F.lit(1) - F.col("l_discount"))), 6)
-                 .alias("revenue")))
 
 
 @register(
@@ -4390,7 +2939,7 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two-level aggregation: per-key counts (one shuffle), then a
     single-row stats fold; exact interpolated percentiles match
     DuckDB's quantile_cont."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     f = (e.groupBy("user_id")
          .agg(F.count(F.lit(1)).cast("long").alias("freq")))
     return f.agg(
@@ -4484,34 +3033,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.row_number().over(wpick).alias("rn"))
             .where(F.col("rn") == 1).drop("rn")
             .orderBy("cluster_id"))
-
-
-@register(
-    "customer_distribution",
-    oracle="""
-WITH co AS (
-  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-  GROUP BY c_custkey
-)
-SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-FROM co GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-""")
-def q_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: the distribution of per-customer order counts
-    (how many customers placed k orders, including k=0 via the left
-    join). Two aggregations: the first shuffles on c_custkey, the
-    second is a tiny histogram fold — the outer-join-then-histogram
-    pattern behind engagement/activity profiling."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    co = (c.join(o, c.c_custkey == o.o_custkey, "left")
-          .groupBy("c_custkey")
-          .agg(F.count("o_orderkey").cast("long").alias("c_count")))
-    return (co.groupBy("c_count")
-            .agg(F.count(F.lit(1)).cast("long").alias("custdist"))
-            .orderBy(F.desc("custdist"), F.desc("c_count")))
 
 
 @register(
@@ -4643,7 +3164,7 @@ def q_resample_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> cross join the tiny type dim, all driver-collect-free); the fill
     is one last(ignorenulls) window per type, which partitions by
     event_type so the sort parallelizes per series."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     span = e.agg(F.date_trunc("hour", F.min("ts")).alias("h0"),
                  F.date_trunc("hour", F.max("ts")).alias("h1"))
     hours = span.select(F.explode(F.sequence(
@@ -4699,7 +3220,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     later. Two aggregations over the same (user, week) projection —
     the first-seen table is small (one row per user) and reused for
     both the join and the cohort denominator."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     first_seen = (e.groupBy("user_id")
                   .agg(F.date_trunc("week", F.min("ts")).alias("cohort_w")))
     active = (e.select("user_id",
@@ -4774,8 +3295,7 @@ SELECT doc_id,
 FROM tfq t JOIN dft d USING (term), g
 GROUP BY doc_id ORDER BY bm25 DESC, doc_id
 LIMIT 10
-""".format(tok=DD_TOKENS.format(c="text"), qtok=DD_TOKENS.format(c="text")),
-    headline=True)
+""".format(tok=DD_TOKENS.format(c="text"), qtok=DD_TOKENS.format(c="text")))
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse BM25 top-10 for the test query (doc 0's text, the same
     query the dense funnel uses) — k1=1.2, b=0.75."""
@@ -4939,8 +3459,7 @@ def _dd_kmeans_cte(k: int = 5) -> str:
 @register(
     "kmeans_lloyd",
     oracle=_dd_kmeans_cte()
-    + "SELECT vec_id, cl AS cluster, d2 AS dist2 FROM f",
-    headline=True)
+    + "SELECT vec_id, cl AS cluster, d2 AS dist2 FROM f")
 def q_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means over the embedding column (k=5, 2 iterations,
     deterministic seeding) — the centroid learner behind IVF indexes
@@ -5604,8 +4123,7 @@ FROM f JOIN dtab d ON d.s = f.s AND d.cl = f.cl
 GROUP BY f.vec_id ORDER BY adc, vec_id LIMIT 10
 """.format(spaces=_DD_PQ_SPACES,
            a0=_DD_PQ_ASSIGN.format(c="c0"),
-           a1=_DD_PQ_ASSIGN.format(c="c1")),
-    headline=True)
+           a1=_DD_PQ_ASSIGN.format(c="c1")))
 def q_pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-10 (Jegou et al. 2011, the FAISS
     IVFPQ residual-free variant): 4 subspaces x 4 centroids learned in
@@ -6018,7 +4536,7 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart of upsert_latest. One shuffle (see
     history.scd2_intervals for the partitioning-reuse argument)."""
     from ..operators.history import scd2_intervals
-    return scd2_intervals(_events(spark, sf_dir))
+    return scd2_intervals(read_events(spark, sf_dir))
 
 
 def _dd_bpe_chain(n_merges: int, ltok: str) -> str:
@@ -6271,119 +4789,6 @@ def q_binary_quant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "hamming",
         F.round(V.dot("embedding", qv), 6).alias("score"))
         .orderBy(F.desc("score"), "vec_id").limit(10))
-
-
-@register(
-    "part_value_concentration",
-    oracle="""
-WITH pq AS (
-  SELECT l_partkey, CAST(sum(l_quantity) AS BIGINT) AS part_qty
-  FROM lineitem GROUP BY l_partkey
-),
-tot AS (SELECT CAST(sum(part_qty) AS BIGINT) AS total_qty,
-               CAST(count(*) AS BIGINT) AS n_parts FROM pq)
-SELECT p.l_partkey, p.part_qty,
-       round(p.part_qty / t.total_qty, 6) AS qty_share
-FROM pq p, tot t
-WHERE p.part_qty * t.n_parts * 5 > t.total_qty * 6
-""")
-def q_part_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape (partsupp is out of test-data scope, so quantity
-    stands in for supply value): parts whose shipped-quantity share
-    exceeds 1.2x the mean part share — group-sum, then a ONE-ROW
-    scalar aggregate (total + part count) broadcast back as the HAVING
-    threshold, scale-invariant by construction. Quantities are
-    integral doubles, so sums are exact and the share test is
-    integer-multiplication-exact (no float drift across engines)."""
-    li = _t(spark, sf_dir, "lineitem")
-    pq = (li.groupBy("l_partkey")
-          .agg(F.sum("l_quantity").cast("long").alias("part_qty")))
-    tot = pq.agg(F.sum("part_qty").cast("long").alias("total_qty"),
-                 F.count(F.lit(1)).cast("long").alias("n_parts"))
-    return (pq.crossJoin(F.broadcast(tot))
-            .where(F.col("part_qty") * F.col("n_parts") * 5
-                   > F.col("total_qty") * 6)
-            .select("l_partkey", "part_qty",
-                    F.round(F.col("part_qty") / F.col("total_qty"), 6)
-                    .alias("qty_share")))
-
-
-@register(
-    "dominant_part_suppliers",
-    oracle="""
-WITH sq AS (
-  SELECT l_partkey, l_suppkey, CAST(sum(l_quantity) AS BIGINT) AS supp_qty
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-    AND l_shipdate <  TIMESTAMP '1996-01-01'
-  GROUP BY l_partkey, l_suppkey
-),
-pt AS (
-  SELECT l_partkey, CAST(sum(supp_qty) AS BIGINT) AS part_qty
-  FROM sq GROUP BY l_partkey
-)
-SELECT s.s_suppkey, s.s_name, q.l_partkey, q.supp_qty, p.part_qty
-FROM sq q
-JOIN pt p USING (l_partkey)
-JOIN supplier s ON s.s_suppkey = q.l_suppkey
-WHERE q.supp_qty * 2 > p.part_qty
-""")
-def q_dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape (availqty stands in as shipped quantity):
-    suppliers who shipped more than half a part's 1995 volume. Plan:
-    the year filter pushes to the scan; ONE shuffle groups
-    (part, supplier); the per-part total rides a window over the
-    already-aggregated (small) table; the 100-row supplier dim
-    BROADCASTs. The share test is integer-exact (quantities are
-    integral)."""
-    li = _t(spark, sf_dir, "lineitem")
-    sq = (li.where((F.col("l_shipdate") >= "1995-01-01")
-                   & (F.col("l_shipdate") < "1996-01-01"))
-          .groupBy("l_partkey", "l_suppkey")
-          .agg(F.sum("l_quantity").cast("long").alias("supp_qty")))
-    w = Window.partitionBy("l_partkey")
-    dom = (sq.withColumn("part_qty",
-                         F.sum("supp_qty").over(w).cast("long"))
-           .where(F.col("supp_qty") * 2 > F.col("part_qty")))
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (dom.join(F.broadcast(sup),
-                     dom.l_suppkey == sup.s_suppkey)
-            .select("s_suppkey", "s_name", "l_partkey",
-                    "supp_qty", "part_qty"))
-
-
-@register(
-    "stats_correlation",
-    oracle="""
-SELECT l_returnflag,
-       CAST(count(*) AS BIGINT) AS n,
-       round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-       round(covar_samp(l_quantity, l_extendedprice), 2) AS covar_qp,
-       round(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
-       round(regr_intercept(l_extendedprice, l_quantity), 2) AS intercept
-FROM lineitem GROUP BY l_returnflag
-""")
-def q_stats_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bivariate statistics per return flag: Pearson correlation,
-    sample covariance, and the least-squares line price ~ quantity —
-    the model-fit aggregates of a feature-engineering pass. All are
-    single-pass mergeable co-moments (Welford-style partials combine
-    map-side), so one shuffle of 3 groups x 6 accumulators regardless
-    of table size. Rounding is sized to each statistic's magnitude so
-    cross-engine accumulation-order drift stays inside the rounding
-    step (corr is O(1) -> 6dp; covariance/intercept are O(1e4) ->
-    2dp)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.groupBy("l_returnflag")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.round(F.corr("l_quantity", "l_extendedprice"), 6)
-                 .alias("corr_qty_price"),
-                 F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2)
-                 .alias("covar_qp"),
-                 F.round(F.regr_slope("l_extendedprice", "l_quantity"), 4)
-                 .alias("slope"),
-                 F.round(F.regr_intercept("l_extendedprice", "l_quantity"), 2)
-                 .alias("intercept")))
 
 
 @register(
@@ -6849,7 +5254,7 @@ def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys-sized, the delta is a day's events, and the merge shuffles
     only those two — the historical event stream is never re-read
     (this is the batch twin of the streaming stateful operator #59)."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     cutoff = F.lit("1998-01-01").cast("timestamp")
     state = (e.where(F.col("ts") < cutoff).groupBy("user_id")
              .agg(F.count(F.lit(1)).cast("long").alias("n_old"),
@@ -6866,94 +5271,6 @@ def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.coalesce("s_old", F.lit(0.0))
                         + F.coalesce("s_new", F.lit(0.0)), 6)
                 .alias("sum_value")))
-
-
-@register(
-    "pagerank_nations",
-    oracle="""
-WITH e AS (
-  SELECT c.c_nationkey AS cn, s.s_nationkey AS sn,
-         CAST(count(*) AS BIGINT) AS w
-  FROM lineitem l
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-  GROUP BY 1, 2
-),
-outw AS (SELECT cn, CAST(sum(w) AS BIGINT) AS tw FROM e GROUP BY cn),
-p AS (SELECT e.cn, e.sn, e.w / CAST(o.tw AS DOUBLE) AS p
-      FROM e JOIN outw o USING (cn)),
-n AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM nation),
-r0 AS (SELECT n_nationkey AS node, 1.0 / n.nn AS pr FROM nation, n),
-r1 AS (
-  SELECT nt.n_nationkey AS node,
-         0.15 / n.nn + 0.85 * coalesce(sum(r0.pr * p.p), 0.0) AS pr
-  FROM nation nt CROSS JOIN n
-  LEFT JOIN p ON p.sn = nt.n_nationkey
-  LEFT JOIN r0 ON r0.node = p.cn
-  GROUP BY nt.n_nationkey, n.nn
-),
-r2 AS (
-  SELECT nt.n_nationkey AS node,
-         0.15 / n.nn + 0.85 * coalesce(sum(r1.pr * p.p), 0.0) AS pr
-  FROM nation nt CROSS JOIN n
-  LEFT JOIN p ON p.sn = nt.n_nationkey
-  LEFT JOIN r1 ON r1.node = p.cn
-  GROUP BY nt.n_nationkey, n.nn
-)
-SELECT nt.n_name AS nation, round(r2.pr, 6) AS pagerank
-FROM r2 JOIN nation nt ON nt.n_nationkey = r2.node
-""")
-def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank (2 damped iterations, d=0.85) over the nation trade
-    graph: edge cn -> sn weighted by lineitems a customer in nation cn
-    bought from a supplier in nation sn. With connected components and
-    k-means this completes the iterative-algorithm trio — the loop
-    stays in DataFrame land: the edge table is built once (fact scan +
-    two broadcast dims + one groupBy to 625 rows max) and each
-    iteration is one join + one groupBy ON THE EDGE TABLE'S
-    GRANULARITY, never the fact table's. At web scale the rank
-    frontier shuffles by src per iteration and localCheckpoint
-    truncates lineage (see dedup.connected_components); here both
-    sides are dim-sized so every join broadcasts. The oracle unrolls
-    both iterations as CTEs — exact same dataflow, so the 6dp hash
-    match pins the arithmetic."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation")
-
-    e = (li.join(o, li.l_orderkey == o.o_orderkey)
-         .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
-         .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-         .groupBy(F.col("c_nationkey").alias("cn"),
-                  F.col("s_nationkey").alias("sn"))
-         .agg(F.count(F.lit(1)).cast("long").alias("w")))
-    outw = e.groupBy("cn").agg(F.sum("w").cast("long").alias("tw"))
-    p = (e.join(F.broadcast(outw), "cn")
-         .select("cn", "sn",
-                 (F.col("w") / F.col("tw").cast("double")).alias("p")))
-
-    n_nodes = nation.count()  # dim-sized: 25 rows
-    nodes = nation.select(F.col("n_nationkey").alias("node"))
-    ranks = nodes.withColumn("pr", F.lit(1.0 / n_nodes))
-    for _ in range(2):
-        # the rank frontier is node-sized -> broadcast it into the
-        # edge table; at web scale this becomes a shuffle join on src
-        contrib = (p.join(F.broadcast(ranks), p.cn == ranks.node)
-                   .groupBy("sn")
-                   .agg(F.sum(F.col("pr") * F.col("p")).alias("__c")))
-        ranks = (nodes.join(F.broadcast(contrib),
-                            nodes.node == contrib.sn, "left")
-                 .select("node",
-                         (F.lit(0.15 / n_nodes)
-                          + F.lit(0.85) * F.coalesce("__c", F.lit(0.0)))
-                         .alias("pr")))
-    return (ranks.join(F.broadcast(nation),
-                       ranks.node == nation.n_nationkey)
-            .select(F.col("n_name").alias("nation"),
-                    F.round("pr", 6).alias("pagerank")))
 
 
 @register(
@@ -7043,41 +5360,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "embedding", "score")
             .orderBy(F.desc("score"), "vec_id").limit(20))
     return retrieval.mmr_rerank(cand)
-
-
-@register(
-    "revenue_moving_avg",
-    oracle="""
-WITH d AS (
-  SELECT o_orderdate AS day, round(sum(o_totalprice), 2) AS revenue
-  FROM orders GROUP BY o_orderdate
-)
-SELECT strftime(day, '%Y-%m-%d') AS day, revenue,
-       round(avg(revenue) OVER (ORDER BY day
-             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS ma7,
-       round(percent_rank() OVER (ORDER BY revenue), 6) AS pct_rank,
-       round(cume_dist() OVER (ORDER BY revenue), 6) AS cume
-FROM d
-""")
-def q_revenue_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series window frames the plain window_functions query
-    doesn't touch: a BOUNDED sliding frame (7-day moving average,
-    ROWS BETWEEN 6 PRECEDING) plus the distribution ranks
-    (percent_rank / cume_dist) over daily revenue. Day-granularity
-    first (one map-side-combined groupBy), so the window runs over
-    ~|days| rows, not the order table — the pre-aggregate-then-window
-    pattern that keeps a 100 TB fact scan out of the sort."""
-    o = _t(spark, sf_dir, "orders")
-    d = (o.groupBy(F.col("o_orderdate").alias("day"))
-         .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue")))
-    wday = Window.orderBy("day").rowsBetween(-6, Window.currentRow)
-    wrev = Window.orderBy("revenue")
-    return d.select(
-        F.date_format("day", "yyyy-MM-dd").alias("day"),
-        "revenue",
-        F.round(F.avg("revenue").over(wday), 6).alias("ma7"),
-        F.round(F.percent_rank().over(wrev), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(wrev), 6).alias("cume"))
 
 
 @register(
@@ -7205,8 +5487,7 @@ GROUP BY l.lang_guess
            ltok=DD_TOKENS.format(c="lower(text)"),
            norm=DD_NORM.format(c="text"),
            en=_dd_stoplist("en"), de=_dd_stoplist("de"),
-           fr=_dd_stoplist("fr")),
-    headline=True)
+           fr=_dd_stoplist("fr")))
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation funnel END TO END in one DAG — the composition a
     100 TB pretraining ingest actually runs: language ID + word-count
@@ -7309,35 +5590,6 @@ def q_mrl_truncated_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.round(V.dot("embedding", qv), 6)
                         .alias("score"))
             .orderBy(F.desc("score"), "vec_id").limit(10))
-
-
-@register("sql_api_shipping_priority", oracle=None)  # oracle bound below
-def q_sql_api_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The spark.sql entry point, proven equivalent to the DataFrame
-    DSL: TPC-H Q3 expressed as plain SQL over temp views shares
-    shipping_priority's oracle — same Catalyst plan space, same
-    result hash. A reference user who thinks in SQL rather than
-    DataFrames loses nothing."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
-    return spark.sql("""
-        SELECT l.l_orderkey,
-               round(sum(l.l_extendedprice * (1 - l.l_discount)), 6)
-                 AS revenue,
-               date_format(o.o_orderdate, 'yyyy-MM-dd') AS orderdate,
-               o.o_orderpriority
-        FROM v_orders o
-        JOIN v_lineitem l ON l.l_orderkey = o.o_orderkey
-        WHERE o.o_orderdate < timestamp '1995-03-15'
-          AND l.l_shipdate > timestamp '1995-03-15'
-        GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-        ORDER BY revenue DESC, l_orderkey
-        LIMIT 10
-    """)
-
-
-REGISTRY[-1].oracle = next(q.oracle for q in REGISTRY
-                           if q.name == "shipping_priority")
 
 
 @register(
@@ -7632,7 +5884,7 @@ def q_data_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     li = _t(spark, sf_dir, "lineitem")
     d = _t(spark, sf_dir, "documents")
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     return Q.run_checks(
         Q.referential_check("orders.o_custkey -> customer",
                             o, "o_custkey", c, "c_custkey"),
@@ -7669,7 +5921,7 @@ def q_freshness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     never wall clock, so the check is deterministic and replayable.
     One scan: the per-type max is a map-side-combined groupBy and the
     global max is a one-row broadcast."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     mx = e.agg(F.max("ts").alias("corpus_max"))
     return (e.groupBy("event_type").agg(F.max("ts").alias("__latest"))
             .crossJoin(F.broadcast(mx))
@@ -7745,7 +5997,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "merkle_reconcile",
-    headline=True,
     oracle="""
 WITH l AS (SELECT doc_id, md5(text) AS fp1, 1 AS in1 FROM documents),
 r AS (
@@ -7799,98 +6050,6 @@ def q_merkle_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "forecast_backtest_eval",
-    oracle="""
-WITH daily AS (
-  SELECT date_diff('day', DATE '1970-01-01',
-                   date_trunc('day', o_orderdate)) AS d,
-         sum(o_totalprice) AS rev
-  FROM orders GROUP BY 1
-),
-bounds AS (SELECT max(d) - 28 AS cutoff FROM daily),
-train AS (SELECT daily.* FROM daily, bounds WHERE d <= cutoff),
-test AS (SELECT daily.* FROM daily, bounds WHERE d > cutoff),
-anchor AS (
-  SELECT max(d) AS last_d, min(d) AS first_d,
-         arg_max(rev, d) AS last_rev, arg_min(rev, d) AS first_rev
-  FROM train
-),
-fc AS (
-  SELECT te.d, te.rev,
-         a.last_rev AS f_naive,
-         sn.rev AS f_snaive,
-         a.last_rev + (a.last_rev - a.first_rev)
-           / (a.last_d - a.first_d) * (te.d - a.last_d) AS f_drift
-  FROM test te
-  CROSS JOIN anchor a
-  LEFT JOIN daily sn ON sn.d = te.d - 28
-)
-SELECT method, CAST(count(*) AS BIGINT) AS n_days,
-       round(avg(abs(rev - f)), 6) AS mae,
-       round(avg(abs(rev - f) / rev), 6) AS mape
-FROM (
-  SELECT d, rev, 'naive' AS method, f_naive AS f FROM fc
-  UNION ALL
-  SELECT d, rev, 'seasonal_naive', f_snaive FROM fc
-  UNION ALL
-  SELECT d, rev, 'drift', f_drift FROM fc
-)
-WHERE f IS NOT NULL
-GROUP BY method
-ORDER BY method
-""")
-def q_forecast_backtest_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forecast BACKTEST gate — the time-series twin of the
-    recall-eval family (measure before trusting): the last 28 days of
-    daily revenue are held out and three fixed-origin baselines are
-    scored on them — naive (last train value), seasonal-naive (the
-    actual from 28 days earlier, a whole-period lag so every lookup
-    lands in train), drift (last value plus the train-long slope).
-    MAE/MAPE per method tell you what any fancier model must beat.
-    Dates are epoch-day integers in both engines; anchors are the
-    last/first POPULATED train days (max_by/arg_max), never a lookup
-    at an exact calendar offset that a gap day would empty out.
-    Shape: the corpus collapses to the |days|-row daily aggregate;
-    the anchor scalars are collected once (4 numbers) and injected as
-    plan literals, so the final plan is the daily aggregate joined to
-    its own 28-day shift — not re-derived per anchor branch."""
-    daily = (_t(spark, sf_dir, "orders")
-             .groupBy(F.datediff(F.date_trunc("day", "o_orderdate"),
-                                 F.lit("1970-01-01").cast("date"))
-                      .alias("d"))
-             .agg(F.sum("o_totalprice").alias("rev")))
-    cutoff = daily.agg(F.max("d")).first()[0] - 28
-    a = (daily.where(F.col("d") <= cutoff)
-         .agg(F.max("d").alias("last_d"), F.min("d").alias("first_d"),
-              F.expr("max_by(rev, d)").alias("last_rev"),
-              F.expr("min_by(rev, d)").alias("first_rev")).first())
-    slope = (a["last_rev"] - a["first_rev"]) / (a["last_d"] - a["first_d"])
-    sn = daily.select((F.col("d") + 28).alias("d"),
-                      F.col("rev").alias("f_snaive"))
-    fc = (daily.where(F.col("d") > cutoff)
-          .join(sn, "d", "left")
-          .select("d", "rev",
-                  F.lit(a["last_rev"]).alias("f_naive"),
-                  "f_snaive",
-                  (F.lit(a["last_rev"]) + F.lit(slope)
-                   * (F.col("d") - F.lit(a["last_d"]))).alias("f_drift")))
-    parts = [fc.select("d", "rev", F.lit(m).alias("method"),
-                       F.col(c).alias("f"))
-             for m, c in (("naive", "f_naive"),
-                          ("seasonal_naive", "f_snaive"),
-                          ("drift", "f_drift"))]
-    u = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    return (u.where(F.col("f").isNotNull())
-            .groupBy("method")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_days"),
-                 F.round(F.avg(F.abs(F.col("rev") - F.col("f"))), 6)
-                 .alias("mae"),
-                 F.round(F.avg(F.abs(F.col("rev") - F.col("f"))
-                               / F.col("rev")), 6).alias("mape"))
-            .orderBy("method"))
-
-
-@register(
     "funnel_step_latency",
     oracle="""
 WITH t AS (
@@ -7928,7 +6087,7 @@ def q_funnel_step_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same single shuffle as the funnel), then exact interpolated
     percentiles over the |converting users|-row table — percentile
     input is post-aggregation, never raw events."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     t = (e.groupBy("user_id")
          .agg(F.min(F.when(F.col("event_type") == "view",
                            F.unix_micros("ts"))).alias("tv"),
@@ -7953,69 +6112,6 @@ def q_funnel_step_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (stats("view_to_click", "view_to_click")
             .unionByName(stats("click_to_buy", "click_to_buy"))
             .orderBy("step"))
-
-
-@register(
-    "seasonal_decompose_daily",
-    oracle="""
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS d,
-         sum(o_totalprice) AS revenue
-  FROM orders GROUP BY 1
-),
-tr AS (
-  SELECT d, revenue,
-         avg(revenue) OVER (ORDER BY d
-             ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend
-  FROM daily
-),
-dt AS (
-  SELECT d, revenue, trend, revenue - trend AS detrended,
-         date_diff('day', DATE '1970-01-01', d) % 7 AS dow
-  FROM tr
-),
-seas AS (
-  SELECT dow, avg(detrended) AS seasonal FROM dt GROUP BY dow
-)
-SELECT strftime(dt.d, '%Y-%m-%d') AS day,
-       round(dt.revenue, 6) AS revenue,
-       round(dt.trend, 6) AS trend,
-       round(s.seasonal, 6) AS seasonal,
-       round(dt.detrended - s.seasonal, 6) AS residual
-FROM dt JOIN seas s ON dt.dow = s.dow
-ORDER BY day
-""")
-def q_seasonal_decompose_daily(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """STL-lite additive decomposition of daily revenue:
-    trend = centered 7-day moving average, seasonal = day-of-week mean
-    of the detrended series, residual = the rest — the decomposition
-    behind seasonality-aware anomaly detection (alert on residual, not
-    raw value, or every weekend pages you). Day-of-week is computed as
-    days-since-epoch mod 7 so both engines share the convention.
-    Shape: daily aggregation shrinks the corpus to |days| rows; every
-    window/join after that runs on the aggregate — the
-    aggregate-then-window discipline, so the 'global' moving-average
-    sort orders days, never orders rows."""
-    from pyspark.sql.window import Window
-
-    daily = (_t(spark, sf_dir, "orders")
-             .groupBy(F.date_trunc("day", "o_orderdate").alias("d"))
-             .agg(F.sum("o_totalprice").alias("revenue")))
-    wtrend = Window.orderBy("d").rowsBetween(-3, 3)
-    dt = (daily.withColumn("trend", F.avg("revenue").over(wtrend))
-          .withColumn("detrended", F.col("revenue") - F.col("trend"))
-          .withColumn("dow", F.datediff(
-              F.col("d"), F.lit("1970-01-01").cast("date")) % 7))
-    seas = dt.groupBy("dow").agg(F.avg("detrended").alias("seasonal"))
-    return (dt.join(F.broadcast(seas), "dow")
-            .select(F.date_format("d", "yyyy-MM-dd").alias("day"),
-                    F.round("revenue", 6).alias("revenue"),
-                    F.round("trend", 6).alias("trend"),
-                    F.round("seasonal", 6).alias("seasonal"),
-                    F.round(F.col("detrended") - F.col("seasonal"), 6)
-                    .alias("residual"))
-            .orderBy("day"))
 
 
 @register(
@@ -8075,119 +6171,6 @@ def q_postings_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "triangle_count",
-    oracle="""
-WITH e0 AS (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM lineitem x JOIN lineitem y
-    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-),
-deg AS (
-  SELECT n, CAST(count(*) AS BIGINT) AS d
-  FROM (SELECT a AS n FROM e0 UNION ALL SELECT b FROM e0)
-  GROUP BY n
-),
-fwd AS (
-  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-              THEN e0.a ELSE e0.b END AS u,
-         CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-              THEN e0.b ELSE e0.a END AS v
-  FROM e0 JOIN deg da ON da.n = e0.a JOIN deg db ON db.n = e0.b
-)
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
-       (SELECT CAST(count(*) AS BIGINT) FROM e0) AS n_edges,
-       (SELECT CAST(count(*) AS BIGINT)
-        FROM fwd e1 JOIN fwd e2 ON e1.v = e2.u
-             JOIN fwd e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles
-""")
-def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting with DEGREE ORIENTATION over the co-purchase
-    graph (parts appearing in the same order). The naive three-way
-    self-join counts each triangle 6x and lets a hub vertex's
-    neighborhood explode quadratically; orienting every edge from its
-    lower-(degree, id) endpoint to the higher one counts each triangle
-    exactly once and caps every join fan-out at O(sqrt(|E|)) per
-    vertex (arboricity bound) — the standard scale trick
-    (Schank-Wagner / Suri-Vassilvitskii MR adaptation). Corpus work:
-    one equi-self-join per order for edges, one union-groupBy for
-    degrees, two hash joins on oriented wedges."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # pairs/fwd have several consumers but are NOT checkpointed:
-    # everything lands in one physical plan where ReuseExchange dedupes
-    # the repeated subtrees for free — measured at 10x data, forcing a
-    # localCheckpoint materialization was strictly slower (7.1x vs
-    # 5.3x scaling ratio).
-    pairs = (li.alias("x").join(
-        li.alias("y"),
-        (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-        & (F.col("x.l_partkey") < F.col("y.l_partkey")))
-        .select(F.col("x.l_partkey").alias("a"),
-                F.col("y.l_partkey").alias("b")).distinct())
-    deg = (pairs.select(F.col("a").alias("n"))
-           .unionAll(pairs.select(F.col("b").alias("n")))
-           .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
-    da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
-    ab_fwd = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    fwd = (pairs.join(da, "a").join(db, "b")
-           .select(F.when(ab_fwd, F.col("a")).otherwise(F.col("b"))
-                   .alias("u"),
-                   F.when(ab_fwd, F.col("b")).otherwise(F.col("a"))
-                   .alias("v")))
-    e1 = fwd.select(F.col("u").alias("t_u"), F.col("v").alias("t_m"))
-    e2 = fwd.select(F.col("u").alias("t_m"), F.col("v").alias("t_w"))
-    wedges = e1.join(e2, "t_m")
-    closing = fwd.select(F.col("u").alias("t_u"), F.col("v").alias("t_w"))
-    tri = wedges.join(closing, ["t_u", "t_w"])
-    return (deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-            .crossJoin(pairs.agg(F.count(F.lit(1)).cast("long")
-                                 .alias("n_edges")))
-            .crossJoin(tri.agg(F.count(F.lit(1)).cast("long")
-                               .alias("n_triangles"))))
-
-
-@register(
-    "k_anonymity_audit",
-    oracle="""
-WITH classes AS (
-  SELECT c_nationkey, c_mktsegment,
-         CAST(count(*) AS BIGINT) AS class_size
-  FROM customer GROUP BY c_nationkey, c_mktsegment
-)
-SELECT CAST(count(*) AS BIGINT) AS n_classes,
-       CAST(min(class_size) AS BIGINT) AS k_anonymity,
-       CAST(sum(CASE WHEN class_size < 5 THEN class_size ELSE 0 END)
-            AS BIGINT) AS rows_below_k5,
-       CAST(sum(CASE WHEN class_size < 5 THEN 1 ELSE 0 END) AS BIGINT)
-         AS classes_below_k5,
-       round(avg(class_size), 6) AS avg_class_size
-FROM classes
-""")
-def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Privacy-governance audit completing the GDPR-delete / PII-
-    redaction family: k-anonymity of the customer table under the
-    quasi-identifier (nation, market segment) — the dataset's k is
-    the SMALLEST equivalence-class size (any class below the policy
-    threshold re-identifies its members), plus how many rows/classes
-    sit below k=5, the usual release bar. One groupBy to the class
-    table, one tiny aggregate over it — the audit a release pipeline
-    runs before publishing any quasi-identifiable slice."""
-    c = _t(spark, sf_dir, "customer")
-    classes = (c.groupBy("c_nationkey", "c_mktsegment")
-               .agg(F.count(F.lit(1)).alias("class_size")))
-    below = F.col("class_size") < 5
-    return classes.agg(
-        F.count(F.lit(1)).cast("long").alias("n_classes"),
-        F.min("class_size").cast("long").alias("k_anonymity"),
-        F.sum(F.when(below, F.col("class_size")).otherwise(0))
-        .cast("long").alias("rows_below_k5"),
-        F.sum(F.when(below, 1).otherwise(0)).cast("long")
-        .alias("classes_below_k5"),
-        F.round(F.avg("class_size"), 6).alias("avg_class_size"))
-
-
-@register(
     "cuped_adjusted_metric",
     oracle="""
 WITH mid AS (
@@ -8229,7 +6212,7 @@ def q_cuped_adjusted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation pass to per-user (pre, post), one tiny moments
     aggregate for theta broadcast back as a 1-row cross join, one
     groupBy variant — the corpus is scanned once."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     mid = e.agg(
         (F.min(F.unix_micros("ts"))
          + ((F.max(F.unix_micros("ts"))
@@ -8309,7 +6292,7 @@ def q_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     freshness_by_type. One scalar scan finds the range; the main scan
     bins and splits both windows by conditional aggregation; the
     per-type totals re-join is group-count-sized."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     mid = e.agg(
         (F.min(F.unix_micros("ts"))
          + F.floor((F.max(F.unix_micros("ts"))
@@ -8585,55 +6568,6 @@ def q_centroid_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "rolling_anomaly_days",
-    oracle="""
-WITH d AS (
-  SELECT o_orderdate AS day, round(sum(o_totalprice), 2) AS revenue
-  FROM orders GROUP BY o_orderdate
-),
-s AS (
-  SELECT day, revenue,
-         avg(revenue) OVER w AS ma,
-         stddev_samp(revenue) OVER w AS sd,
-         count(*) OVER w AS n_win
-  FROM d
-  WINDOW w AS (ORDER BY day ROWS BETWEEN 14 PRECEDING AND 1 PRECEDING)
-)
-SELECT strftime(day, '%Y-%m-%d') AS day, revenue,
-       round((revenue - ma) / sd, 6) AS zscore
-FROM s
-WHERE n_win >= 7 AND sd > 0
-  AND abs(round((revenue - ma) / sd, 6)) > 3.0
-""")
-def q_rolling_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-window anomaly detection over daily revenue: each day
-    scored against the trailing 14 OBSERVED days (ROWS frame over the
-    day-level aggregate — calendar gaps stretch the span; join a
-    resampled spine as in resample_fill_forward for strict calendar
-    windows). The frame excludes the current row so a spike can't
-    mask itself; flagged beyond 3 sigma — the
-    alerting query a pipeline runs on its own volume metrics (the
-    time-local complement of the static per-group zscore_by_type).
-    The flag compares the ROUNDED z-score in both engines, so
-    sub-rounding float drift cannot flip membership. Pre-aggregation
-    to day granularity keeps the window over ~|days| rows."""
-    o = _t(spark, sf_dir, "orders")
-    d = (o.groupBy(F.col("o_orderdate").alias("day"))
-         .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue")))
-    w = Window.orderBy("day").rowsBetween(-14, -1)
-    s = d.select(
-        "day", "revenue",
-        F.avg("revenue").over(w).alias("ma"),
-        F.stddev_samp("revenue").over(w).alias("sd"),
-        F.count(F.lit(1)).over(w).alias("n_win"))
-    z = F.round((F.col("revenue") - F.col("ma")) / F.col("sd"), 6)
-    return (s.where((F.col("n_win") >= 7) & (F.col("sd") > 0)
-                    & (F.abs(z) > 3.0))
-            .select(F.date_format("day", "yyyy-MM-dd").alias("day"),
-                    "revenue", z.alias("zscore")))
-
-
-@register(
     "arrow_grouped_centroid_norm",
     oracle="""
 WITH u AS (
@@ -8696,8 +6630,7 @@ def q_arrow_grouped_centroid_norm(spark: SparkSession, sf_dir: str) -> DataFrame
   FROM kept n JOIN kept a
     ON n.band = a.band AND n.bk = a.bk AND n.doc_id != a.doc_id
   WHERE n.doc_id % 3 = 0
-)""") + "\n" + _DD_MH_PAIRS_SELECT + "\n",
-    headline=True)
+)""") + "\n" + _DD_MH_PAIRS_SELECT + "\n")
 def q_minhash_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MinHash dedup: the day-N batch (doc_id % 3 = 0 as
     the synthetic new slice) is checked against the WHOLE corpus, but
@@ -8808,7 +6741,7 @@ def q_map_literal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("n_nationkey", "n_name").collect()}
     lookup = F.create_map(
         *[F.lit(x) for x in chain.from_iterable(nation.items())])
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     return (e.select(lookup[F.pmod(F.col("user_id"), F.lit(25))]
                      .alias("nation"),
                      "value")
@@ -9047,7 +6980,7 @@ def q_attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographic struct ordering gives the deterministic tie-break
     without a window sort. Timestamp math stays in exact integer
     microseconds (unix_micros / epoch_us) on both engines."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     c = (e.where(F.col("event_type") == "click")
          .select(F.col("user_id").alias("c_user"),
                  F.col("ts").alias("c_ts"),
@@ -9134,7 +7067,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     is per-user within partitions, never global."""
     from pyspark.sql.window import Window
 
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dur = F.unix_micros(F.lead("ts").over(w)) - F.unix_micros(F.col("ts"))
     return (e.select("user_id", "value", dur.alias("dur_us"))
@@ -9171,7 +7104,7 @@ def q_ttl_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     microseconds."""
     from pyspark.sql.window import Window
 
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     gap = F.unix_micros(F.col("ts")) - F.unix_micros(prev)
@@ -9307,7 +7240,7 @@ def q_time_decayed_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is reproducible); decay exponents are exact integer
     microsecond gaps over a double tau. One corpus scan + one groupBy
     shuffle on user_id."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     mx = e.agg(F.max(F.unix_micros("ts")).alias("t_us"))
     tau = 7.0 * 86400 * 1000000
     w = F.exp(-(F.col("t_us") - F.unix_micros(F.col("ts"))) / F.lit(tau))
@@ -9496,7 +7429,7 @@ def q_cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch."""
     from pyspark.sql.window import Window
 
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"),
                                               F.desc("event_id"))
     return (e.withColumn("rn", F.row_number().over(w))
@@ -9577,7 +7510,7 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     again, so the normalizing sort never touches the corpus."""
     from pyspark.sql.window import Window
 
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (e.select(F.col("event_type").alias("cur"),
                       F.lead("event_type").over(w).alias("nxt"))
@@ -9591,7 +7524,6 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "trajectory_knn",
-    headline=True,
     oracle="""
 WITH seq AS (
   SELECT user_id, event_type,
@@ -9640,7 +7572,7 @@ def q_trajectory_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     a token) specialized to sequences."""
     from pyspark.sql.window import Window
 
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # NULL-PROPAGATING concat (matches the oracle's || semantics): a
     # NULL event type anywhere in the window drops that trigram on
@@ -9767,8 +7699,7 @@ WHERE ((a.lo % 65536) = (b.lo % 65536)
     OR (a.hi % 65536) = (b.hi % 65536)
     OR (a.hi // 65536) = (b.hi // 65536))
   AND bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 16
-""",
-    headline=True)  # the multimodal family's bench representative
+""")
 def q_phash_blob_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-style perceptual-hash near-dup over the multimodal blob
     column, at PRODUCTION band width: the 64-block aHash kernel
@@ -10202,8 +8133,7 @@ SELECT qid, doc_id, score FROM ranked WHERE rn <= 5
               "(acc, x) -> acc + x)"),
         ss_q=("list_reduce(list_transform(v, x -> x * x), "
               "(acc, x) -> acc + x)"),
-        dot=dd_dot("c.nv", "q.nv")),
-    headline=True)
+        dot=dd_dot("c.nv", "q.nv")))
 def q_cross_modal_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLIP-style cross-modal retrieval: a TEXT-encoder query vector
     searches an IMAGE-encoder corpus — the reference's two-stage
@@ -10348,7 +8278,7 @@ JOIN cum ON cum.m = least(ct.n_rel, 10)
                               for m, c in enumerate(_NDCG_CUM)))
 
 
-@register("retrieval_lifecycle_pipeline", oracle=_RLP_ORACLE, headline=True)
+@register("retrieval_lifecycle_pipeline", oracle=_RLP_ORACLE)
 def q_retrieval_lifecycle_pipeline(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     """THE COMPOSED RETRIEVAL-SIDE FLAGSHIP — the reference's full
@@ -10915,7 +8845,6 @@ FROM normed
 
 @register(
     "ingest_lifecycle_pipeline",
-    headline=True,
     oracle=_ILP_ORACLE.format(
         c1=chunking.dd_chunk_cte(_CHUNK_SIZE, _CHUNK_OVERLAP),
         c2=chunking.dd_chunk_cte(
@@ -11306,13 +9235,6 @@ WHERE vec_id NOT IN (SELECT id FROM losers)
 """)
 
 
-# NOT a bench headline despite flagship status: each run rebuilds the
-# full stateful chain from an empty checkpoint (micro-batch LSH merge +
-# IVF append + drain-time retraction, ~20-37 s at sf0.1), so the
-# 3-rep bench policy would triple-pay a stateful rebuild and swamp the
-# frozen suite trend (~36 s total). Its scale evidence lives in
-# SCALE.md sweep rows instead; correctness is oracle-gated like every
-# other entry.
 @register(
     "streaming_lifecycle_pipeline",
     oracle=_SLP_ORACLE)
@@ -12900,10 +10822,7 @@ def q_takedown_provenance_cascade(spark: SparkSession,
 
 # ---------------------------------------------------------------------------
 # Round-9 additions: training-set ASSEMBLY ops — the step after the
-# dedup/quality/mixture ledgers have decided WHAT ships. Registered in
-# the WINDOW_PRIORITY tail (the r10 grading queue) per the round-8
-# verdict's addition cap; each is local-parity + drive.py + 10x-swept
-# before registration, same as every r08 entry.
+# dedup/quality/mixture ledgers have decided WHAT ships.
 
 
 @register(
@@ -13138,7 +11057,7 @@ def q_streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    ev = _events(spark, sf_dir)
+    ev = read_events(spark, sf_dir)
     indir = _scratch_path(spark, sf_dir, "late_in")
     ckpt = _scratch_path(spark, sf_dir, "late_ck")
     outp = _scratch_path(spark, sf_dir, "late_out")
@@ -13559,7 +11478,7 @@ def _training_export_chain(spark: SparkSession, sf_dir: str,
             .orderBy("shard"))
 
 
-@register("training_export_pipeline", oracle=_TEP_ORACLE, headline=True)
+@register("training_export_pipeline", oracle=_TEP_ORACLE)
 def q_training_export_pipeline(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """THE COMPOSED EXPORT FLAGSHIP — one pass through the
@@ -14031,8 +11950,7 @@ def q_shard_content_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_survivorship_audit measures how often keep-lowest-id drops the
 # better copy; this is the operator that verdict feeds — the same
 # five-stage export chain with dedup_keep_best's quality-ranked
-# canonical pick swapped in as stage 2. Registered in the
-# WINDOW_PRIORITY tail (the r12 grading queue) per the addition cap.
+# canonical pick swapped in as stage 2.
 
 # Keep-best drop-set CTEs: quality score (dedup_keep_best's kq chain,
 # 6dp-rounded so both engines rank identical values), exact groups
@@ -14853,8 +12771,7 @@ def q_eval_contamination_attribution(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Round-12 additions (r13 grading queue; registered post-window per
-# the addition cap): scale-parametric graded instances of the
+# Round-12 additions: scale-parametric graded instances of the
 # block-pinned similarity queries (round-11 verdict task 2) and the
 # sampled production variant of the recall eval (task 3).
 
@@ -15042,8 +12959,7 @@ def q_minhash_recall_eval_sampled(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Round-13 additions (r14 grading queue; registered post-window per
-# the addition cap): the sub-N^1.5 two-level SemDeDup quantizer
+# Round-13 additions: the sub-N^1.5 two-level SemDeDup quantizer
 # (round-12 verdict task 2) and the invariant-gated sketch oracle
 # (task 5).
 
@@ -15144,7 +13060,7 @@ def q_approx_sketches_invariants(spark: SparkSession,
     approx_sketches itself stays rows-only graded (its raw sketch
     values are legitimately engine-specific); this entry retires the
     'permanent no-oracle' status of the sketch family."""
-    e = _events(spark, sf_dir)
+    e = read_events(spark, sf_dir)
     sk = e.agg(
         F.approx_count_distinct("user_id").cast("double").alias("au"),
         F.approx_count_distinct("event_type").cast("double").alias("at"),
@@ -15287,8 +13203,7 @@ def q_semantic_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-14 addition (r15 grading queue; registered post-window per
-# the addition cap): the incremental SemDeDup composed over the
+# Round-14 addition: the incremental SemDeDup composed over the
 # frozen TWO-LEVEL quantizer (round-13 verdict task 5) — removes the
 # N_old^1.5 one-time index-build term from the amortized delta path.
 

@@ -13,6 +13,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from .operators.storage import read_parquet
 
 # Sized for the local[32] test harness; on a real cluster
 # spark.sql.shuffle.partitions should be ~2-3x total executor cores and
@@ -67,10 +70,21 @@ def read_events(spark: SparkSession, sf_dir: str):
     encodings for `ts`: TIMESTAMP(NANOS), which Spark's vectorized
     reader only accepts as a long (nanosAsLong) and we floor-convert —
     exactly what DuckDB's reader does — and plain TIMESTAMP(MICROS),
-    which reads natively as TIMESTAMP_NTZ. Handle both."""
-    from pyspark.sql import functions as F
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    which reads natively as TIMESTAMP_NTZ. Handle both.
+
+    nanosAsLong is set only while the table is opened: the schema read
+    then is what decides the long, and the caller's value (or its
+    absence) is put back before returning."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        e = read_parquet(spark, f"{sf_dir}/events.parquet")
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
     if dict(e.dtypes)["ts"] == "bigint":
         return e.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return e.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -82,11 +96,8 @@ def load_tables(spark: SparkSession, sf_dir: str,
                     "orders", "lineitem", "events", "documents",
                     "embeddings")) -> dict:
     """Load the driver's parquet tables as DataFrames keyed by name
-    (events via read_events, which normalizes the ts encoding)."""
-    out = {}
-    for n in names:
-        if n == "events":
-            out[n] = read_events(spark, sf_dir)
-        else:
-            out[n] = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-    return out
+    (events via read_events, which normalizes the ts encoding). No
+    table open runs a Spark job."""
+    return {n: read_events(spark, sf_dir) if n == "events"
+            else read_parquet(spark, f"{sf_dir}/{n}.parquet")
+            for n in names}

@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StructField, StructType,
                                TimestampType)
 
+from ..operators.storage import read_parquet
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str,
                        max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream over the events parquet (one file = one batch
@@ -341,7 +344,7 @@ def read_parquet_stream(spark: SparkSession, sf_dir: str, table: str,
     ~10 entries in the driver layout; the production
     directory-of-parts branch never pays it."""
     base = f"{sf_dir}/{table}.parquet"
-    schema = spark.read.parquet(base).schema
+    schema = read_parquet(spark, base).schema
     reader = spark.readStream.schema(schema).format("parquet")
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(base)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup
+from ..operators.storage import read_parquet
 
 
 def write_doc_slices(spark: SparkSession, sf_dir: str, in_dir: str,
@@ -150,7 +151,7 @@ def run_docs_stream(spark: SparkSession, in_dir: str, index_path: str,
     """Drain the document drop directory through the index merge with
     Trigger.AvailableNow (one file per micro-batch). Restarted on the
     same checkpoint it resumes after the last committed batch."""
-    schema = spark.read.parquet(in_dir).schema
+    schema = read_parquet(spark, in_dir).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(in_dir))
     q = (stream.writeStream

@@ -9,6 +9,7 @@ import os
 import shutil
 import uuid
 
+import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -17,6 +18,7 @@ from pyspark.errors import AnalysisException
 from rag_vector_database_spark import cli
 from rag_vector_database_spark.operators.ingest import read_store_or_none
 from rag_vector_database_spark.operators.storage import read_parquet
+from rag_vector_database_spark.session import load_tables, read_events
 from rag_vector_database_spark.streaming import events as se
 
 from .conftest import SF_DIR
@@ -164,6 +166,59 @@ def test_open_runs_no_job(spark, sf_dir, tmp_path, job_count):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert job_count(group) == 0
+
+
+def test_table_opens_run_no_job(spark, sf_dir, job_count):
+    """The driver's tables and a stream's schema probe open from the
+    footer: no job before any stream starts."""
+    sc = spark.sparkContext
+    group = f"opens-{uuid.uuid4()}"
+    sc.setJobGroup(group, "table opens")
+    try:
+        assert len(load_tables(spark, sf_dir)) == 10
+        stream = se.read_parquet_stream(spark, sf_dir, "documents")
+        assert stream.isStreaming
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert job_count(group) == 0
+
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+@pytest.mark.parametrize("before", [None, "false", "true"])
+def test_read_events_leaves_nanos_as_long(spark, sf_dir, tmp_path, conf,
+                                          before, vectorized):
+    """``read_events`` sets nanosAsLong only to open the table: the
+    caller's value (or its absence) reads the same afterwards, and a
+    TIMESTAMP(NANOS) ``ts`` still collects as DuckDB's floor to micros
+    once the value is back."""
+    conf(NANOS_AS_LONG, "false")
+    if before is None:
+        spark.conf.unset(NANOS_AS_LONG)
+    else:
+        conf(NANOS_AS_LONG, before)
+    conf("spark.sql.parquet.enableVectorizedReader", vectorized)
+    assert spark.conf.get(NANOS_AS_LONG, None) == before
+    read_events(spark, sf_dir)
+    assert spark.conf.get(NANOS_AS_LONG, None) == before
+
+    nanos = tmp_path / "nanos"
+    nanos.mkdir()
+    path = str(nanos / "events.parquet")
+    pq.write_table(pa.table({"id": [1, 2, 3], "ts": pa.array(
+        [1_700_000_000_123_456_789, 1_700_000_000_999_999_999, 1_000],
+        pa.timestamp("ns"))}), path)
+    events = read_events(spark, str(nanos))
+    assert spark.conf.get(NANOS_AS_LONG, None) == before
+    got = [tuple(r) for r in events.selectExpr(
+        "id", "date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS')")
+        .orderBy("id").collect()]
+    want = duckdb.sql(
+        f"SELECT id, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f')"
+        f" FROM '{path}' ORDER BY id").fetchall()
+    assert got == want
 
 
 # ---------------------------------------------------------------------------

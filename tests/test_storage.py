@@ -572,19 +572,17 @@ def test_takedown_cascade_partial_rewrite(spark, sf_dir):
     assert affected < len(parts)  # strictly partition-scoped
 
 
-def test_clear_table_handles_sees_rewritten_table(spark, tmp_path):
-    """A source-table handle is cached with its file listing, so rows
-    added under an sf_dir stay unseen until clear_table_handles runs."""
+def test_t_sees_row_appended_under_sf_dir(spark, tmp_path):
+    """Each builder call opens its table afresh: a row appended under an
+    sf_dir is seen by the next ``_t`` call (no handle keeps an old file
+    listing)."""
     from rag_vector_database_spark.plans import registry
 
     sf = str(tmp_path / "sf")
     path = f"{sf}/documents.parquet"
     spark.range(3).write.parquet(path)
-    cached = registry._t(spark, sf, "documents")
-    assert cached.count() == 3
+    first = registry._t(spark, sf, "documents")
+    assert first.count() == 3
     spark.range(3, 5).write.mode("append").parquet(path)
-    assert registry._t(spark, sf, "documents") is cached
-    assert cached.count() == 3  # the stale listing
-    registry.clear_table_handles(sf)
     fresh = registry._t(spark, sf, "documents")
     assert sorted(r[0] for r in fresh.collect()) == [0, 1, 2, 3, 4]
