@@ -43,15 +43,16 @@ from .operators.conversation import (RagConversation, context_text,
                                      history_fold)
 from .operators.observe import observed
 from .operators.session_log import SessionLog
-from .operators.storage import read_parquet
+from .operators.storage import VECTOR_WIDTH, read_parquet
 from .operators import generation
 
 # query_rag_database.py:109 / Auto_query_rag_database.py:92
 EXIT_KEYWORDS = {"end", "stop", "quit", "bye", "exit"}
 
 
-def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+def _load(spark: SparkSession, sf_dir: str, name: str,
+          vectors: tuple[str, ...] = ()) -> DataFrame:
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet", vectors)
 
 
 def embed_query(spark: SparkSession, text: str, dim: int) -> list[float]:
@@ -63,14 +64,26 @@ def embed_query(spark: SparkSession, text: str, dim: int) -> list[float]:
 
 
 def _embedding_dim(embeddings: DataFrame, sf_dir: str) -> int:
-    """The store's vector width, from its first row; an empty store is
-    a clear error (the same probe decides both, no extra job)."""
-    row = embeddings.select(F.size("embedding")).first()
-    if row is None:
-        raise ValueError(f"{sf_dir}/embeddings.parquet holds no rows: "
-                         "there is nothing to retrieve from; ingest "
-                         "documents first")
-    return row[0]
+    """The store's vector width, with no Spark job: ``embeddings`` is
+    opened with ``read_parquet(..., vectors=("embedding",))``, which
+    records the width it reads from the parquet footers (value count ÷
+    row count of the first row group that holds rows) as column
+    metadata. Where the footers cannot tell (a NULL or empty vector or
+    a NULL element in that row group, no recorded null count, an inexact
+    ratio, or a glob, ``mergeSchema`` or summary file that Spark infers
+    from) the first row is probed in one job, as before. An empty store
+    is a clear error."""
+    dim = next((f.metadata.get(VECTOR_WIDTH) for f in embeddings.schema
+                if f.name == "embedding"), None)
+    if dim is None:  # the footers cannot tell: probe the first row
+        row = embeddings.select(F.size("embedding")).first()
+        if row is not None:
+            return row[0]
+    elif dim:  # 0 when no data file holds a row
+        return dim
+    raise ValueError(f"{sf_dir}/embeddings.parquet holds no rows: "
+                     "there is nothing to retrieve from; ingest "
+                     "documents first")
 
 
 def _print_chunks(top_rows, print_fn: Callable[[str], None]) -> None:
@@ -95,7 +108,7 @@ def run_query_loop(spark: SparkSession, sf_dir: str,
     history alone (the reference's mode 2, query_rag_database.py:251).
     """
     documents = _load(spark, sf_dir, "documents")
-    embeddings = _load(spark, sf_dir, "embeddings")
+    embeddings = _load(spark, sf_dir, "embeddings", ("embedding",))
     dim = _embedding_dim(embeddings, sf_dir)
     convo = RagConversation(documents, embeddings,
                             k_candidates=k, top_n=top_n)
@@ -152,7 +165,7 @@ def run_auto_loop(spark: SparkSession, sf_dir: str,
                   print_fn: Callable[[str], None] = print) -> int:
     """Advanced loop: score stats, threshold overrides, /commands."""
     documents = _load(spark, sf_dir, "documents")
-    embeddings = _load(spark, sf_dir, "embeddings")
+    embeddings = _load(spark, sf_dir, "embeddings", ("embedding",))
     dim = _embedding_dim(embeddings, sf_dir)
     log = SessionLog(spark, "auto-1")
     turns = 0
@@ -255,7 +268,9 @@ def run_ingest(spark: SparkSession, sf_dir: str, store_path: str,
     One write job per batch, with no count job: the result's
     ``offered`` (chunks in the batch), ``added``, ``skipped`` (chunks
     already stored) and ``total`` (store rows after the batch) are the
-    counts ``idempotent_append`` observed in that job."""
+    counts ``idempotent_append`` observed in that job. A ``dim`` that
+    differs from the store's vector width (read from its footers) is a
+    ``ValueError`` naming both, raised before any job."""
     from .operators import ingest
     from .operators.chunking import chunk_documents
 

@@ -70,6 +70,7 @@ from pyspark.sql.types import ArrayType, FloatType
 
 from .functions.hashing import md5_long_sql
 from .functions.text import quote_ident, tokens_sql
+from .operators.storage import VECTOR_WIDTH
 
 DEFAULT_DIM = 16
 
@@ -158,16 +159,19 @@ class HashingEmbedder:
         (a NULL text gives a NULL embedding), with the columns of
         ``df.withColumn(out_col, …)``: a column that the session's
         resolver matches to ``out_col`` is replaced in place, else it is
-        appended. One ``selectExpr`` and no Python worker: the column is
-        a JVM expression."""
-        expr = (f"{hash_embed_sql(quote_ident(text_col), self.dim)} AS "
-                f"{quote_ident(out_col)}")
+        appended. One ``select`` and no Python worker: the column is a
+        JVM expression. It carries its width as column metadata
+        (``storage.VECTOR_WIDTH``), which ``ingest.idempotent_append``
+        checks against the store's before it writes."""
+        vec = F.expr(hash_embed_sql(quote_ident(text_col), self.dim)).alias(
+            out_col, metadata={VECTOR_WIDTH: self.dim})
         case_sensitive = df.sparkSession.conf.get(
             "spark.sql.caseSensitive") == "true"
         fold = str if case_sensitive else str.lower
-        cols = [expr if fold(c) == fold(out_col) else quote_ident(c)
-                for c in df.columns]
-        return df.selectExpr(*(cols if expr in cols else ("*", expr)))
+        if fold(out_col) not in map(fold, df.columns):
+            return df.select("*", vec)
+        return df.select(*(vec if fold(c) == fold(out_col)
+                           else F.col(quote_ident(c)) for c in df.columns))
 
 
 class SentenceTransformerEmbedder:

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
 from .observe import observed, with_observation
-from .storage import read_parquet
+from .storage import VECTOR_WIDTH, read_parquet
 
 NA = "N/A"  # the reference's null sentinel (chunk_cisa_kev.py:*'N/A'*)
 
@@ -154,7 +154,7 @@ def bloom_test(incoming: DataFrame, bitmap: DataFrame, key: str,
                     "__bk0", "__w0", "__bk1", "__w1")
 
 
-def read_store_or_none(spark, store_path: str):
+def read_store_or_none(spark, store_path: str, vectors=()):
     """Read a parquet store WE own, or None when it provably doesn't
     exist yet. "Doesn't exist" means a missing path (PATH_NOT_FOUND)
     or a directory with no data files at all — the state a crashed
@@ -171,7 +171,8 @@ def read_store_or_none(spark, store_path: str):
     even under ``spark.sql.files.ignoreCorruptFiles=true``, where
     Spark's own inference would skip the file. With no data file,
     ``read_parquet`` hands the path to ``spark.read.parquet``, whose
-    two errors above are classified here.
+    two errors above are classified here. ``vectors`` is passed on to
+    ``read_parquet``: the named columns carry their measured width.
 
     UNABLE_TO_INFER_SCHEMA alone is NOT proof of emptiness: under
     ``spark.sql.files.ignoreCorruptFiles=true`` (with
@@ -204,7 +205,7 @@ def read_store_or_none(spark, store_path: str):
         return False
 
     try:
-        return read_parquet(spark, store_path)
+        return read_parquet(spark, store_path, vectors)
     except AnalysisException as e:
         s = str(e)
         if "PATH_NOT_FOUND" in s:
@@ -276,9 +277,23 @@ def idempotent_append(incoming: DataFrame, store_path: str, key: str,
     never-committed store starts fresh; a corrupt store or a
     permission error propagates instead of silently re-ingesting the
     whole batch (which would duplicate every row on the next healthy
-    read)."""
+    read).
+
+    Width rule: an ``incoming`` column that carries its vector width
+    (column metadata ``VECTOR_WIDTH``, as ``HashingEmbedder.embed``
+    sets it) must match the width the store's footers give for that
+    column, or a ``ValueError`` naming both is raised before any job;
+    a store whose footers cannot tell its width is not checked."""
     spark = spark or incoming.sparkSession
-    store = read_store_or_none(spark, store_path)
+    widths = {f.name: f.metadata[VECTOR_WIDTH] for f in incoming.schema
+              if VECTOR_WIDTH in f.metadata}
+    store = read_store_or_none(spark, store_path, tuple(widths))
+    for f in store.schema if store is not None and widths else ():
+        stored = f.metadata.get(VECTOR_WIDTH)
+        if stored and widths.get(f.name, stored) != stored:
+            raise ValueError(
+                f"{store_path} holds {f.name} vectors of width {stored}; "
+                f"this batch's are {widths[f.name]} wide")
     incoming, offered_obs = _rows(incoming)
     fresh = incoming
     if store is not None:

@@ -14,13 +14,23 @@ scale the corpus lives as:
   that spreads the hot key over ``n_salts`` reducers.
 
 ``read_parquet`` is the engine's table open: ``spark.read.parquet``
-without the one-task schema-inference job.
+without the one-task schema-inference job. Asked for a vector column,
+it also reads the width of that column's vectors from the same parquet
+footers, the row count and the array leaf's value and null counts of
+the first row group that holds rows, so that a loop start or an ingest
+batch learns the store's width without a job. Where those counts cannot
+tell (a NULL or empty vector or a NULL element in that row group, no
+recorded null count, a ratio that is not whole) or Spark infers the
+schema (a glob, ``mergeSchema``, a summary file), no width is recorded
+and the caller falls back (``cli._embedding_dim`` probes the first row).
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import threading
+from collections.abc import Collection
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -29,6 +39,9 @@ from pyspark.sql.types import StructType
 _PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
 _GLOB_CHARS = frozenset("{}[]*?\\")  # SparkHadoopUtil.isGlobPath
 _SUMMARY_FILES = ("_metadata", "_common_metadata")
+# column metadata key: the width of an array column's vectors, set by
+# read_parquet(..., vectors=...) and by HashingEmbedder.embed
+VECTOR_WIDTH = "vector_width"
 
 
 def _java(spark, name: str):
@@ -38,7 +51,8 @@ def _java(spark, name: str):
     return JavaClass(name, spark.sparkContext._gateway._gateway_client)
 
 
-def read_parquet(spark, path: str) -> DataFrame:
+def read_parquet(spark, path: str,
+                 vectors: Collection[str] = ()) -> DataFrame:
     """``spark.read.parquet(path)`` with its schema read on the driver,
     so opening the table runs no Spark job.
 
@@ -56,6 +70,12 @@ def read_parquet(spark, path: str) -> DataFrame:
     apply as they do there. The result is
     ``spark.read.schema(that).parquet(path)``.
 
+    Each column named in ``vectors`` also gets the width of its vectors
+    as column metadata ``VECTOR_WIDTH``, from the same listing and
+    footers (see ``_vector_width``): 0 when no data file holds a row,
+    and no ``VECTOR_WIDTH`` where the footers cannot tell. A width a
+    writer recorded in the schema is never kept: only a measured one.
+
     A corrupt first footer raises from the footer read, whatever
     ``spark.sql.files.ignoreCorruptFiles`` says. Where no single footer
     is Spark's answer, ``spark.read.parquet(path)`` runs unchanged: a
@@ -66,7 +86,7 @@ def read_parquet(spark, path: str) -> DataFrame:
     jss = spark._jsparkSession
     sql_conf = jss.sessionState().conf()
     if sql_conf.isParquetSchemaMergingEnabled() or _GLOB_CHARS & set(path):
-        return spark.read.parquet(path)
+        return _unmeasured(spark.read.parquet(path), vectors)
     hadoop_conf = jss.sessionState().newHadoopConf()
     roots = _java(spark, "scala.jdk.javaapi.CollectionConverters").asScala(
         _java(spark, "java.util.Collections").singletonList(
@@ -88,19 +108,75 @@ def read_parquet(spark, path: str) -> DataFrame:
     paths = listed.split("\0") if listed else []
     if not paths or any(p.rsplit("/", 1)[-1] in _SUMMARY_FILES
                         for p in paths):
-        return spark.read.parquet(path)
-    first = files[paths.index(min(paths))]
-    footer = _java(spark, _PARQUET + "ParquetFooterReader").readFooter(
-        _java(spark, "org.apache.parquet.hadoop.util.HadoopInputFile")
-        .fromStatus(first, hadoop_conf),
-        _java(spark, "org.apache.parquet.format.converter."
-                     "ParquetMetadataConverter").SKIP_ROW_GROUPS)
-    schema = _java(spark, _PARQUET + "ParquetFileFormat").readSchemaFromFooter(
-        _java(spark, "org.apache.parquet.hadoop.Footer")(first.getPath(),
-                                                         footer),
-        _java(spark, _PARQUET + "ParquetToSparkSchemaConverter")(sql_conf))
-    return spark.read.schema(StructType.fromJson(json.loads(schema.json()))) \
-        .parquet(path)
+        return _unmeasured(spark.read.parquet(path), vectors)
+    converter = _java(spark, "org.apache.parquet.format.converter."
+                             "ParquetMetadataConverter")
+    # row groups are read only when a width is asked for
+    row_groups = converter.NO_FILTER if vectors else converter.SKIP_ROW_GROUPS
+
+    def footer_of(status):
+        return _java(spark, _PARQUET + "ParquetFooterReader").readFooter(
+            _java(spark, "org.apache.parquet.hadoop.util.HadoopInputFile")
+            .fromStatus(status, hadoop_conf), row_groups)
+
+    order = sorted(range(len(paths)), key=paths.__getitem__)
+    first = files[order[0]]
+    footer = footer_of(first)
+    converted = _java(spark, _PARQUET + "ParquetFileFormat") \
+        .readSchemaFromFooter(
+            _java(spark, "org.apache.parquet.hadoop.Footer")(first.getPath(),
+                                                             footer),
+            _java(spark, _PARQUET + "ParquetToSparkSchemaConverter")(sql_conf))
+    schema = json.loads(converted.json())
+    if vectors:
+        # the first row group that holds rows, in Spark's file order;
+        # a later file's footer is read only if no earlier one has rows
+        footers = itertools.chain(
+            [footer], (footer_of(files[i]) for i in order[1:]))
+        block = next((b for f in footers for b in f.getBlocks()
+                      if b.getRowCount() > 0), None)
+        for field in schema["fields"]:
+            if field["name"] in vectors:
+                field["metadata"].pop(VECTOR_WIDTH, None)
+                width = 0 if block is None else _vector_width(block, field)
+                if width is not None:
+                    field["metadata"][VECTOR_WIDTH] = width
+    return spark.read.schema(StructType.fromJson(schema)).parquet(path)
+
+
+def _vector_width(block, field: dict) -> int | None:
+    """The width of the vectors in array column ``field`` (a schema
+    JSON field) of row group ``block``: its leaf's value count divided
+    by the row count. A list leaf counts one value per element and one
+    per NULL or empty vector, and counts the latter two and NULL
+    elements as nulls; so the ratio is the width only where the leaf's
+    null count is recorded and 0, and it must divide exactly. Otherwise,
+    and for a column that is not an array of atomic values, None.
+
+    The footer holds no per-row length, so a row group whose vectors
+    differ in width but average a whole number reads as that number."""
+    t = field["type"]
+    if not (isinstance(t, dict) and t["type"] == "array"
+            and isinstance(t["elementType"], str)):
+        return None
+    leaf = next((c for c in block.getColumns()
+                 if c.getPath().toArray()[0] == field["name"]), None)
+    stats = None if leaf is None else leaf.getStatistics()
+    if stats is None or not stats.isNumNullsSet() or stats.getNumNulls():
+        return None
+    width, rest = divmod(leaf.getValueCount(), block.getRowCount())
+    return width if rest == 0 else None
+
+
+def _unmeasured(df: DataFrame, vectors: Collection[str]) -> DataFrame:
+    """``df`` without the ``VECTOR_WIDTH`` its files' writer recorded on
+    the columns named in ``vectors``: where Spark infers the schema no
+    width is measured."""
+    for f in df.schema.fields if vectors else ():
+        if f.name in vectors and VECTOR_WIDTH in f.metadata:
+            df = df.withMetadata(f.name, {k: v for k, v in f.metadata.items()
+                                          if k != VECTOR_WIDTH})
+    return df
 
 
 def write_partitioned(df: DataFrame, path: str, *partition_cols: str,
@@ -261,8 +337,8 @@ def _isolated_session(spark):
     """A private session that still SEES the caller's runtime SQL
     confs: ``newSession()`` inherits only builder-time configs, so a
     caller who e.g. set ``spark.sql.legacy.parquet.nanosAsLong`` at
-    runtime (streaming.events.read_events_stream does) would lose it —
-    the private session's reads would fail where the caller's succeed.
+    runtime would lose it — the private session's reads would fail
+    where the caller's succeed.
     Copy every explicitly-set conf (``SET`` lists exactly those) before
     applying this module's own overrides on top.
 

@@ -37,8 +37,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return storage_ops.read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
-_QVEC_CACHE: dict[str, list[float]] = {}
-_QTEXT_CACHE: dict[str, str] = {}
 # trajectory_knn's persisted trigram table, tracked with the
 # release-on-NEXT-call discipline (_EXPORT_PERSISTED pattern): the
 # persist exists only so the qid probe, the sizes aggregate and the
@@ -88,22 +86,18 @@ def _scratch_path(spark: SparkSession, sf_dir: str, tag: str) -> str:
 
 
 def query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
-    """The test query vector: embedding of ``vec_id`` (cached per sf)."""
-    key = f"{sf_dir}:{vec_id}"
-    if key not in _QVEC_CACHE:
-        row = (_t(spark, sf_dir, "embeddings")
-               .where(F.col("vec_id") == vec_id).select("embedding").first())
-        _QVEC_CACHE[key] = list(row[0])
-    return _QVEC_CACHE[key]
+    """The test query vector: embedding of ``vec_id``, read afresh on
+    every call."""
+    row = (_t(spark, sf_dir, "embeddings")
+           .where(F.col("vec_id") == vec_id).select("embedding").first())
+    return list(row[0])
 
 
 def query_text(spark: SparkSession, sf_dir: str, doc_id: int = 0) -> str:
-    key = f"{sf_dir}:{doc_id}"
-    if key not in _QTEXT_CACHE:
-        row = (_t(spark, sf_dir, "documents")
-               .where(F.col("doc_id") == doc_id).select("text").first())
-        _QTEXT_CACHE[key] = row[0]
-    return _QTEXT_CACHE[key]
+    """The test query text: ``text`` of ``doc_id``, read afresh on every
+    call."""
+    return (_t(spark, sf_dir, "documents")
+            .where(F.col("doc_id") == doc_id).select("text").first())[0]
 
 
 # DuckDB fragment: strict left-to-right float64 dot product of two

@@ -10,6 +10,7 @@ results are reproducible against any oracle.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -64,6 +65,25 @@ def get_spark(app_name: str = "rag-vector-database-spark",
     return builder.getOrCreate()
 
 
+@contextlib.contextmanager
+def nanos_as_long(spark: SparkSession):
+    """Set ``spark.sql.legacy.parquet.nanosAsLong`` to true for a table
+    open, then put back the caller's value (or its absence). The schema
+    read at the open is what decides that a TIMESTAMP(NANOS) column is a
+    long; later reads of that DataFrame, batch or stream, do not need
+    the value."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def read_events(spark: SparkSession, sf_dir: str):
     """Read events.parquet with `ts` normalized to a microsecond
     session-tz timestamp. The dataset has shipped with two physical
@@ -72,19 +92,10 @@ def read_events(spark: SparkSession, sf_dir: str):
     exactly what DuckDB's reader does — and plain TIMESTAMP(MICROS),
     which reads natively as TIMESTAMP_NTZ. Handle both.
 
-    nanosAsLong is set only while the table is opened: the schema read
-    then is what decides the long, and the caller's value (or its
-    absence) is put back before returning."""
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
+    nanosAsLong is set only while the table is opened
+    (``nanos_as_long``)."""
+    with nanos_as_long(spark):
         e = read_parquet(spark, f"{sf_dir}/events.parquet")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     if dict(e.dtypes)["ts"] == "bigint":
         return e.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return e.withColumn("ts", F.col("ts").cast("timestamp"))

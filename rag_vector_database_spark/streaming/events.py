@@ -27,6 +27,7 @@ from pyspark.sql.types import (LongType, StructField, StructType,
                                TimestampType)
 
 from ..operators.storage import read_parquet
+from ..session import nanos_as_long
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str,
@@ -34,10 +35,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     """File-source stream over the events parquet (one file = one batch
     of history; in production this is a directory receiving new files).
     The stream source needs a user-specified schema; probe the footer
-    batch-side so it matches whichever ts encoding this dataset has."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = read_parquet_stream(spark, sf_dir, "events",
-                              max_files_per_trigger=max_files_per_trigger)
+    batch-side so it matches whichever ts encoding this dataset has.
+    nanosAsLong is set only for that probe (``session.nanos_as_long``):
+    the micro-batches of a TIMESTAMP(NANOS) copy read its ``ts`` as the
+    schema's long without it."""
+    with nanos_as_long(spark):
+        raw = read_parquet_stream(spark, sf_dir, "events",
+                                  max_files_per_trigger=max_files_per_trigger)
     if isinstance(raw.schema["ts"].dataType, LongType):
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))

@@ -115,34 +115,27 @@ def record_collects(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("loop", ["query", "auto"])
-def test_loop_start_runs_one_job(spark, sf_dir, job_count, monkeypatch,
-                                 loop):
-    """Opening ``documents`` and ``embeddings`` runs no job, so the only
-    job before the first prompt is the dimension probe."""
+def test_loop_start_runs_no_job(spark, sf_dir, job_count, loop):
+    """Opening ``documents`` and ``embeddings`` and learning the vector
+    width read footers on the driver: no job runs before the first
+    prompt."""
     sc = spark.sparkContext
     p = f"start-{uuid.uuid4()}"
-    probe = cli._embedding_dim
-
-    def probe_in_own_group(embeddings, sf_dir):
-        sc.setJobGroup(f"{p}-probe", "dimension probe")
-        try:
-            return probe(embeddings, sf_dir)
-        finally:
-            sc.setJobGroup(f"{p}-open", "loop start")
+    prompts = []
 
     def first_prompt(prompt):
+        prompts.append(prompt)
         sc.setJobGroup(f"{p}-turns", prompt)
         return "exit"
 
-    monkeypatch.setattr(cli, "_embedding_dim", probe_in_own_group)
     run = cli.run_query_loop if loop == "query" else cli.run_auto_loop
     sc.setJobGroup(f"{p}-open", "loop start")
     try:
         run(spark, sf_dir, input_fn=first_prompt, print_fn=lambda s: None)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    assert prompts == ["You: "]
     assert job_count(f"{p}-open") == 0
-    assert job_count(f"{p}-probe") == 1
 
 
 def test_chat_and_follow_up_turns_run_no_job(spark, sf_dir, job_count):
@@ -188,7 +181,7 @@ def test_auto_loop_answer_runs_no_job(spark, sf_dir, job_count,
             print_fn=out.append)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    # one collect per turn (the first is the embedding-dim probe)
+    # one collect per turn
     turn_collects = [g for outer, g, _ in collect_groups
                      if outer in (f"{p}-0", f"{p}-2")]
     assert turns == 2 and len(turn_collects) == 2
@@ -255,18 +248,25 @@ def test_rerank_stats_when_a_zero_limit_prunes_the_scan(spark, sf_dir,
 
 @pytest.mark.parametrize("loop", ["query", "auto"])
 def test_loops_on_empty_store_raise_value_error(spark, sf_dir, tmp_path,
-                                                loop):
+                                                job_count, loop):
     """A store whose embeddings table has no rows is a clear error
-    naming that table, not a TypeError from the dimension probe."""
+    naming that table, not a TypeError from the dimension probe, and
+    the footers tell it without a job."""
     store = str(tmp_path / "store")
     spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .write.parquet(f"{store}/documents.parquet")
     spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(0) \
         .write.parquet(f"{store}/embeddings.parquet")
     run = cli.run_query_loop if loop == "query" else cli.run_auto_loop
-    with pytest.raises(ValueError, match="embeddings.parquet"):
-        run(spark, store, input_fn=scripted(["a question"]),
-            print_fn=lambda s: None)
+    group = f"empty-{uuid.uuid4()}"
+    spark.sparkContext.setJobGroup(group, "loop start")
+    try:
+        with pytest.raises(ValueError, match="embeddings.parquet"):
+            run(spark, store, input_fn=scripted(["a question"]),
+                print_fn=lambda s: None)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert job_count(group) == 0
 
 
 def test_query_loop_exit_keywords_all_work(spark, sf_dir):
@@ -361,6 +361,36 @@ def test_ingest_batch_job_counts(spark, sf_dir, tmp_path, job_count):
     assert job_count(f"{p}-0") <= 1
     assert job_count(f"{p}-1") <= 2
     assert job_count(f"{p}-2") <= 2
+
+
+def _files(path):
+    """Every file under ``path`` (hidden ones too) and its bytes."""
+    return {p: p.read_bytes() for p in sorted(path.rglob("*"))
+            if p.is_file()}
+
+
+def test_ingest_dimension_mismatch_is_value_error(spark, sf_dir, tmp_path,
+                                                  job_count):
+    """A batch whose vector width differs from the store's is refused
+    before any job, naming both widths; the store's files stay as they
+    were, and a batch of the store's width still appends."""
+    store = tmp_path / "store"
+    first = cli.run_ingest(spark, sf_dir, str(store), dim=8,
+                           print_fn=lambda s: None)
+    before = _files(store)
+    group = f"mismatch-{uuid.uuid4()}"
+    spark.sparkContext.setJobGroup(group, "run_ingest")
+    try:
+        with pytest.raises(ValueError, match=r"width 8; .* 16 wide"):
+            cli.run_ingest(spark, sf_dir, str(store), dim=16,
+                           print_fn=lambda s: None)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert job_count(group) == 0
+    assert _files(store) == before
+    again = cli.run_ingest(spark, sf_dir, str(store), dim=8,
+                           print_fn=lambda s: None)
+    assert again["added"] == 0 and again["total"] == first["total"]
 
 
 def test_main_argparse_ingest(tmp_path, monkeypatch, capsys):

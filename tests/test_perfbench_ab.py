@@ -15,9 +15,9 @@ ab = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(ab)
 
 
-def _run(cpu, setup=0.5, correct=True, failed=0.0):
-    return {"op_cpu_ms": cpu, "setup_s": setup, "correct": correct,
-            "failed_ops_ratio": failed}
+def _run(cpu, setup=0.5, correct=True, failed=0.0, setup_wall=0.4):
+    return {"op_cpu_ms": cpu, "setup_s": setup, "setup_wall_s": setup_wall,
+            "correct": correct, "failed_ops_ratio": failed}
 
 
 def _pairs(parent, change, parent_setup=None, change_setup=None,
@@ -96,3 +96,28 @@ def test_claim_is_judged_per_metric():
 
 def test_parse_seeds():
     assert ab.parse_seeds("41-44,51") == [41, 42, 43, 44, 51]
+
+
+def test_report_lines_show_setup_wall_median_outside_the_claim():
+    """Each side's median ``setup_wall_s`` is printed, and a wall-time
+    gap alone claims nothing."""
+    runs = _pairs(PARENT, PARENT)
+    for i, r in enumerate(runs):
+        r["parent"]["setup_wall_s"] = 0.60 + i / 100
+        r["change"]["setup_wall_s"] = 0.30
+    s = ab.summarize(runs)
+    assert s["setup_wall_s"] == {"parent": 0.645, "change": 0.30}
+    assert not s["setup_s"]["claim_holds"]
+    assert ab.report(s) == [
+        "parent op_cpu_ms median 745.000 quartiles 717.500/772.500",
+        "parent setup_s   median 0.500 quartiles 0.500/0.500",
+        "change op_cpu_ms median 745.000 quartiles 717.500/772.500",
+        "change setup_s   median 0.500 quartiles 0.500/0.500",
+        "setup_wall_s median parent 0.645 change 0.300 "
+        "(reported, not claimed)",
+        "failed_ops_ratio mean parent 0 change 0; all correct True",
+        "op_cpu_ms: parent IQR 55.000; median gap 0.000 (-0.0 %); "
+        "change wins 0/10; claim holds False",
+        "setup_s: parent IQR 0.000; median gap 0.000 (-0.0 %); "
+        "change wins 0/10; claim holds False",
+    ]

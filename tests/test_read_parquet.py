@@ -14,6 +14,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from rag_vector_database_spark import cli
 from rag_vector_database_spark.operators.ingest import read_store_or_none
@@ -219,6 +220,45 @@ def test_read_events_leaves_nanos_as_long(spark, sf_dir, tmp_path, conf,
         f"SELECT id, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f')"
         f" FROM '{path}' ORDER BY id").fetchall()
     assert got == want
+
+
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+@pytest.mark.parametrize("before", [None, "false"])
+def test_read_events_stream_leaves_nanos_as_long(spark, sf_dir, tmp_path,
+                                                 conf, before, vectorized):
+    """``read_events_stream`` sets nanosAsLong only for its schema probe:
+    the caller's value reads the same afterwards, and the micro-batches
+    of a TIMESTAMP(NANOS) ``events`` copy, run without the value, give
+    ``read_events``' batch counts and ``ts`` range."""
+    conf(NANOS_AS_LONG, "false")
+    if before is None:
+        spark.conf.unset(NANOS_AS_LONG)
+    conf("spark.sql.parquet.enableVectorizedReader", vectorized)
+    nanos = tmp_path / "nanos"
+    nanos.mkdir()
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    pq.write_table(t.set_column(i, "ts", t.column(i).cast(
+        pa.timestamp("ns"))), str(nanos / "events.parquet"))
+
+    def summary(df):
+        return df.groupBy("event_type").agg(
+            F.count(F.lit(1)), F.min("ts"), F.max("ts")) \
+            .orderBy("event_type").collect()
+
+    stream = se.read_events_stream(spark, str(nanos))
+    assert spark.conf.get(NANOS_AS_LONG, None) == before
+    name = f"nanos_{uuid.uuid4().hex}"
+    q = stream.writeStream.format("memory").queryName(name) \
+        .trigger(availableNow=True).start()
+    try:
+        q.awaitTermination()
+        got = summary(spark.table(name))
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(name)
+    assert got == summary(read_events(spark, str(nanos)))
+    assert sum(r[1] for r in got) == t.num_rows
 
 
 # ---------------------------------------------------------------------------

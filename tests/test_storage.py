@@ -586,3 +586,24 @@ def test_t_sees_row_appended_under_sf_dir(spark, tmp_path):
     spark.range(3, 5).write.mode("append").parquet(path)
     fresh = registry._t(spark, sf, "documents")
     assert sorted(r[0] for r in fresh.collect()) == [0, 1, 2, 3, 4]
+
+
+def test_query_vector_sees_rewritten_embeddings(spark, tmp_path):
+    """``query_vector`` and ``query_text`` read their row afresh: a table
+    overwritten under an sf_dir gives the new value on the next call."""
+    from rag_vector_database_spark.plans import registry
+
+    sf = str(tmp_path / "sf")
+    emb, docs = f"{sf}/embeddings.parquet", f"{sf}/documents.parquet"
+    schema = "vec_id long, embedding array<double>"
+    spark.createDataFrame([(0, [0.0, 1.0])], schema).write.parquet(emb)
+    spark.createDataFrame([(0, "old")], "doc_id long, text string") \
+        .write.parquet(docs)
+    assert registry.query_vector(spark, sf) == [0.0, 1.0]
+    assert registry.query_text(spark, sf) == "old"
+    spark.createDataFrame([(0, [7.0, 7.0])], schema) \
+        .write.mode("overwrite").parquet(emb)
+    spark.createDataFrame([(0, "new")], "doc_id long, text string") \
+        .write.mode("overwrite").parquet(docs)
+    assert registry.query_vector(spark, sf) == [7.0, 7.0]
+    assert registry.query_text(spark, sf) == "new"

@@ -10,7 +10,10 @@ imports nothing from ``perfbench/``.
 
 It prints one line per seed (``op_cpu_ms``, ``setup_s``, ``correct``
 and ``failed_ops_ratio`` for both sides), then each side's median and
-quartiles and each side's mean failed-op ratio. For each gated metric
+quartiles, each side's median ``setup_wall_s`` (the set-up wall time
+from the run's detail line; reported only, so that wall-time effects of
+a set-up change show, and never part of a claim) and each side's mean
+failed-op ratio. For each gated metric
 (``op_cpu_ms`` and ``setup_s``, both lower-is-better) it prints the
 parent's interquartile range, the change's win count (pairs where the
 change's value is lower) and whether a gain claim on that metric holds:
@@ -59,6 +62,7 @@ def run_once(checkout: str, workload: str, seed: int) -> dict:
     m = result["metrics"]
     return {"op_cpu_ms": m["op_cpu_ms"]["value"],
             "setup_s": m["setup_s"]["value"],
+            "setup_wall_s": info["detail"]["setup_wall_s"],
             "correct": result["correct"],
             "failed_ops_ratio": info["detail"]["failed_ops_ratio"]}
 
@@ -79,7 +83,9 @@ def summarize(runs: list[dict]) -> dict:
     all_correct = all(r[s]["correct"] for r in runs for s in SIDES)
     clean = all_correct and failed["change"] <= failed["parent"]
     out = {"pairs": len(runs), "failed_ops_ratio": failed,
-           "all_correct": all_correct}
+           "all_correct": all_correct,
+           "setup_wall_s": {side: statistics.median(
+               r[side]["setup_wall_s"] for r in runs) for side in SIDES}}
     for metric in METRICS:
         for side in SIDES:
             q1, med, q3 = quartiles([r[side][metric] for r in runs])
@@ -95,6 +101,30 @@ def summarize(runs: list[dict]) -> dict:
                        "claim_holds": (clean and wins * 10 >= 9 * len(runs)
                                        and gap > iqr)}
     return out
+
+
+def report(s: dict) -> list[str]:
+    """The summary lines ``main`` prints for ``summarize``'s result."""
+    lines = []
+    for side in SIDES:
+        for metric in METRICS:
+            q = s[f"{side}.{metric}"]
+            lines.append(f"{side:6} {metric:9} median {q['median']:.3f} "
+                         f"quartiles {q['q1']:.3f}/{q['q3']:.3f}")
+    w = s["setup_wall_s"]
+    lines.append(f"setup_wall_s median parent {w['parent']:.3f} "
+                 f"change {w['change']:.3f} (reported, not claimed)")
+    f = s["failed_ops_ratio"]
+    lines.append(f"failed_ops_ratio mean parent {f['parent']:g} "
+                 f"change {f['change']:g}; all correct {s['all_correct']}")
+    for metric in METRICS:
+        m = s[metric]
+        lines.append(
+            f"{metric}: parent IQR {m['parent_iqr']:.3f}; median gap "
+            f"{m['median_gap']:.3f} ({m['median_change_pct']:+.1f} %); "
+            f"change wins {m['change_wins']}/{s['pairs']}; claim holds "
+            f"{m['claim_holds']}")
+    return lines
 
 
 def main(argv=None) -> int:
@@ -121,21 +151,7 @@ def main(argv=None) -> int:
               f"{p['failed_ops_ratio']:g}/{c['failed_ops_ratio']:g}",
               flush=True)
 
-    s = summarize(runs)
-    for side in SIDES:
-        for metric in METRICS:
-            q = s[f"{side}.{metric}"]
-            print(f"{side:6} {metric:9} median {q['median']:.3f} "
-                  f"quartiles {q['q1']:.3f}/{q['q3']:.3f}")
-    f = s["failed_ops_ratio"]
-    print(f"failed_ops_ratio mean parent {f['parent']:g} "
-          f"change {f['change']:g}; all correct {s['all_correct']}")
-    for metric in METRICS:
-        m = s[metric]
-        print(f"{metric}: parent IQR {m['parent_iqr']:.3f}; median gap "
-              f"{m['median_gap']:.3f} ({m['median_change_pct']:+.1f} %); "
-              f"change wins {m['change_wins']}/{s['pairs']}; claim holds "
-              f"{m['claim_holds']}")
+    print("\n".join(report(summarize(runs))))
     return 0
 
 
